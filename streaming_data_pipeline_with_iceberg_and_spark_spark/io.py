@@ -7,7 +7,11 @@ tables are flagged for broadcast by the callers that join them.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -125,9 +129,6 @@ def parquet_row_count(name: str, sf_dir: str | None = None) -> int:
         return (1 << 63) - 1
 
 
-_EMB_DIM_CACHE: dict = {}
-
-
 def embedding_dim(sf_dir: str | None = None, name: str = "embeddings") -> int | None:
     """Vector width of a table's ``embedding`` column, from the FIRST row
     of the parquet file (footer + one data page, no Spark job), memoized
@@ -140,35 +141,31 @@ def embedding_dim(sf_dir: str | None = None, name: str = "embeddings") -> int | 
     costs speed, not correctness.  ``None`` (missing/empty/unreadable
     table) keeps callers on the plain HOF forms."""
     sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    key = (sf_dir, name, data_fingerprint(sf_dir, name))
-    if key in _EMB_DIM_CACHE:
-        return _EMB_DIM_CACHE[key]
-    dim = None
-    try:
-        import pyarrow.parquet as pq
 
-        pf = pq.ParquetFile(os.path.join(sf_dir, f"{name}.parquet"))
-        for batch in pf.iter_batches(batch_size=64, columns=["embedding"]):
-            col = batch.column(0)
-            for i in range(len(col)):
-                if col[i].is_valid:
-                    dim = len(col[i])
-                    break
-            if dim is not None:
-                break
-    except Exception:
-        dim = None
-    _EMB_DIM_CACHE[key] = dim
-    return dim
+    def build():
+        try:
+            import pyarrow.parquet as pq
+
+            pf = pq.ParquetFile(os.path.join(sf_dir, f"{name}.parquet"))
+            for batch in pf.iter_batches(batch_size=64, columns=["embedding"]):
+                for v in batch.column(0):
+                    if v.is_valid:
+                        return len(v)
+        except Exception:
+            pass
+        return None
+
+    # session-free (a footer read), so it lives until the table changes
+    return memo(None, sf_dir, name, "embedding_dim", build)
 
 
 def data_fingerprint(sf_dir: str, name: str) -> str:
     """Cheap content-version fingerprint of a table's parquet path: every
-    file's (relative name, size, mtime_ns), sorted. Session-lifetime memos
-    (the CC labels and pinned-IVF caches) fold this into their key so a
-    rewrite of the inputs WITHIN one session builds fresh state instead of
-    silently serving stale results — the r11 verdict's memo-staleness
-    class. Metadata-only: no file contents are read."""
+    file's (relative name, size, mtime_ns), sorted. Every :func:`memo`
+    entry folds this into its key so a rewrite of the inputs WITHIN one
+    session builds fresh state instead of silently serving stale results
+    — the r11 verdict's memo-staleness class. Metadata-only: no file
+    contents are read."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     entries = []
     if os.path.isfile(path):
@@ -186,6 +183,83 @@ def data_fingerprint(sf_dir: str, name: str) -> str:
                     (os.path.relpath(fp, path), st.st_size, st.st_mtime_ns)
                 )
     return repr(sorted(entries))
+
+
+# The engine's one session memo: (applicationId, sf_dir, table, table
+# fingerprint, face) -> (session, value, release).  See :func:`memo`.
+_MEMO: dict = {}
+# (face, "hit" | "build") -> count, for tests and tracing
+MEMO_STATS: Counter = Counter()
+
+
+def _stopped(spark: SparkSession) -> bool:
+    try:
+        jsc = spark.sparkContext._jsc
+        return jsc is None or jsc.sc().isStopped()
+    except Exception:
+        return True  # unreachable JVM ≡ stopped
+
+
+def _drop(key: tuple) -> None:
+    _spark, value, release = _MEMO.pop(key)
+    if release is not None:
+        release(value)
+
+
+def memo(spark, sf_dir: str, table: str, face: str, build, release=None):
+    """Session memo of state derived from one input table: return the
+    value ``build()`` made for this (session, sf_dir, table version, face),
+    building it on the first call.
+
+    A miss first drops, calling each dropped entry's ``release(value)``
+    (scratch-dir faces pass an rmtree): every entry whose session has
+    stopped, and every entry of this session on an older or newer version
+    of the same table — so neither dead sessions nor a same-session
+    rewrite of the inputs pin state.  ``spark=None`` memoizes a
+    session-free value.  Checkpointed frames need no ``release``: a
+    dropped entry's RDD blocks are freed by GC + the ContextCleaner."""
+    app = None if spark is None else spark.sparkContext.applicationId
+    key = (app, sf_dir, table, data_fingerprint(sf_dir, table), face)
+    if key in _MEMO:
+        MEMO_STATS[face, "hit"] += 1
+        return _MEMO[key][1]
+    for k, (owner, _v, _r) in list(_MEMO.items()):
+        displaced = k[:3] == key[:3] and k[3] != key[3]
+        if displaced or (owner is not None and k[0] != app and _stopped(owner)):
+            _drop(k)
+    value = build()
+    _MEMO[key] = (spark, value, release)
+    MEMO_STATS[face, "build"] += 1
+    return value
+
+
+def scratch_memo(spark, sf_dir: str, table: str, face: str, build):
+    """:func:`memo` of a value written to its own temp dir: ``build(dir)``
+    runs in a fresh directory, which release (or a failed build) removes.
+    Values read back from the dir die with it — collect before clearing."""
+
+    def run():
+        scratch = tempfile.mkdtemp(prefix=f"spark_graft_{face}_")
+        try:
+            return build(scratch), scratch
+        except BaseException:
+            shutil.rmtree(scratch, ignore_errors=True)
+            raise
+
+    return memo(
+        spark, sf_dir, table, face, run,
+        release=lambda v: shutil.rmtree(v[1], ignore_errors=True),
+    )[0]
+
+
+def clear_all() -> None:
+    """Drop every memo entry, calling its ``release`` — the test hook and
+    the escape hatch for in-place input mutation without an mtime bump."""
+    for k in list(_MEMO):
+        _drop(k)
+
+
+atexit.register(clear_all)
 
 
 def compact_checkpoint(

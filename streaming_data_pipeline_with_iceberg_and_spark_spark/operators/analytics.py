@@ -21,6 +21,7 @@ from ..io import (
     compact_checkpoint,
     load,
     load_spread,
+    memo,
     parquet_row_count,
 )
 
@@ -841,63 +842,31 @@ def _basket_pairs(baskets: DataFrame) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir, events-fingerprint) -> (pair counts, item
-# counts, n_users) — the taste-graph bundle EIGHT registry faces derive
-# per call (co-occurrence, Jaccard, PageRank, PPR, LPA communities,
-# triangles, association rules, CF recs).  All three frames are
-# item-space-bounded (never user- or event-cardinality), so the memo
-# holds metadata-sized localCheckpoints; the events fingerprint rebuilds
-# on a same-session rewrite (the r11 memo-staleness rule).  Round 13:
-# the bench showed each face re-running the basket build + pair explode
-# (~1-2 s each) per call; within a session the graph is one derivation.
-_TASTE_GRAPH_CACHE: dict = {}
-
-
-def clear_taste_graph_cache() -> None:
-    _TASTE_GRAPH_CACHE.clear()
-
-
 def _taste_graph(spark: SparkSession, sf_dir: str):
-    from ..io import data_fingerprint
+    """(pair counts, item counts, n_users), memoized: eight registry faces
+    (co-occurrence, Jaccard, PageRank, PPR, LPA, triangles, rules, CF
+    recs) share one basket build; all three frames are item-space-bounded."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "events"),
-    )
-    hit = _TASTE_GRAPH_CACHE.get(key)
-    if hit is not None:
+    def build():
+        baskets = _user_baskets(spark, sf_dir)
         try:
-            if hit[0].sparkSession.sparkContext._jsc is not None:
-                return hit
-        except Exception:
-            pass
-        _TASTE_GRAPH_CACHE.pop(key, None)
-    for k in list(_TASTE_GRAPH_CACHE):
-        if k[:2] == key[:2] and k != key:
-            _TASTE_GRAPH_CACHE.pop(k, None)
-    from ..io import compact_checkpoint
+            # compact_checkpoint: the iterative faces (PageRank/PPR/SimRank/
+            # LPA) otherwise schedule 32-64 near-empty tasks per iteration
+            # and plan SortMergeJoins over the scattered blocks
+            co = compact_checkpoint(_basket_pairs(baskets))
+            cnt = compact_checkpoint(
+                baskets.select(F.explode("items").alias("item"))
+                .groupBy("item")
+                .agg(F.count("*").alias("cnt"))
+            )
+            n_users = baskets.agg(F.count("*").alias("n_users")).localCheckpoint(
+                eager=True
+            )
+        finally:
+            baskets.unpersist()
+        return co, cnt, n_users
 
-    baskets = _user_baskets(spark, sf_dir)
-    try:
-        # r15 optimization round: compact the materialized bundle to a
-        # row-count-derived partition count (io.compact_checkpoint) — the
-        # iterative faces (PageRank/PPR/SimRank/LPA) otherwise schedule
-        # 32-64 near-empty tasks per iteration over the inherited shuffle
-        # partitioning and plan SortMergeJoins over the scattered blocks.
-        co = compact_checkpoint(_basket_pairs(baskets))
-        cnt = compact_checkpoint(
-            baskets.select(F.explode("items").alias("item"))
-            .groupBy("item")
-            .agg(F.count("*").alias("cnt"))
-        )
-        n_users = baskets.agg(F.count("*").alias("n_users")).localCheckpoint(
-            eager=True
-        )
-    finally:
-        baskets.unpersist()
-    _TASTE_GRAPH_CACHE[key] = (co, cnt, n_users)
-    return co, cnt, n_users
+    return memo(spark, sf_dir, "events", "taste_graph", build)
 
 
 def cooccurrence_edges_from_index(
@@ -5574,45 +5543,18 @@ ORDER BY event_type
 _MRA_ITERS = 8
 
 
-_ATTR_JOURNEY_CACHE: dict = {}
-
-
-def clear_attr_journey_cache() -> None:
-    _ATTR_JOURNEY_CACHE.clear()
-
-
 def _attr_journey_base_p(spark: SparkSession, sf_dir: str):
     """(base_p transition-probability frame, n_converting_users) — the
     journey model every Markov-graph attribution face shares: touch
     events up to each user's FIRST conversion, absorbed at 'conv'/'null'
     with 'start' prepended, over the family's shared touch/conversion
-    definitions and the deterministic (ts, event_id) order. MEMOIZED
-    per corpus version (the ``_BPE_STATE_CACHE`` discipline) with the
-    ≤|states|² probability frame checkpointed: the removal and Shapley
-    faces pay the corpus pass once per session."""
-    from ..io import data_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "events"),
+    definitions and the deterministic (ts, event_id) order. Memoized so
+    the removal and Shapley faces pay the corpus pass once; the frame is
+    ≤|states|² rows."""
+    return memo(
+        spark, sf_dir, "events", "attr_journey",
+        lambda: _attr_journey_build(spark, sf_dir),
     )
-    hit = _ATTR_JOURNEY_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_ATTR_JOURNEY_CACHE):
-        try:
-            stale = (
-                _ATTR_JOURNEY_CACHE[k][0].sparkSession.sparkContext._jsc
-                is None
-            )
-        except Exception:
-            stale = True
-        if stale or k[:2] == key[:2]:
-            _ATTR_JOURNEY_CACHE.pop(k, None)
-    result = _attr_journey_build(spark, sf_dir)
-    _ATTR_JOURNEY_CACHE[key] = result
-    return result
 
 
 def _attr_journey_build(spark: SparkSession, sf_dir: str):

@@ -27,10 +27,10 @@ from ..functions.text import md5_bucket16, md5_bucket32, normalize, shingles, to
 from ..functions.vector import dot, norm
 from ..io import (
     checkpoint_release,
-    data_fingerprint,
     embedding_dim,
     load,
     load_spread,
+    memo,
 )
 
 # MinHash parameters: 32 permutations in 8 bands of 4 rows; fixed seeds.
@@ -1095,67 +1095,6 @@ def _connected_components(verts: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-# Per-(session, documents-version, sf_dir) memo of the connected-component
-# LABELS frame — the _pinned_ivf_index discipline. Four registry faces
-# (clusters, apply, representative pick, size histogram) and the bench all
-# re-derive the SAME clustering; without the memo each call re-runs the
-# full shingle/inverted-index/Jaccard/CC pipeline (~3 s each at sf0.1).
-# The memoized frame is the eagerly-localCheckpointed labels table —
-# BOUNDED by the corpus' near-dup fraction, not corpus-sized, so pinning
-# it does not reintroduce the r10 cache-leak class. Stale sessions are
-# evicted like the IVF memo; the documents fingerprint in the key makes a
-# same-session rewrite of the corpus (the snapshot layer can) build fresh
-# labels instead of serving stale clusters (the r11 memo-staleness
-# finding — global mutable state earned a scar in f4a0c63). The
-# localCheckpointed frames are NOT recoverable after executor loss; in a
-# cluster deployment this memo would live behind a reliable checkpoint or
-# a materialized table.
-_CC_LABELS_CACHE: dict = {}
-_CC_EDGES_CACHE: dict = {}
-# Same discipline for the signature-agreement clustering (the r14
-# dedup_clusters_lsh face): labels bounded by duplicate mass, keyed on
-# corpus fingerprint, evicted with the rest.
-_LSH_LABELS_CACHE: dict = {}
-
-
-def clear_cc_cache() -> None:
-    """Drop the memoized edge/labels frames (test hook; also the escape
-    hatch for callers that mutate documents in place without an mtime
-    bump — network filesystems can have coarse mtime granularity)."""
-    _CC_LABELS_CACHE.clear()
-    _CC_EDGES_CACHE.clear()
-    _LSH_LABELS_CACHE.clear()
-
-
-def _evict_stale_cc_cache() -> None:
-    for cache in (_CC_LABELS_CACHE, _CC_EDGES_CACHE, _LSH_LABELS_CACHE):
-        for k, old in list(cache.items()):
-            try:
-                stale = old.sparkSession.sparkContext._jsc is None
-            except Exception:
-                stale = True
-            if stale:
-                cache.pop(k, None)
-
-
-def _cc_key(spark: SparkSession, sf_dir: str) -> tuple:
-    return (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
-    )
-
-
-def _cc_evict_other_versions(key: tuple) -> None:
-    """A new documents version displaces ALL older entries for the same
-    (session, sf_dir) — the stale frames would otherwise pin dead RDD
-    blocks until session end."""
-    for cache in (_CC_LABELS_CACHE, _CC_EDGES_CACHE, _LSH_LABELS_CACHE):
-        for k in list(cache):
-            if k[:2] == key[:2] and k != key:
-                cache.pop(k, None)
-
-
 def _cc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The thresholded exact-Jaccard edge list (doc_a, doc_b at jac ≥ 0.5)
     — memoized and eagerly checkpointed once per (session, documents
@@ -1163,36 +1102,37 @@ def _cc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream of the clustering (sym ×2, verts ×2) re-evaluates its input
     plan — the full shingle/inverted-index/Jaccard pipeline — and the LSH
     recall eval's truth set IS this edge list."""
-    key = _cc_key(spark, sf_dir)
-    edges = _CC_EDGES_CACHE.get(key)
-    if edges is None:
-        _evict_stale_cc_cache()
-        _cc_evict_other_versions(key)
-        jac = _jaccard_pairs(spark, sf_dir)
-        edges = (
-            jac.filter(F.col("jac") >= F.lit(_CC_THRESHOLD))
+
+    def build():
+        return (
+            _jaccard_pairs(spark, sf_dir)
+            .filter(F.col("jac") >= F.lit(_CC_THRESHOLD))
             .select("doc_a", "doc_b")
             .localCheckpoint(eager=True)
         )
-        _CC_EDGES_CACHE[key] = edges
-    return edges
+
+    return memo(spark, sf_dir, "documents", "cc_edges", build)
 
 
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = _cc_key(spark, sf_dir)
-    labels = _CC_LABELS_CACHE.get(key)
-    if labels is None:
-        _evict_stale_cc_cache()
-        _cc_evict_other_versions(key)
+    """CC labels, memoized: four registry faces share one ~3 s clustering;
+    the frame is bounded by the corpus' near-dup fraction."""
+
+    def build():
         edges = _cc_edges(spark, sf_dir)
-        verts = (
-            edges.select(F.col("doc_a").alias("doc_id"))
-            .union(edges.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
+        return _connected_components(_edge_verts(edges), edges).localCheckpoint(
+            eager=True
         )
-        labels = _connected_components(verts, edges).localCheckpoint(eager=True)
-        _CC_LABELS_CACHE[key] = labels
-    return labels
+
+    return memo(spark, sf_dir, "documents", "cc_labels", build)
+
+
+def _edge_verts(edges: DataFrame) -> DataFrame:
+    return (
+        edges.select(F.col("doc_a").alias("doc_id"))
+        .union(edges.select(F.col("doc_b").alias("doc_id")))
+        .distinct()
+    )
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1669,22 +1609,16 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, corpus version) like ``_cc_labels`` — the iterated CC is
     one derivation per corpus version, and warm calls pay only the
     corpus join."""
-    key = _cc_key(spark, sf_dir)
-    labels = _LSH_LABELS_CACHE.get(key)
-    if labels is None:
-        _evict_stale_cc_cache()
-        _cc_evict_other_versions(key)
-        docs = load_spread(spark, "documents", sf_dir, key="doc_id")
-        edges = lsh_agreement_edges(docs)
-        verts = (
-            edges.select(F.col("doc_a").alias("doc_id"))
-            .union(edges.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
+
+    def build():
+        edges = lsh_agreement_edges(
+            load_spread(spark, "documents", sf_dir, key="doc_id")
         )
-        labels = _connected_components(verts, edges).localCheckpoint(
+        return _connected_components(_edge_verts(edges), edges).localCheckpoint(
             eager=True
         )
-        _LSH_LABELS_CACHE[key] = labels
+
+    labels = memo(spark, sf_dir, "documents", "lsh_labels", build)
     cluster_id = F.coalesce("cluster_id", F.col("doc_id"))
     return load(spark, "documents", sf_dir).join(
         labels, "doc_id", "left"

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, memo
 
 # (table, column) audit spec for the profile — orders is the audited fact.
 _PROFILE_COLS = (
@@ -560,57 +560,25 @@ def _er_matched_pairs(names: DataFrame) -> DataFrame:
     )
 
 
-# Per-(session, customer-version, sf_dir) memo of the record-linkage CC
-# labels — the dedup-family _CC_LABEL_CACHE discipline brought to the ER
-# grain (round 13: the bench showed every warm entity_resolution_groups
-# call re-running the ~6 star-alternation rounds, ~10 s each; within one
-# session the clustering over a static master is one derivation).  The
-# memoized frame is the eagerly-localCheckpointed labels table; the
-# customer fingerprint in the key rebuilds on a same-session rewrite.
-_ER_CC_CACHE: dict = {}
-
-
-def clear_er_cc_cache() -> None:
-    _ER_CC_CACHE.clear()
-
-
 def _er_cc_labels(
     spark: SparkSession, sf_dir: str, names: DataFrame
 ) -> DataFrame:
-    from ..io import data_fingerprint
-    from .dedup import _connected_components
+    """Record-linkage CC labels, memoized: every warm
+    entity_resolution_groups call re-ran ~6 star-alternation rounds; the
+    frame is bounded by the customer master's name pairs."""
+    from .dedup import _connected_components, _edge_verts
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "customer"),
-    )
-    hit = _ER_CC_CACHE.get(key)
-    if hit is not None:
-        try:
-            if hit.sparkSession.sparkContext._jsc is not None:
-                return hit
-        except Exception:
-            pass
-        _ER_CC_CACHE.pop(key, None)
-    for k in list(_ER_CC_CACHE):
-        if k[:2] == key[:2] and k != key:
-            _ER_CC_CACHE.pop(k, None)
-    edges = _er_matched_pairs(names).select(
-        F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b")
-    )
-    verts = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select("doc_b"))
-        .distinct()
-    )
-    labels = (
-        _connected_components(verts, edges)
-        .select(F.col("doc_id").alias("rep_key"), "cluster_id")
-        .localCheckpoint(eager=True)
-    )
-    _ER_CC_CACHE[key] = labels
-    return labels
+    def build():
+        edges = _er_matched_pairs(names).select(
+            F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b")
+        )
+        return (
+            _connected_components(_edge_verts(edges), edges)
+            .select(F.col("doc_id").alias("rep_key"), "cluster_id")
+            .localCheckpoint(eager=True)
+        )
+
+    return memo(spark, sf_dir, "customer", "er_cc", build)
 
 
 def entity_resolution_groups(spark: SparkSession, sf_dir: str) -> DataFrame:

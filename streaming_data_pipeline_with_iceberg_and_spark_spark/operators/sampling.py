@@ -951,30 +951,6 @@ def shard_manifest(keyed: DataFrame) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir, documents-fingerprint, seed) -> (manifest
-# SnapshotTable, scratch dir).  The pinned-IVF scratch discipline: one
-# write per corpus version per session; displaced entries (same app +
-# sf_dir, stale corpus fingerprint) have their scratch dirs reclaimed
-# EAGERLY — like _BM25_INDEX_CACHE — so repeated same-session corpus
-# rewrites don't accumulate spark_graft_shards_* dirs until exit.
-_SHARD_CACHE: dict = {}
-
-
-def clear_shard_cache() -> None:
-    """Drop the memoized shard tables AND their scratch parquet.
-
-    Invalidation contract: any DataFrame previously returned by
-    ``write_training_shards`` is backed by the deleted scratch files —
-    lazily consuming one after this call fails on missing parquet.
-    Collect what you need before clearing (tests do), or let the
-    ``atexit`` hook do the deletion at session end."""
-    import shutil
-
-    for _k, (_tbl, scratch) in list(_SHARD_CACHE.items()):
-        shutil.rmtree(scratch, ignore_errors=True)
-    _SHARD_CACHE.clear()
-
-
 def write_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic corpus shard writer (NEW round 13) — the
     reproducible-training-order face every 100-TB pipeline needs before
@@ -998,28 +974,10 @@ def write_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts within partitions only, and the manifest is a second bounded
     shuffle over shard keys.  Scale-adaptive shard count
     ceil(n/{rows}).""".format(rows=_SHARD_ROWS)
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..io import data_fingerprint, load_spread
+    from ..io import load_spread, scratch_memo
     from ..sources.snapshots import MultiTableTransaction, SnapshotTable
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
-        _SHARD_SEED,
-    )
-    cached = _SHARD_CACHE.get(key)
-    manifest_table = cached[0] if cached is not None else None
-    if manifest_table is None:
-        for k in list(_SHARD_CACHE):
-            if k[:2] == key[:2] and k != key:
-                _tbl, stale_scratch = _SHARD_CACHE.pop(k)
-                shutil.rmtree(stale_scratch, ignore_errors=True)
-        scratch = tempfile.mkdtemp(prefix="spark_graft_shards_")
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    def build(scratch):
         docs = load_spread(spark, "documents", sf_dir)
         n_docs = docs.count()
         ns = max(1, -(-n_docs // _SHARD_ROWS))
@@ -1037,7 +995,11 @@ def write_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         txn.stage_append(manifest_table, shard_manifest(keyed))
         txn.commit()
-        _SHARD_CACHE[key] = (manifest_table, scratch)
+        return manifest_table
+
+    # one committed write per corpus version; an entry is one corpus-sized
+    # scratch dir
+    manifest_table = scratch_memo(spark, sf_dir, "documents", "shards", build)
     return (
         manifest_table.read()
         .select("shard", "n_rows", "n_tokens", "content_hash")
@@ -1268,24 +1230,6 @@ def mix_selection_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir, documents-fingerprint) -> (manifest table,
-# scratch dir); the _SHARD_CACHE discipline incl. eager displacement
-# rmtree.
-_MIX_CACHE: dict = {}
-
-
-def clear_mix_cache() -> None:
-    """Drop the memoized mix manifests AND their scratch parquet — same
-    invalidation contract as :func:`clear_shard_cache`: DataFrames
-    previously returned by ``assemble_training_mix`` die with the
-    scratch files; collect before clearing."""
-    import shutil
-
-    for _k, (_tbl, scratch) in list(_MIX_CACHE.items()):
-        shutil.rmtree(scratch, ignore_errors=True)
-    _MIX_CACHE.clear()
-
-
 def assemble_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END training-set assembly capstone (NEW round 14) — the
     one query that IS the curation pipeline's last mile, chaining the
@@ -1310,29 +1254,12 @@ def assemble_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay ~_PACK_BUCKET_ROWS rows at any corpus size); the manifest is a
     second bounded shuffle on bucket keys; the txn commit is
     metadata-only."""
-    import atexit
-    import shutil
-    import tempfile
-
-    from ..io import data_fingerprint, load_spread, parquet_row_count
+    from ..io import load_spread, parquet_row_count, scratch_memo
     from ..sources.snapshots import MultiTableTransaction, SnapshotTable
     from .textops import _PACK_BUCKET_ROWS as _PBR
     from .textops import chunk_rows, place_chunks
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
-    )
-    cached = _MIX_CACHE.get(key)
-    manifest_table = cached[0] if cached is not None else None
-    if manifest_table is None:
-        for k in list(_MIX_CACHE):
-            if k[:2] == key[:2] and k != key:
-                _tbl, stale_scratch = _MIX_CACHE.pop(k)
-                shutil.rmtree(stale_scratch, ignore_errors=True)
-        scratch = tempfile.mkdtemp(prefix="spark_graft_mix_")
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    def build(scratch):
         docs = load_spread(spark, "documents", sf_dir)
         sel = mix_selected_docs(
             docs, est_rows=parquet_row_count("documents", sf_dir)
@@ -1380,7 +1307,11 @@ def assemble_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         txn.stage_append(manifest_table, manifest)
         txn.commit()
-        _MIX_CACHE[key] = (manifest_table, scratch)
+        return manifest_table
+
+    # one committed write per corpus version; an entry is one scratch dir
+    # of packed rows
+    manifest_table = scratch_memo(spark, sf_dir, "documents", "mix", build)
     return (
         manifest_table.read()
         .select(

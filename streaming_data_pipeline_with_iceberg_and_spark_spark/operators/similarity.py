@@ -26,10 +26,11 @@ from ..functions.vector import as_double, dot, l2_distance, norm
 from ..io import (
     checkpoint_release,
     compact_checkpoint,
-    data_fingerprint,
     embedding_dim,
     load,
     load_spread,
+    memo,
+    scratch_memo,
     small_df,
 )
 
@@ -451,55 +452,10 @@ def _ivf_n_cells(n: int) -> int:
     return max(4, min(_IVF_MAX_CELLS, int(n**0.5)))
 
 
-# r16 optimization round (guide §2.2 — the r15 verdict's ANN order): the
-# ad-hoc ANN faces (ann_ivf / ann_pq / ann_ivfpq) used to re-fit their
-# quantizer AND re-encode the whole corpus on EVERY call, so each call paid
-# 3-4 corpus passes of 32-wide tiny tasks — the family ran 1.3-1.9× FASTER
-# on 8 cores than 32 at sf0.1 (pure task/Python-worker overhead, the r15
-# scaling block's finding).  The learned index state — centroid matrix,
-# codebooks, the assigned/encoded corpus — is exactly what a serving
-# deployment materializes once and queries many times (ann_ivf's docstring
-# has promised "the assigned corpus would be written out partitioned by
-# cell and reused across query batches" since round 2), so it now lives in
-# a session memo under the established discipline (_PINNED_IVF_CACHE /
-# _BM25_INDEX_CACHE / _TR_COGRAPH_CACHE): keyed by (applicationId, sf_dir,
-# face, corpus fingerprint); a stopped session or a same-session corpus
-# rewrite evicts; the bounded encoded frames are compact_checkpoint'ed so
-# the per-query scan schedules row-count-derived tasks instead of 32 empty
-# ones.  Evicted entries drop their references and the checkpointed RDD
-# blocks are freed by GC + ContextCleaner (the documented reliance, same
-# as the cograph memo — entries are ≤ one encoded-corpus frame per face).
-_ANN_SERVE_CACHE: dict = {}
-
-
-def clear_ann_serve_cache() -> None:
-    """Drop all memoized ANN serving state — test hook and the escape
-    hatch for in-place corpus mutation without an mtime bump."""
-    _ANN_SERVE_CACHE.clear()
-
-
-def _ann_serve_memo(spark: SparkSession, sf_dir: str, face: str, build):
-    """Session memo for one ANN face's serving state (see block comment)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        face,
-        data_fingerprint(sf_dir, "embeddings"),
-    )
-    hit = _ANN_SERVE_CACHE.get(key)
-    if hit is not None:
-        return hit[1]
-    for k in list(_ANN_SERVE_CACHE):
-        try:
-            stale = _ANN_SERVE_CACHE[k][0].sparkContext._jsc is None
-        except Exception:
-            stale = True
-        # displaced corpus version for the same (session, sf_dir, face)
-        if stale or k[:3] == key[:3]:
-            _ANN_SERVE_CACHE.pop(k, None)
-    state = build()
-    _ANN_SERVE_CACHE[key] = (spark, state)
-    return state
+# The ad-hoc ANN faces (ann_ivf / ann_pq / ann_ivfpq) memoize their learned
+# index state — quantizer plus the assigned/encoded corpus — per corpus
+# version (io.memo): each call used to re-fit and re-encode, 3-4 corpus
+# passes; an entry is ≤ one compact_checkpoint'ed encoded corpus per face.
 
 
 def _kmeans_centroids(
@@ -568,8 +524,6 @@ def _ivf_serve_state(spark: SparkSession, sf_dir: str):
     so per-query candidate scans schedule row-count-derived tasks.  This
     is the in-session realization of the docstring's "written out
     partitioned by cell and reused across query batches"."""
-    from ..io import compact_checkpoint
-
     def build():
         emb = load_spread(spark, "embeddings", sf_dir).persist()
         try:
@@ -590,7 +544,7 @@ def _ivf_serve_state(spark: SparkSession, sf_dir: str):
         finally:
             emb.unpersist()
 
-    return _ann_serve_memo(spark, sf_dir, "ivf", build)
+    return memo(spark, sf_dir, "embeddings", "ann_ivf", build)
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,9 +556,9 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the quantizer (≤ _IVF_MAX_CELLS vectors, constant-bounded)
     is the only driver-side state; the assigned corpus is built once per
-    (session, corpus version) and served from the ``_ANN_SERVE_CACHE``
-    memo (r16 — a query batch used to re-fit and re-assign everything, 4
-    corpus passes per call); the candidate join is keyed on cell (never
+    (session, corpus version) and served from the session memo (r16 — a
+    query batch used to re-fit and re-assign everything, 4 corpus passes
+    per call); the candidate join is keyed on cell (never
     all-pairs) with the tiny probe side broadcast."""
     cent_mat, corpus = _ivf_serve_state(spark, sf_dir)
     probes = (
@@ -681,8 +635,6 @@ def _pq_serve_state(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    from ..io import compact_checkpoint
-
     def build():
         emb = load_spread(spark, "embeddings", sf_dir).persist()
         try:
@@ -712,7 +664,7 @@ def _pq_serve_state(spark: SparkSession, sf_dir: str):
         finally:
             emb.unpersist()
 
-    return _ann_serve_memo(spark, sf_dir, "pq", build)
+    return memo(spark, sf_dir, "embeddings", "ann_pq", build)
 
 
 def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -724,8 +676,8 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact L2 baseline asserted in tests/test_extensions.py.
 
     Scale shape: the corpus scan reads 8 BYTES per vector instead of 256
-    (the encode pass runs once per session/corpus version — the
-    ``_ANN_SERVE_CACHE`` memo, r16); scoring is pure table lookup — no
+    (the encode pass runs once per session/corpus version — the session
+    memo, r16); scoring is pure table lookup — no
     floats from the corpus touch the query path, and the per-partition
     partial top-k bounds what leaves each executor to k·|Q| rows."""
     import numpy as np
@@ -809,8 +761,8 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver-side state stays constant-bounded: ≤ _IVF_MAX_CELLS centroids +
     _PQ_M·_PQ_K codebook rows + the ≤ _Q_CAP query batch; ADC tables are
     |Q|·nprobe·M·K floats, closure-shipped. The quantizer fit and the
-    encode pass run once per (session, corpus version) — the
-    ``_ANN_SERVE_CACHE`` memo (r16); scoring is one Arrow/numpy pass with
+    encode pass run once per (session, corpus version) — the session
+    memo (r16); scoring is one Arrow/numpy pass with
     per-partition partial top-k."""
     import numpy as np
     import pandas as pd
@@ -870,8 +822,6 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
                         }
                     )
 
-            from ..io import compact_checkpoint
-
             encoded = emb.select("vec_id", "embedding").mapInPandas(
                 encode, schema="vec_id long, cell int, codes array<int>"
             )
@@ -879,8 +829,8 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             emb.unpersist()
 
-    cent_mat, books, sub, encoded = _ann_serve_memo(
-        spark, sf_dir, "ivfpq", build
+    cent_mat, books, sub, encoded = memo(
+        spark, sf_dir, "embeddings", "ann_ivfpq", build
     )
     if books is None:
         return spark.createDataFrame([], out_schema)
@@ -1321,79 +1271,22 @@ def ann_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.query(queries, k=5, exact_probes=True)
 
 
-# One pinned-seed scratch index per (Spark application, sf_dir): the build is
-# deterministic (md5-Forgy seeds over a static corpus), so within one driver /
-# selfcheck session the registry faces that need the index (ann_ivf_index and
-# ann_recall_eval, which composes it with the exact side) share a single
-# build instead of each paying the ~4 s scratch construction — the r8 verdict
-# flagged the duplicate build as the dominant cost of ann_recall_eval's
-# driver row. Keyed by applicationId so a fresh session (tests spin their
-# own) never reuses an index whose SparkSession is gone, and by the
-# embeddings table's file fingerprint so a same-session rewrite of the
-# corpus builds a fresh index instead of probing stale cells (the r11
-# memo-staleness finding).
-_PINNED_IVF_CACHE: dict = {}
-
-
-def clear_pinned_ivf_cache() -> None:
-    """Drop (and delete the scratch dirs of) all pinned indexes — test
-    hook and the escape hatch for in-place mutation without an mtime
-    bump."""
-    import shutil
-
-    for _k, idx in list(_PINNED_IVF_CACHE.items()):
-        shutil.rmtree(idx.root, ignore_errors=True)
-    _PINNED_IVF_CACHE.clear()
-
-
-def _evict_stale_ivf_cache() -> None:
-    """Drop cache entries whose SparkSession has been stopped and remove
-    their scratch directories — without this the dict (and /tmp) grows one
-    corpus-sized index per terminated session in a long-lived process
-    (test suites spin many sessions; the r9 advice flagged the leak)."""
-    import shutil
-
-    for key, old in list(_PINNED_IVF_CACHE.items()):
-        try:
-            sc = old.spark.sparkContext
-            stopped = getattr(sc, "_jsc", None) is None or sc._jsc.sc().isStopped()
-        except Exception:
-            stopped = True  # unreachable JVM ≡ stopped
-        if stopped:
-            _PINNED_IVF_CACHE.pop(key, None)
-            shutil.rmtree(old.root, ignore_errors=True)
-
-
 def _pinned_ivf_index(spark: SparkSession, sf_dir: str) -> "IvfIndex":
-    import atexit
-    import shutil
-    import tempfile
+    """The pinned-seed scratch index, memoized: the registry faces that
+    need it (ann_ivf_index, ann_recall_eval) share one ~4 s build; an
+    entry is one corpus-sized scratch dir."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "embeddings"),
-    )
-    idx = _PINNED_IVF_CACHE.get(key)
-    if idx is None:
-        _evict_stale_ivf_cache()
-        # a new embeddings version displaces older entries for the same
-        # (session, sf_dir) — their scratch dirs would otherwise linger
-        # until session end
-        for k in list(_PINNED_IVF_CACHE):
-            if k[:2] == key[:2] and k != key:
-                shutil.rmtree(_PINNED_IVF_CACHE.pop(k).root, ignore_errors=True)
-        scratch = tempfile.mkdtemp(prefix="spark_graft_ivfidx_")
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    def build(scratch):
         idx = IvfIndex(spark, scratch)
-        # min_rows: the pinned assignment is a vectorized Arrow kernel now
+        # min_rows: the pinned assignment is a vectorized Arrow kernel
         # (fold_assign_cells) — fat batches, not 32 tiny Python dispatches
         idx.build(
             load_spread(spark, "embeddings", sf_dir, min_rows=512),
             pinned_seeds=True,
         )
-        _PINNED_IVF_CACHE[key] = idx
-    return idx
+        return idx
+
+    return scratch_memo(spark, sf_dir, "embeddings", "ivfidx", build)
 
 
 # SQL twin of the ENTIRE pinned-seed index lifecycle. Stage names mirror the

@@ -14,10 +14,11 @@ from pyspark.sql import functions as F
 from ..functions.text import STOPWORDS, md5_bucket16, mg_fold, tokens
 from ..io import (
     compact_checkpoint,
-    data_fingerprint,
     load,
     load_spread,
+    memo,
     parquet_row_count,
+    scratch_memo,
     small_df,
 )
 
@@ -169,40 +170,15 @@ def _bpe_merge_fold(seq, lhs: str, rhs: str):
     )
 
 
-# (applicationId, sf_dir, documents-fingerprint) -> (merges, final words
-# frame). The CC-memo discipline: the train face and the apply face share
-# one run; the fingerprint key rebuilds on a same-session corpus rewrite;
-# the memoized frame is vocabulary-bounded.
-_BPE_STATE_CACHE: dict = {}
-
-
-def clear_bpe_cache() -> None:
-    _BPE_STATE_CACHE.clear()
-
-
 def _bpe_state(spark: SparkSession, sf_dir: str):
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
+    """(merges, final words frame), memoized: the train and apply faces
+    share one run; the frame is vocabulary-bounded."""
+    return memo(
+        spark, sf_dir, "documents", "bpe",
+        lambda: bpe_train_from_words(
+            bpe_word_table(load(spark, "documents", sf_dir))
+        ),
     )
-    hit = _BPE_STATE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_BPE_STATE_CACHE):
-        try:
-            stale = (
-                _BPE_STATE_CACHE[k][1].sparkSession.sparkContext._jsc is None
-            )
-        except Exception:
-            stale = True
-        if stale or k[:2] == key[:2]:
-            _BPE_STATE_CACHE.pop(k, None)
-    result = bpe_train_from_words(
-        bpe_word_table(load(spark, "documents", sf_dir))
-    )
-    _BPE_STATE_CACHE[key] = result
-    return result
 
 
 def bpe_train_from_words(words: DataFrame):
@@ -561,40 +537,15 @@ def _uni_greedy_pieces(word, vocab_multi: list[str]):
     )
 
 
-# (applicationId, sf_dir, documents-fingerprint) -> (vocab_rows,
-# word_pieces frame).  The _BPE_STATE_CACHE discipline: train and apply
-# faces share one run; fingerprint key rebuilds on same-session rewrite;
-# the memoized frame is word-type-bounded.
-_UNI_STATE_CACHE: dict = {}
-
-
-def clear_unigram_cache() -> None:
-    _UNI_STATE_CACHE.clear()
-
-
 def _uni_state(spark: SparkSession, sf_dir: str):
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
+    """(vocab rows, word_pieces frame), memoized: the train and apply
+    faces share one run; the frame is word-type-bounded."""
+    return memo(
+        spark, sf_dir, "documents", "unigram",
+        lambda: uni_train_from_words(
+            _uni_word_table(load(spark, "documents", sf_dir))
+        ),
     )
-    hit = _UNI_STATE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_UNI_STATE_CACHE):
-        try:
-            stale = (
-                _UNI_STATE_CACHE[k][1].sparkSession.sparkContext._jsc is None
-            )
-        except Exception:
-            stale = True
-        if stale or k[:2] == key[:2]:
-            _UNI_STATE_CACHE.pop(k, None)
-    result = uni_train_from_words(
-        _uni_word_table(load(spark, "documents", sf_dir))
-    )
-    _UNI_STATE_CACHE[key] = result
-    return result
 
 
 def uni_train_from_words(words_capped: DataFrame):
@@ -1174,58 +1125,18 @@ _TR_TOPK = 20
 _TR_WORD_RX = "[a-z]{3,}"
 
 
-# (applicationId, sf_dir, documents-fingerprint) -> the capped word
-# cograph, materialized + compacted.  r15 optimization round: the graph is
-# vocab-capped (≤ _TR_VOCAB² weighted edges — metadata at any corpus size)
-# but its BUILD is two corpus passes (vocab count + pair explode), and the
-# PPMI face consumes it through several differing subtrees that AQE's
-# runtime exchange reuse cannot collapse — so each call re-ran the corpus
-# pipeline 2-3×.  The _taste_graph memo discipline: one build per
-# (session, corpus content), compact_checkpoint so iterative consumers
-# schedule single-block tasks, fingerprint key rebuilds on a same-session
-# corpus rewrite.  Eviction drops the dict reference only; the popped
-# frame's localCheckpoint RDD blocks are freed by GC + ContextCleaner
-# rather than synchronously (r15 ADVICE, documented reliance): each entry
-# is ≤ _TR_VOCAB² edge rows, so a same-session rewrite pins at most one
-# superseded cograph until the next GC cycle — bounded, not a leak.
-_TR_COGRAPH_CACHE: dict = {}
-
-
-def clear_tr_cograph_cache() -> None:
-    _TR_COGRAPH_CACHE.clear()
-
-
 def _tr_word_cograph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capped word-adjacency co-occurrence graph (w1, w2, w) — THE
     word-graph edge definition, shared by TextRank (centrality) and the
     PPMI distributional-similarity face so the two cannot disagree
     about an edge: ≥3-letter non-stopword tokens, top-``_TR_VOCAB`` by
-    (freq, word), adjacent in-document pairs with multiplicity."""
-    from ..io import compact_checkpoint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
+    (freq, word), adjacent in-document pairs with multiplicity.
+    Memoized and compacted: the build is two corpus passes that PPMI's
+    differing subtrees re-ran 2-3×; the graph is ≤ _TR_VOCAB² edges."""
+    return memo(
+        spark, sf_dir, "documents", "tr_cograph",
+        lambda: compact_checkpoint(_tr_word_cograph_build(spark, sf_dir)),
     )
-    hit = _TR_COGRAPH_CACHE.get(key)
-    if hit is not None:
-        try:
-            if hit.sparkSession.sparkContext._jsc is not None:
-                return hit
-        except Exception:
-            pass
-        _TR_COGRAPH_CACHE.pop(key, None)
-    for k in list(_TR_COGRAPH_CACHE):
-        try:
-            stale = _TR_COGRAPH_CACHE[k].sparkSession.sparkContext._jsc is None
-        except Exception:
-            stale = True
-        if stale or k[:2] == key[:2]:
-            _TR_COGRAPH_CACHE.pop(k, None)
-    co = compact_checkpoint(_tr_word_cograph_build(spark, sf_dir))
-    _TR_COGRAPH_CACHE[key] = co
-    return co
 
 
 def _tr_word_cograph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3458,37 +3369,14 @@ def bm25_rank_from_index(
     )
 
 
-# One materialized inverted index per (Spark application, sf_dir, corpus
-# fingerprint) — the batch-session twin of the stream-maintained
-# start_incremental_bm25_ingest tables.  The round-12 verdict's #1 bench
-# finding was bm25_prf_search re-deriving the postings chain twice (6.2 s);
-# every BM25-composing registry face in one session can instead share ONE
-# tokenize+aggregate pass whose output is a term-clustered parquet postings
-# table (so a query-term isin filter prunes row groups — the inverted-index
-# property, now backed by storage layout) plus the 1-row stats partial.
-# Keyed by applicationId + data fingerprint exactly like _PINNED_IVF_CACHE
-# (the r11 memo-staleness rule: a same-session corpus rewrite builds fresh).
-_BM25_INDEX_CACHE: dict = {}
-
-
-def clear_bm25_index_cache() -> None:
-    """Drop (and delete the scratch dirs of) all materialized BM25 indexes
-    — test hook, mirroring clear_pinned_ivf_cache."""
-    import shutil
-
-    for _k, scratch in list(_BM25_INDEX_CACHE.items()):
-        shutil.rmtree(scratch, ignore_errors=True)
-    _BM25_INDEX_CACHE.clear()
-
-
 def materialized_bm25_index(
-    spark: SparkSession,
-    sf_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(postings, stats_partials) for the documents corpus, materialized
-    once per session to scratch parquet and memoized.
+    once per session to scratch parquet and memoized: every BM25-composing
+    registry face shares ONE tokenize+aggregate pass (bm25_prf_search
+    re-derived the postings chain twice); an entry is one corpus-sized
+    scratch dir.
 
     The postings write hash-partitions on term and sorts within partitions
     by (term, doc_id): every row group then covers a narrow term range, so
@@ -3500,40 +3388,26 @@ def materialized_bm25_index(
     bm25_rank_from_index over either returns exactly what bm25_rank
     computes on the fly (parity tests in tests/test_streaming.py and
     tests/test_textops.py)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
-    )
-    scratch = _BM25_INDEX_CACHE.get(key)
-    if scratch is None:
-        # a new corpus version displaces older entries for the same
-        # (session, sf_dir) — their scratch dirs would otherwise linger
-        for k in list(_BM25_INDEX_CACHE):
-            if k[:2] == key[:2] and k != key:
-                shutil.rmtree(_BM25_INDEX_CACHE.pop(k), ignore_errors=True)
-        scratch = tempfile.mkdtemp(prefix="spark_graft_bm25idx_")
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    def build(scratch):
         docs = load_spread(spark, "documents", sf_dir).persist()
         try:
             (
-                bm25_doc_postings(docs, text_col, id_col)
+                bm25_doc_postings(docs)
                 .repartition(F.col("term"))
-                .sortWithinPartitions("term", id_col)
+                .sortWithinPartitions("term", "doc_id")
                 .write.mode("overwrite")
                 .parquet(os.path.join(scratch, "postings"))
             )
-            bm25_stats_partial(docs, text_col).write.mode("overwrite").parquet(
+            bm25_stats_partial(docs).write.mode("overwrite").parquet(
                 os.path.join(scratch, "stats")
             )
         finally:
             docs.unpersist()
-        _BM25_INDEX_CACHE[key] = scratch
+        return scratch
+
+    scratch = scratch_memo(spark, sf_dir, "documents", "bm25idx", build)
     return (
         spark.read.parquet(os.path.join(scratch, "postings")),
         spark.read.parquet(os.path.join(scratch, "stats")),
@@ -5314,38 +5188,14 @@ def _plsa_seed(prefix, z) -> F.Column:
     ).cast("double")
 
 
-_PLSA_FIT_CACHE: dict = {}
-
-
-def clear_plsa_cache() -> None:
-    _PLSA_FIT_CACHE.clear()
-
-
 def _plsa_fit(spark: SparkSession, sf_dir: str):
-    """Memoized EM run → (pwz, pzd) checkpointed factor frames — the
-    ``_BPE_STATE_CACHE`` discipline, so the topic report and the
-    per-source mixture face share ONE training run per corpus version
-    (and cannot disagree about a factor)."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        data_fingerprint(sf_dir, "documents"),
+    """Memoized EM run → (pwz, pzd) checkpointed factor frames, so the
+    topic report and the per-source mixture face share ONE training run
+    (and cannot disagree about a factor); the frames are _PLSA_V·_PLSA_K
+    and |docs|·_PLSA_K rows."""
+    return memo(
+        spark, sf_dir, "documents", "plsa", lambda: _plsa_train(spark, sf_dir)
     )
-    hit = _PLSA_FIT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    for k in list(_PLSA_FIT_CACHE):
-        try:
-            stale = (
-                _PLSA_FIT_CACHE[k][1].sparkSession.sparkContext._jsc is None
-            )
-        except Exception:
-            stale = True
-        if stale or k[:2] == key[:2]:
-            _PLSA_FIT_CACHE.pop(k, None)
-    result = _plsa_train(spark, sf_dir)
-    _PLSA_FIT_CACHE[key] = result
-    return result
 
 
 def text_topic_plsa(spark: SparkSession, sf_dir: str) -> DataFrame:

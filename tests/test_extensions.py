@@ -343,11 +343,12 @@ def test_connected_components_fast_convergence_on_corpus(spark, sf_dir):
     propagation must settle in ≤3 rounds (incl. the confirming round). A
     regression here means the edge set got pathological — switch to
     large-star/small-star before raising the cap."""
+    from streaming_data_pipeline_with_iceberg_and_spark_spark import io
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators import dedup
 
     # the CC memo would otherwise serve a cached labels frame and leave
     # last_rounds holding some OTHER test's adversarial-graph round count
-    dedup.clear_cc_cache()
+    io.clear_all()
     dedup.dedup_clusters(spark, sf_dir).collect()
     assert dedup._connected_components.last_rounds <= 3
 
@@ -905,7 +906,8 @@ def test_assemble_training_mix_conservation_and_budgets(spark, sf_dir):
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.textops import chunk_rows
 
     docs = load(spark, "documents", sf_dir)
-    manifest = assemble_training_mix(spark, sf_dir).collect()
+    mix = assemble_training_mix(spark, sf_dir)
+    manifest = mix.collect()
     sel = mix_selected_docs(docs)
 
     # token/chunk conservation vs an independent recount
@@ -982,10 +984,10 @@ def test_assemble_training_mix_conservation_and_budgets(spark, sf_dir):
 
     # one-transaction integrity: manifest recomputed from the committed
     # rows table equals the committed manifest
-    (tbl, _scratch) = next(
-        v for k, v in sampling._MIX_CACHE.items() if k[1] == sf_dir
-    )
-    rows_root = str(tbl.root).replace("/manifest", "/rows")
+    from urllib.parse import urlparse
+
+    manifest_file = urlparse(mix.inputFiles()[0]).path
+    rows_root = manifest_file.split("/manifest/")[0] + "/rows"
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import SnapshotTable
 
     rows = SnapshotTable(spark, rows_root).read()
@@ -3718,11 +3720,18 @@ def test_taste_graph_ops_release_caches(spark, sf_dir):
 
 
 def test_cc_memo_rebuilds_after_documents_rewrite(spark, tmp_path):
-    """The CC labels memo keys on a file fingerprint of documents, so a
+    """The session memos key on a file fingerprint of documents, so a
     SAME-SESSION rewrite of the corpus under the same path (the snapshot
-    layer can do this) must produce fresh clusters, not the memoized
-    stale ones (r11 verdict low #2)."""
+    layer can do this) must produce fresh clusters and a fresh BM25 index,
+    not the memoized stale ones (r11 verdict low #2) — and the rewrite
+    must release the old index's scratch dir."""
+    import os
+    from urllib.parse import urlparse
+
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators import dedup
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.textops import (
+        materialized_bm25_index,
+    )
 
     sf = str(tmp_path)
 
@@ -3734,6 +3743,11 @@ def test_cc_memo_rebuilds_after_documents_rewrite(spark, tmp_path):
             rows, "doc_id long, text string, lang string, source string, n_chars long"
         ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
 
+    def index_terms():
+        postings, _stats = materialized_bm25_index(spark, sf)
+        scratch = urlparse(postings.inputFiles()[0]).path.split("/postings/")[0]
+        return {r["term"] for r in postings.select("term").collect()}, scratch
+
     base = "the quick brown fox jumps over the lazy dog and runs far away today"
     # v1: docs 0 and 1 are exact near-dups -> one 2-member cluster
     write_docs([base, base + " extra", "completely different text about spark engines and parquet files"])
@@ -3742,6 +3756,8 @@ def test_cc_memo_rebuilds_after_documents_rewrite(spark, tmp_path):
         for r in dedup.dedup_clusters(spark, sf).collect()
     }
     assert v1[0] == v1[1]
+    terms1, scratch1 = index_terms()
+    assert "extra" in terms1 and os.path.isdir(scratch1)
     # v2 rewrite: all three docs pairwise-distinct -> all singletons
     write_docs([base, "an entirely new second document with no shared shingles whatsoever here",
                 "completely different text about spark engines and parquet files"])
@@ -3751,6 +3767,10 @@ def test_cc_memo_rebuilds_after_documents_rewrite(spark, tmp_path):
     }
     assert v2[0] != v2[1], "memo served stale clusters after rewrite"
     assert len(set(v2.values())) == 3
+    terms2, scratch2 = index_terms()
+    assert "whatsoever" in terms2 and "extra" not in terms2, "stale postings"
+    assert scratch2 != scratch1
+    assert not os.path.exists(scratch1), "v1 index scratch dir leaked"
 
 
 def test_bpe_merge_fold_is_exact_greedy(spark):
