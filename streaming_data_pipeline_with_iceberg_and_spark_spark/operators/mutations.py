@@ -4,11 +4,11 @@ copy-on-write semantics (SURVEY.md §2.1 S7).
 The reference's Iceberg table declares copy-on-write delete/update/merge
 modes (/root/reference/spark-data-pipeline/spark_job.py:50-52) without ever
 issuing a row-level op. These queries exercise the declared capability
-end-to-end through ``Warehouse.merge`` / ``update_where`` / ``delete_where``:
-each materializes a table into a scratch warehouse, applies the mutation, and
-returns the resulting table so the DuckDB oracle can verify the *semantics*
-(upsert = source ∪ anti-joined target; update = CASE projection; delete =
-negated filter).
+end-to-end through ``SnapshotTable.merge`` / ``update_where`` /
+``delete_where``: each commits a table to a scratch snapshot table, applies
+the mutation, and returns the resulting table so the DuckDB oracle can verify
+the *semantics* (upsert = source ∪ anti-joined target; update = CASE
+projection; delete = negated filter).
 
 Determinism notes: the update expressions avoid ROUND (banker's-vs-half-up
 divergence between engines) — additive/constant mutations only.
@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..sources.snapshots import SnapshotTable
-from ..sources.tables import Warehouse
 
 _ORDERS_COLS = [
     "o_orderkey",
@@ -35,19 +34,13 @@ _ORDERS_COLS = [
 ]
 
 
-def _scratch(spark: SparkSession) -> Warehouse:
-    wh = Warehouse(spark, tempfile.mkdtemp(prefix="spark_graft_cow_"), namespace="mut")
-    wh.create_namespace()
-    return wh
-
-
 def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upsert into orders: urgent orders get a surcharge (matched → update),
     every 1000th orderkey is re-inserted under a shifted key as a new 'N'
     order (not matched → insert). Returns the merged table."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    wh = _scratch(spark)
-    wh.write(orders, "orders_cow", mode="overwrite")
+    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_cow_"))
+    t.append(orders)
     updates = orders.filter(F.col("o_orderpriority") == "1-URGENT").withColumn(
         "o_totalprice", F.col("o_totalprice") + F.lit(10.0)
     )
@@ -56,9 +49,10 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_orderkey", F.col("o_orderkey") + F.lit(100000000))
         .withColumn("o_orderstatus", F.lit("N"))
     )
-    wh.merge(updates.unionByName(inserts).select(*_ORDERS_COLS), "orders_cow",
-             ["o_orderkey"])
-    return wh.read("orders_cow").select(*_ORDERS_COLS)
+    src = updates.unionByName(inserts).select(*_ORDERS_COLS)
+    if not src.isEmpty():  # merge refuses an empty source
+        t.merge(src, "o_orderkey")
+    return t.read().select(*_ORDERS_COLS)
 
 
 MERGE_UPSERT_SQL = """
@@ -84,15 +78,13 @@ def delete_update_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE finished ('F') orders, then UPDATE high-priority survivors with
     a handling fee — two sequential CoW mutations; returns the final table."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    wh = _scratch(spark)
-    wh.write(orders, "orders_cow", mode="overwrite")
-    wh.delete_where("orders_cow", "o_orderstatus = 'F'")
-    wh.update_where(
-        "orders_cow",
-        "o_orderpriority = '2-HIGH'",
-        {"o_totalprice": "o_totalprice + 5.0"},
+    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_cow_"))
+    t.append(orders)
+    t.delete_where("o_orderstatus", "F", "F")
+    t.update_where(
+        "o_orderpriority", "2-HIGH", "2-HIGH", {"o_totalprice": "o_totalprice + 5.0"}
     )
-    return wh.read("orders_cow").select(*_ORDERS_COLS)
+    return t.read().select(*_ORDERS_COLS)
 
 
 DELETE_UPDATE_SQL = """

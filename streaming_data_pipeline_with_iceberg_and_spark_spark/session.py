@@ -10,15 +10,14 @@ cluster-ready configuration surface:
   cluster this is overridden by AQE coalescing + initial partition num.
 - UTC session timezone so event-time semantics are deployment-independent.
 - Arrow enabled for the Pandas-UDF slow path.
-- Iceberg catalog configured ONLY if the runtime jar is actually on the
-  classpath (this container ships none); otherwise the engine's table layer
-  (``sources.tables``) falls back to a parquet warehouse with the same
-  append/overwrite semantics.
+
+No Iceberg catalog is configured: the engine's table layer is
+``sources.snapshots.SnapshotTable``, which re-expresses Iceberg's snapshot
+commits on plain parquet.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import SparkSession
@@ -26,28 +25,10 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def iceberg_runtime_available() -> bool:
-    """True if an iceberg-spark-runtime jar is on the Spark classpath."""
-    spark_home = os.environ.get("SPARK_HOME")
-    candidates = []
-    if spark_home:
-        candidates += glob.glob(os.path.join(spark_home, "jars", "iceberg-spark-runtime*.jar"))
-    try:  # pyspark pip layout
-        import pyspark
-
-        candidates += glob.glob(
-            os.path.join(os.path.dirname(pyspark.__file__), "jars", "iceberg-spark-runtime*.jar")
-        )
-    except ImportError:  # pragma: no cover
-        pass
-    return bool(candidates)
-
-
 def get_spark(
     app_name: str = "spark-engine",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    warehouse: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
@@ -95,17 +76,6 @@ def get_spark(
         # files reads ts as long + converts to µs. No effect on micros files.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    if iceberg_runtime_available():
-        wh = warehouse or os.path.join(os.getcwd(), ".warehouse")
-        b = (
-            b.config(
-                "spark.sql.extensions",
-                "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
-            )
-            .config("spark.sql.catalog.local", "org.apache.iceberg.spark.SparkCatalog")
-            .config("spark.sql.catalog.local.type", "hadoop")
-            .config("spark.sql.catalog.local.warehouse", wh)
-        )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

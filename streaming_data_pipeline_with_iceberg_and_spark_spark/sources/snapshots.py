@@ -3,11 +3,10 @@
 The reference's defining storage choice is Iceberg
 (/root/reference/spark-data-pipeline/spark_job.py:47-64,126-145: catalog
 config, snapshot commit on every write, CoW table properties). This container
-ships no Iceberg runtime jar (probe in COVERAGE.md), so ``Warehouse`` falls
-back to plain parquet — losing snapshot isolation, time travel, rollback and
-compaction. This module restores those semantics on the parquet fallback the
-same way Iceberg itself does: **immutable data files + a metadata log that
-names which files each version sees**.
+ships no Iceberg runtime jar, so this module is the engine's table layer: it
+gives plain parquet Iceberg's snapshot isolation, time travel, rollback and
+compaction the same way Iceberg itself does: **immutable data files + a
+metadata log that names which files each version sees**.
 
 Layout (one table)::
 
@@ -43,9 +42,7 @@ their files with whatever parent is current, rewrite-shaped commits
 (merge/delete/compact/cluster) validate they still sit on the version they
 read and raise :class:`SnapshotConflict` to be retried otherwise. The
 streaming path (``append_batch``) remains one-writer-per-checkpoint by
-construction, as a checkpointed stream is. With the Iceberg jar present
-``Warehouse`` already routes to real Iceberg tables and this module is
-unnecessary.
+construction, as a checkpointed stream is.
 
 Feature map (each row test-gated; see COVERAGE.md's Iceberg-parity matrix):
 
@@ -870,7 +867,9 @@ class SnapshotTable:
                 cond = cond & (F.col(dl["col"]) >= F.lit(dl["lo"]))
             if dl["hi"] is not None:
                 cond = cond & (F.col(dl["col"]) <= F.lit(dl["hi"]))
-            return df.filter(~cond)
+            # SQL DELETE keeps a NULL-key row (its predicate is NULL, not
+            # TRUE); an IsNull disjunct, unlike coalesce, stays pushed down
+            return df.filter(~cond | F.col(dl["col"]).isNull())
         if dl["type"] == "pos":
             # positional delete: (file, row-position) pairs; the scan df
             # carries __file/__pos metadata columns (added by the caller)
@@ -1675,7 +1674,9 @@ class SnapshotTable:
             if hi is not None:
                 cond = cond & (F.col(col) <= F.lit(hi))
             survivors = self._strip_hidden(
-                self._read_paths(snap, candidates).filter(~cond)
+                self._read_paths(snap, candidates).filter(
+                    ~cond | F.col(col).isNull()
+                )
             )
             dirs.append(self._write_new_dir(self._apply_layout(survivors)))
         entry = {"op": "delete", "dirs": dirs}

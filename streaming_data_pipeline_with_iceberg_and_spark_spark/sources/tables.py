@@ -1,248 +1,41 @@
-"""Managed-table warehouse with the reference's write semantics.
+"""Bucketed session-catalog tables — the one layout ``SnapshotTable`` does not own.
 
-The reference writes to an Iceberg table in a Glue catalog
-(/root/reference/spark-data-pipeline/spark_job.py:47-64): parquet+snappy,
-copy-on-write row-level modes, optional partition columns, append if the
-table exists else create (``tableExists`` probe :59).
-
-This module keeps that exact control flow behind one class. Backend:
-
-- **Iceberg** (``local`` hadoop catalog) when the runtime jar is on the
-  classpath — identical ``saveAsTable`` surface plus namespace DDL
-  (spark_job.py:144).
-- **Parquet warehouse** fallback (this container ships no Iceberg jar):
-  append/overwrite parquet under ``warehouse/<namespace>/<table>`` with the
-  same partitionBy and probe-then-route behavior. Not transactional across
-  writers — documented limitation of the fallback, not of the design.
+Every versioned table write goes through ``sources.snapshots.SnapshotTable``.
+Bucketing is different: Spark only honours bucket metadata through the
+session catalog (a bare ``read.parquet`` forgets it), so a bucketed layout
+has to be an external catalog table rather than a snapshot table.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..session import iceberg_runtime_available
-
-WRITE_OPTIONS = {
-    # mirror of spark_job.py:49-54
-    "write.format.default": "parquet",
-    "write.delete.mode": "copy-on-write",
-    "write.update.mode": "copy-on-write",
-    "write.merge.mode": "copy-on-write",
-    "write.parquet.compression-codec": "snappy",
-}
 
 
-class Warehouse:
-    def __init__(
-        self,
-        spark: SparkSession,
-        warehouse_dir: str,
-        catalog: str = "local",
-        namespace: str = "db",
-    ):
-        self.spark = spark
-        self.warehouse_dir = warehouse_dir
-        self.catalog = catalog
-        self.namespace = namespace
-        self.use_iceberg = iceberg_runtime_available()
-
-    # -- naming -----------------------------------------------------------
-    def full_name(self, table: str) -> str:
-        return f"{self.catalog}.{self.namespace}.{table}"
-
-    def _path(self, table: str) -> str:
-        return os.path.join(self.warehouse_dir, self.namespace, table)
-
-    # -- DDL --------------------------------------------------------------
-    def create_namespace(self) -> None:
-        """CREATE NAMESPACE IF NOT EXISTS (spark_job.py:144)."""
-        if self.use_iceberg:
-            self.spark.sql(
-                f"CREATE NAMESPACE IF NOT EXISTS {self.catalog}.{self.namespace}"
-            )
-        else:
-            os.makedirs(os.path.join(self.warehouse_dir, self.namespace), exist_ok=True)
-
-    def table_exists(self, table: str) -> bool:
-        """spark.catalog.tableExists probe (spark_job.py:59)."""
-        if self.use_iceberg:
-            return self.spark.catalog.tableExists(self.full_name(table))
-        path = self._path(table)
-        return os.path.isdir(path) and any(
-            not f.startswith(("_", ".")) for f in os.listdir(path)
-        )
-
-    # -- writes -----------------------------------------------------------
-    def write(
-        self,
-        df: DataFrame,
-        table: str,
-        partition_cols: list[str] | None = None,
-        mode: str | None = None,
-    ) -> None:
-        """Append if the table exists, else create — the reference's routing
-        (spark_job.py:59-64). ``mode`` forces append/overwrite explicitly."""
-        mode = mode or ("append" if self.table_exists(table) else "overwrite")
-        if self.use_iceberg:
-            writer = df.write.format("iceberg")
-            for k, v in WRITE_OPTIONS.items():
-                writer = writer.option(k, v)
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            writer.mode(mode).saveAsTable(self.full_name(table))
-        else:
-            writer = df.write.option("compression", "snappy")
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            writer.mode(mode).parquet(self._path(table))
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_cols: list[str],
-        n_buckets: int = 8,
-        sort_cols: list[str] | None = None,
-        mode: str = "overwrite",
-    ) -> str:
-        """Bucketed managed table: pre-shuffles rows into ``n_buckets`` by
-        ``bucket_cols`` at WRITE time, so every later equi-join or groupBy on
-        the bucket key between same-bucketed tables reads shuffle-free — the
-        pay-once-join-many layout for 100 TB fact⋈fact joins.
-
-        Bucket metadata only flows through the session catalog (a bare
-        ``read.parquet`` would forget it), so this registers an external
-        table under ``<namespace>.<table>`` and returns that name. With the
-        Iceberg runtime present the equivalent is the ``bucket(n, col)``
-        hidden-partition transform; the session-catalog parquet form below
-        works in both modes.
-        """
-        self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.namespace}")
-        name = f"{self.namespace}.{table}"
-        if mode == "overwrite":
-            self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        writer = (
-            df.write.format("parquet")
-            .option("compression", "snappy")
-            .option("path", self._path(table))
-            .bucketBy(n_buckets, *bucket_cols)
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.mode(mode).saveAsTable(name)
-        return name
-
-    # -- row-level mutations (copy-on-write semantics) ---------------------
-    # The reference declares CoW delete/update/merge modes on its Iceberg
-    # table (spark_job.py:50-52) but never issues a row-level op. These
-    # methods provide that declared surface: MERGE INTO / UPDATE / DELETE SQL
-    # when the Iceberg runtime is present (Iceberg rewrites only the files
-    # containing matched rows), else an explicit copy-on-write rewrite of the
-    # parquet warehouse table (whole-table rewrite — the fallback's
-    # documented cost, not the design's; at scale the Iceberg path is the
-    # real one and partition pruning bounds the rewrite set).
-
-    def _rewrite_cow(self, df: DataFrame, table: str) -> None:
-        """Materialize ``df`` as the new table contents via staging + swap
-        (a direct overwrite would delete the files the plan is reading)."""
-        path = self._path(table)
-        staging = path + "__cow_staging"
-        df.write.option("compression", "snappy").mode("overwrite").parquet(staging)
-        old = path + "__cow_old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(path):
-            os.replace(path, old)
-        os.replace(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    def merge(self, source: DataFrame, table: str, key_cols: list[str]) -> None:
-        """Upsert: MERGE INTO ... WHEN MATCHED UPDATE SET * / WHEN NOT
-        MATCHED INSERT * on ``key_cols``. ``source`` must carry the target
-        schema and unique keys."""
-        if self.use_iceberg:
-            source.createOrReplaceTempView("_merge_source")
-            on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-            self.spark.sql(
-                f"MERGE INTO {self.full_name(table)} t USING _merge_source s "
-                f"ON {on} WHEN MATCHED THEN UPDATE SET * "
-                "WHEN NOT MATCHED THEN INSERT *"
-            )
-            return
-        # CoW: keep target rows whose key has no update, then add the source.
-        # The anti-join's build side is the (typically small) update batch's
-        # keys — AQE picks broadcast when it fits.
-        kept = self.read(table).join(
-            source.select(*key_cols), key_cols, "left_anti"
-        )
-        self._rewrite_cow(source.unionByName(kept), table)
-
-    def merge_additive(
-        self,
-        source: DataFrame,
-        table: str,
-        key_cols: list[str],
-        add_cols: list[str],
-    ) -> None:
-        """Incremental-rollup MERGE: matched keys ADD ``add_cols`` instead of
-        replacing (``n = t.n + s.n``); unmatched keys insert. The table must
-        consist of exactly ``key_cols + add_cols`` (a rollup table). This is
-        the continuous-aggregate maintenance op: each micro-batch folds its
-        partial aggregate in, so serving reads never re-scan raw data."""
-        if self.use_iceberg:
-            source.createOrReplaceTempView("_merge_add_source")
-            on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-            sets = ", ".join(f"{c} = t.{c} + s.{c}" for c in add_cols)
-            self.spark.sql(
-                f"MERGE INTO {self.full_name(table)} t USING _merge_add_source s "
-                f"ON {on} WHEN MATCHED THEN UPDATE SET {sets} "
-                "WHEN NOT MATCHED THEN INSERT *"
-            )
-            return
-        combined = (
-            self.read(table)
-            .unionByName(source)
-            .groupBy(*key_cols)
-            .agg(*[F.sum(c).alias(c) for c in add_cols])
-        )
-        self._rewrite_cow(combined, table)
-
-    def delete_where(self, table: str, condition: str) -> None:
-        """Row-level DELETE with CoW semantics."""
-        if self.use_iceberg:
-            self.spark.sql(
-                f"DELETE FROM {self.full_name(table)} WHERE {condition}"
-            )
-            return
-        cond = F.expr(condition)
-        self._rewrite_cow(
-            self.read(table).filter(~F.coalesce(cond, F.lit(False))), table
-        )
-
-    def update_where(
-        self, table: str, condition: str, assignments: dict[str, str]
-    ) -> None:
-        """Row-level UPDATE ``SET col = expr`` under ``condition`` (CoW)."""
-        if self.use_iceberg:
-            sets = ", ".join(f"{c} = {e}" for c, e in assignments.items())
-            self.spark.sql(
-                f"UPDATE {self.full_name(table)} SET {sets} WHERE {condition}"
-            )
-            return
-        cond = F.expr(condition)
-        updated = self.read(table).withColumns(
-            {
-                c: F.when(cond, F.expr(e)).otherwise(F.col(c))
-                for c, e in assignments.items()
-            }
-        )
-        self._rewrite_cow(updated, table)
-
-    # -- reads ------------------------------------------------------------
-    def read(self, table: str) -> DataFrame:
-        if self.use_iceberg:
-            return self.spark.read.table(self.full_name(table))
-        return self.spark.read.parquet(self._path(table))
+def write_bucketed(
+    spark: SparkSession,
+    df: DataFrame,
+    name: str,
+    path: str,
+    bucket_cols: list[str],
+    n_buckets: int = 8,
+    sort_cols: list[str] | None = None,
+) -> str:
+    """(Re)create catalog table ``name`` (``db.table`` or ``table``) at
+    ``path``, pre-shuffled into ``n_buckets`` by ``bucket_cols`` at write
+    time, so every later equi-join or groupBy on the bucket key between
+    same-bucketed tables reads shuffle-free — the pay-once-join-many layout
+    for 100 TB fact⋈fact joins. Returns ``name``."""
+    db, _, _ = name.rpartition(".")
+    if db:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    writer = (
+        df.write.format("parquet")
+        .option("compression", "snappy")
+        .option("path", path)
+        .bucketBy(n_buckets, *bucket_cols)
+    )
+    if sort_cols:
+        writer = writer.sortBy(*sort_cols)
+    writer.mode("overwrite").saveAsTable(name)
+    return name

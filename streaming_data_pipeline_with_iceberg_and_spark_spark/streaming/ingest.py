@@ -1,4 +1,4 @@
-"""Reference-parity ETL: NDJSON → enrichment → managed table.
+"""Reference-parity ETL: NDJSON → enrichment → snapshot table.
 
 The reference's whole pipeline (spark_job.py:78-123 + the ``while True`` loop
 :172-188) collapses into one Structured Streaming query:
@@ -7,9 +7,10 @@ The reference's whole pipeline (spark_job.py:78-123 + the ``while True`` loop
     get_messages(10)          → maxFilesPerTrigger=10
     spark.read.json(files)    → readStream file source
     SQL enrichment :156-164   → enrich() below (same three derived columns)
-    saveAsTable append :59-64 → foreachBatch → Warehouse.write
-    poller.commit() :185      → checkpointLocation (exactly-once upgrade:
-                                the reference can duplicate a batch if it
+    saveAsTable append :59-64 → foreachBatch → SnapshotTable.append_batch
+    poller.commit() :185      → checkpointLocation + the batch id on the
+                                snapshot commit (exactly-once upgrade: the
+                                reference can duplicate a batch if it
                                 crashes between write :61 and commit :185)
 
 ``enrich`` is also usable on bounded DataFrames — batch and streaming share
@@ -23,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sources.ndjson import read_stream
-from ..sources.tables import Warehouse
 
 
 def enrich(df: DataFrame) -> DataFrame:
@@ -51,138 +51,42 @@ def with_event_time(df: DataFrame, col: str = "timestamp") -> DataFrame:
     return df.withColumn("event_ts", F.to_timestamp(col, "yyyy-MM-dd HH:mm:ss"))
 
 
-def start_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    warehouse: Warehouse,
-    table: str = "gps_tracking_table",
-    checkpoint_dir: str | None = None,
-    partition_cols: list[str] | None = None,
-    trigger_seconds: int = 10,
-    max_files_per_trigger: int = 10,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Run the reference pipeline as one streaming query.
-
-    ``available_now=True`` drains all pending files then stops (used by
-    tests and backfills); otherwise ProcessingTime(trigger_seconds) mirrors
-    the reference's sleep(10) cadence."""
-    warehouse.create_namespace()
-    stream = read_stream(
-        spark, source_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    enriched = enrich(stream.withColumn("_metadata", F.col("_metadata")))
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        warehouse.write(batch_df.drop("_metadata"), table, partition_cols)
-
-    writer = enriched.writeStream.foreachBatch(write_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def start_rollup_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    warehouse: Warehouse,
-    table: str = "speed_rollup_1min",
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-) -> StreamingQuery:
-    """Streaming continuous aggregate: a per-minute per-vehicle rollup
-    (event count + speed sum; avg derives at read time) maintained
-    incrementally — each micro-batch computes its PARTIAL aggregate and
-    folds it into the rollup table with an additive MERGE. Serving reads
-    never touch raw events, and each batch shuffles only its own rows.
-
-    Additive updates are not naturally replay-safe (foreachBatch delivers
-    at-least-once on restart), so applied batch ids are recorded in a
-    ``<table>__batchlog`` table and replayed batch ids are skipped — the
-    same idempotence upgrade the checkpoint gives plain appends. The resi-
-    dual crash window (between rollup write and log write) mirrors the
-    reference's write-then-commit gap (spark_job.py:61 vs :185); an
-    Iceberg/Delta deployment closes it by writing both in one transaction.
-    """
-    log_table = table + "__batchlog"
-    warehouse.create_namespace()
-    stream = read_stream(
-        spark, source_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    parsed = with_event_time(stream)
-
-    def rollup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if warehouse.table_exists(log_table):
-            seen = (
-                warehouse.read(log_table)
-                .filter(F.col("batch_id") == batch_id)
-                .limit(1)
-                .count()
-            )
-            if seen:
-                return
-        partial = (
-            batch_df.withColumn("bucket_start", F.date_trunc("minute", "event_ts"))
-            .groupBy("bucket_start", "vehicle_id")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("speed_kmh").alias("speed_sum"),
-            )
-        )
-        if warehouse.table_exists(table):
-            warehouse.merge_additive(
-                partial, table, ["bucket_start", "vehicle_id"], ["n", "speed_sum"]
-            )
-        else:
-            warehouse.write(partial, table, mode="overwrite")
-        log_row = spark.createDataFrame([(batch_id,)], "batch_id long")
-        warehouse.write(log_row, log_table, mode="append")
-
-    writer = parsed.writeStream.foreachBatch(rollup_batch).outputMode("update")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def start_upsert_ingest(
     spark: SparkSession,
     source_dir: str,
-    warehouse: Warehouse,
-    table: str = "vehicle_latest",
-    key_cols: list[str] | None = None,
+    table_root: str,
+    key: str = "vehicle_id",
     checkpoint_dir: str | None = None,
     available_now: bool = True,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
-    """Streaming upsert: each micro-batch MERGEs into the table instead of
-    appending — the CDC/latest-state pattern (one row per vehicle, newest
-    reading wins). Composition of the reference's ingest loop with its
-    declared-but-unused CoW merge mode (spark_job.py:50-52).
+    """Streaming upsert: each micro-batch MERGEs into a snapshot table
+    instead of appending — the CDC/latest-state pattern (one row per
+    vehicle, newest reading wins). Composition of the reference's ingest
+    loop with its declared-but-unused CoW merge mode (spark_job.py:50-52).
 
     Within a batch, the newest row per key is picked by event time before the
-    merge (a MERGE source must have unique keys); across batches the merge
-    makes replays idempotent, so the query is exactly-once end-to-end even
-    under restart."""
-    key_cols = key_cols or ["vehicle_id"]
-    warehouse.create_namespace()
+    merge (a MERGE source must have unique keys); across batches
+    ``SnapshotTable.merge`` rewrites only the files whose key range overlaps
+    the batch, and a replayed batch re-merges the same rows, so the query is
+    exactly-once end-to-end even under restart. A batch with no rows commits
+    nothing."""
+    from ..sources.snapshots import SnapshotTable
+
+    snap = SnapshotTable(spark, table_root)
     stream = read_stream(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
     )
     parsed = with_event_time(stream)
 
     def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
         latest = (
             batch_df.withColumn(
                 "_rn",
                 F.row_number().over(
-                    Window.partitionBy(*key_cols).orderBy(
+                    Window.partitionBy(key).orderBy(
                         F.desc("event_ts"), F.desc("timestamp")
                     )
                 ),
@@ -190,10 +94,10 @@ def start_upsert_ingest(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if warehouse.table_exists(table):
-            warehouse.merge(latest, table, key_cols)
+        if snap.current_version() is None:
+            snap.append(latest)
         else:
-            warehouse.write(latest, table, mode="overwrite")
+            snap.merge(latest, key)
 
     writer = (
         parsed.writeStream.foreachBatch(upsert_batch).outputMode("update")
@@ -3207,16 +3111,12 @@ def compact_cooccurrence_index(
 
 
 def run_batch_ingest(
-    spark: SparkSession,
-    files: list[str] | str,
-    warehouse: Warehouse,
-    table: str = "gps_tracking_table",
-    partition_cols: list[str] | None = None,
-) -> None:
+    spark: SparkSession, files: list[str] | str, table_root: str
+) -> int:
     """The reference's original batch path (process_message → load_data_to_
-    iceberg, spark_job.py:78-123) for explicit file lists."""
+    iceberg, spark_job.py:78-123) for explicit file lists: one append
+    commit; returns the new version."""
     from ..sources.ndjson import read_batch
+    from ..sources.snapshots import SnapshotTable
 
-    warehouse.create_namespace()
-    df = enrich(read_batch(spark, files))
-    warehouse.write(df, table, partition_cols)
+    return SnapshotTable(spark, table_root).append(enrich(read_batch(spark, files)))

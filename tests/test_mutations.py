@@ -2,44 +2,43 @@
 
 The reference declares copy-on-write delete/update/merge table modes
 (/root/reference/spark-data-pipeline/spark_job.py:50-52); these tests drive
-the Warehouse surface that implements them, on tiny literal tables.
+the SnapshotTable surface that implements them, on tiny literal tables.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
-from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.tables import Warehouse
+from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
+    SnapshotTable,
+)
 
 
-def _wh(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"), namespace="t")
-    wh.create_namespace()
-    return wh
-
-
-def _seed(spark, wh):
-    df = spark.createDataFrame(
-        [
-            Row(k=1, status="open", amount=10.0),
-            Row(k=2, status="open", amount=20.0),
-            Row(k=3, status="done", amount=30.0),
-        ]
+def _seed(spark, tmp_path):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(
+        spark.createDataFrame(
+            [
+                Row(k=1, status="open", amount=10.0),
+                Row(k=2, status="open", amount=20.0),
+                Row(k=3, status="done", amount=30.0),
+            ]
+        )
     )
-    wh.write(df, "tbl", mode="overwrite")
-    return wh
+    return t
 
 
 def test_merge_upserts_matched_and_inserts_new(spark, tmp_path):
-    wh = _seed(spark, _wh(spark, tmp_path))
+    t = _seed(spark, tmp_path)
     src = spark.createDataFrame(
         [
             Row(k=2, status="closed", amount=99.0),  # matched → update
             Row(k=4, status="new", amount=40.0),  # not matched → insert
         ]
     )
-    wh.merge(src, "tbl", ["k"])
-    got = {r.k: (r.status, r.amount) for r in wh.read("tbl").collect()}
+    t.merge(src, "k")
+    got = {r.k: (r.status, r.amount) for r in t.read().collect()}
     assert got == {
         1: ("open", 10.0),
         2: ("closed", 99.0),
@@ -49,37 +48,44 @@ def test_merge_upserts_matched_and_inserts_new(spark, tmp_path):
 
 
 def test_merge_is_idempotent_for_same_source(spark, tmp_path):
-    wh = _seed(spark, _wh(spark, tmp_path))
+    t = _seed(spark, tmp_path)
     src = spark.createDataFrame([Row(k=2, status="closed", amount=99.0)])
-    wh.merge(src, "tbl", ["k"])
-    once = sorted(map(tuple, wh.read("tbl").collect()))
-    wh.merge(src, "tbl", ["k"])
-    assert sorted(map(tuple, wh.read("tbl").collect())) == once
+    t.merge(src, "k")
+    once = sorted(map(tuple, t.read().collect()))
+    t.merge(src, "k")
+    assert sorted(map(tuple, t.read().collect())) == once
 
 
 def test_delete_where_removes_only_matching_rows(spark, tmp_path):
-    wh = _seed(spark, _wh(spark, tmp_path))
-    wh.delete_where("tbl", "status = 'done'")
-    assert sorted(r.k for r in wh.read("tbl").collect()) == [1, 2]
+    t = _seed(spark, tmp_path)
+    t.delete_where("status", "done", "done")
+    assert sorted(r.k for r in t.read().collect()) == [1, 2]
 
 
-def test_delete_where_null_condition_keeps_row(spark, tmp_path):
-    wh = _wh(spark, tmp_path)
-    df = spark.createDataFrame(
-        [Row(k=1, status=None, amount=1.0), Row(k=2, status="x", amount=2.0)]
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_delete_where_null_condition_keeps_row(spark, tmp_path, mode):
+    t = SnapshotTable(spark, str(tmp_path / "tbl"))
+    t.append(
+        spark.createDataFrame(
+            [
+                Row(k=1, status=None, amount=1.0),
+                Row(k=2, status="x", amount=2.0),
+                Row(k=3, status="y", amount=3.0),
+            ],
+            "k long, status string, amount double",
+        )
     )
-    wh.write(df, "tbl", mode="overwrite")
     # NULL predicate is not TRUE → row must survive (SQL DELETE semantics)
-    wh.delete_where("tbl", "status = 'x'")
-    assert [r.k for r in wh.read("tbl").collect()] == [1]
+    t.delete_where("status", "x", "x", mode=mode)
+    assert sorted(r.k for r in t.read().collect()) == [1, 3]
 
 
 def test_update_where_mutates_only_matching_rows(spark, tmp_path):
-    wh = _seed(spark, _wh(spark, tmp_path))
-    wh.update_where(
-        "tbl", "status = 'open'", {"amount": "amount * 2", "status": "'hot'"}
+    t = _seed(spark, tmp_path)
+    t.update_where(
+        "status", "open", "open", {"amount": "amount * 2", "status": "'hot'"}
     )
-    got = {r.k: (r.status, r.amount) for r in wh.read("tbl").collect()}
+    got = {r.k: (r.status, r.amount) for r in t.read().collect()}
     assert got == {
         1: ("hot", 20.0),
         2: ("hot", 40.0),

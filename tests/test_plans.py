@@ -275,17 +275,20 @@ def test_bucketed_join_reads_shuffle_free(spark, sf_dir, tmp_path):
     100 TB with a one-time bucketed write."""
     from streaming_data_pipeline_with_iceberg_and_spark_spark.io import load
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.tables import (
-        Warehouse,
+        write_bucketed,
     )
 
-    wh = Warehouse(spark, str(tmp_path), namespace="bktdb")
     li = load(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_quantity", "l_extendedprice"
     )
     orders = load(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice")
-    t_li = wh.write_bucketed(li, "li_b", ["l_orderkey"], 8, sort_cols=["l_orderkey"])
-    t_o = wh.write_bucketed(
-        orders, "orders_b", ["o_orderkey"], 8, sort_cols=["o_orderkey"]
+    t_li = write_bucketed(
+        spark, li, "bktdb.li_b", str(tmp_path / "li_b"), ["l_orderkey"], 8,
+        sort_cols=["l_orderkey"],
+    )
+    t_o = write_bucketed(
+        spark, orders, "bktdb.orders_b", str(tmp_path / "orders_b"), ["o_orderkey"], 8,
+        sort_cols=["o_orderkey"],
     )
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

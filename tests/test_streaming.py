@@ -16,11 +16,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.ndjson import read_batch
-from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.tables import Warehouse
+from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
+    SnapshotTable,
+)
 from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
     enrich,
     run_batch_ingest,
-    start_ingest,
+    start_snapshot_ingest,
+    start_transactional_fanout_ingest,
     start_upsert_ingest,
     with_event_time,
 )
@@ -75,10 +78,10 @@ def gps_dir(tmp_path):
 def test_batch_ingest_enrichment_parity(spark, tmp_path, gps_dir):
     """The reference's enrichment columns (spark_job.py:156-164) + explicit
     schema keeps fuel_level DoubleType even for the all-EV file."""
-    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+    root = str(tmp_path / "gps")
     files = [os.path.join(gps_dir, f) for f in sorted(os.listdir(gps_dir))]
-    run_batch_ingest(spark, files, wh, table="gps")
-    out = wh.read("gps")
+    run_batch_ingest(spark, files, root)
+    out = SnapshotTable(spark, root).read()
     assert out.count() == 15
     assert {"input_file", "processed_time", "processed_date"} <= set(out.columns)
     assert dict(out.dtypes)["fuel_level"] == "double"
@@ -93,24 +96,38 @@ def test_batch_ingest_enrichment_parity(spark, tmp_path, gps_dir):
 def test_streaming_ingest_exactly_once_restart(spark, tmp_path, gps_dir):
     """Checkpointed streaming ingest: draining twice with the same checkpoint
     must not duplicate rows (the upgrade over the reference's at-least-once
-    delete-after-commit, spark_job.py:61 vs :185)."""
-    wh = Warehouse(spark, str(tmp_path / "warehouse"))
+    delete-after-commit, spark_job.py:61 vs :185), and neither may a batch
+    the sink committed but the checkpoint never recorded."""
+    table = SnapshotTable(spark, str(tmp_path / "gps_stream"))
     ckpt = str(tmp_path / "ckpt")
-    q = start_ingest(spark, gps_dir, wh, table="gps_stream", checkpoint_dir=ckpt, available_now=True)
+    q = start_snapshot_ingest(spark, gps_dir, table.root, checkpoint_dir=ckpt)
     q.awaitTermination(120)
-    assert wh.read("gps_stream").count() == 15
+    assert table.read().count() == 15
     # restart with same checkpoint, no new files → no new rows
-    q2 = start_ingest(spark, gps_dir, wh, table="gps_stream", checkpoint_dir=ckpt, available_now=True)
+    q2 = start_snapshot_ingest(spark, gps_dir, table.root, checkpoint_dir=ckpt)
     q2.awaitTermination(120)
-    assert wh.read("gps_stream").count() == 15
+    assert table.read().count() == 15
+    # crash between the table commit and the checkpoint commit: drop the
+    # newest commits/<n> so the restart replays batch n → no new version
+    v = table.current_version()
+    commits = os.path.join(ckpt, "commits")
+    newest = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for n in (str(newest), f".{newest}.crc"):
+        if os.path.exists(os.path.join(commits, n)):
+            os.remove(os.path.join(commits, n))
+    q_replay = start_snapshot_ingest(spark, gps_dir, table.root, checkpoint_dir=ckpt)
+    q_replay.awaitTermination(120)
+    assert len(q_replay.recentProgress) == 1  # batch n re-ran, sink skipped it
+    assert table.current_version() == v
+    assert table.read().count() == 15
     # drop a new file in → only its rows are appended
     _write_ndjson(
         os.path.join(gps_dir, "batch4.json"),
         [_gps_record(vehicle_id="veh00003", ts="2024-01-01 10:10:00")],
     )
-    q3 = start_ingest(spark, gps_dir, wh, table="gps_stream", checkpoint_dir=ckpt, available_now=True)
+    q3 = start_snapshot_ingest(spark, gps_dir, table.root, checkpoint_dir=ckpt)
     q3.awaitTermination(120)
-    assert wh.read("gps_stream").count() == 16
+    assert table.read().count() == 16
 
 
 def _drain_to_memory(df, name, timeout=120):
@@ -399,19 +416,22 @@ def test_streaming_upsert_keeps_latest_per_vehicle(spark, tmp_path):
             _gps_record(vehicle_id="v3", ts="2024-01-01 10:05:00", speed_kmh=30.0),
         ],
     )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    # an empty file is a micro-batch of its own: it must commit nothing
+    (d / "f3_empty.json").write_text("")
+    table = SnapshotTable(spark, str(tmp_path / "vehicle_latest"))
     q = start_upsert_ingest(
         spark,
         str(d),
-        wh,
-        table="vehicle_latest",
+        table.root,
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_files_per_trigger=1,  # forces multi-batch → real cross-batch merge
     )
     q.awaitTermination(120)
+    assert q.exception() is None
+    assert table.current_version() == 2  # f1 append + f2 merge
     got = {
         r.vehicle_id: (r.speed_kmh, r.timestamp)
-        for r in wh.read("vehicle_latest").collect()
+        for r in table.read().collect()
     }
     assert set(got) == {"v1", "v2", "v3"}
     assert got["v1"] == (99.0, "2024-01-01 10:05:00"), "newest v1 must win"
@@ -428,11 +448,11 @@ def test_streaming_upsert_restart_is_exactly_once(spark, tmp_path):
         d / "f1.json",
         [_gps_record(vehicle_id="v1", ts="2024-01-01 10:00:00", speed_kmh=10.0)],
     )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
+    table = SnapshotTable(spark, str(tmp_path / "latest"))
     ckpt = str(tmp_path / "ckpt")
-    q = start_upsert_ingest(spark, str(d), wh, table="latest", checkpoint_dir=ckpt)
+    q = start_upsert_ingest(spark, str(d), table.root, checkpoint_dir=ckpt)
     q.awaitTermination(120)
-    first = {r.vehicle_id: r.speed_kmh for r in wh.read("latest").collect()}
+    first = {r.vehicle_id: r.speed_kmh for r in table.read().collect()}
     assert first == {"v1": 10.0}
     # new file lands; restart from the same checkpoint
     _write_ndjson(
@@ -442,21 +462,18 @@ def test_streaming_upsert_restart_is_exactly_once(spark, tmp_path):
             _gps_record(vehicle_id="v2", ts="2024-01-01 10:05:00", speed_kmh=20.0),
         ],
     )
-    q = start_upsert_ingest(spark, str(d), wh, table="latest", checkpoint_dir=ckpt)
+    q = start_upsert_ingest(spark, str(d), table.root, checkpoint_dir=ckpt)
     q.awaitTermination(120)
-    got = {r.vehicle_id: r.speed_kmh for r in wh.read("latest").collect()}
+    got = {r.vehicle_id: r.speed_kmh for r in table.read().collect()}
     assert got == {"v1": 50.0, "v2": 20.0}
-    assert wh.read("latest").count() == 2  # no duplicate rows from replay
+    assert table.read().count() == 2  # no duplicate rows from replay
 
 
 def test_streaming_rollup_incremental_additive_merge(spark, tmp_path):
     """Continuous aggregate: multi-batch ingest must produce the same
     per-minute per-vehicle rollup as a one-shot batch aggregation of all
-    rows, and a replayed batch id must be a no-op (batch-log idempotence)."""
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        start_rollup_ingest,
-    )
-
+    rows, and a restart must not re-fold any batch (the fold commits once
+    per batch key)."""
     d = tmp_path / "in"
     d.mkdir()
     _write_ndjson(
@@ -475,41 +492,39 @@ def test_streaming_rollup_incremental_additive_merge(spark, tmp_path):
             _gps_record(vehicle_id="v1", ts="2024-01-01 10:01:05", speed_kmh=50.0),
         ],
     )
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    q = start_rollup_ingest(
-        spark,
-        str(d),
-        wh,
-        table="rollup",
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        max_files_per_trigger=1,  # forces multi-batch → real cross-batch adds
-    )
-    q.awaitTermination(120)
+    rollup = SnapshotTable(spark, str(tmp_path / "rollup"))
+
+    def drain(**kw):
+        q = start_transactional_fanout_ingest(
+            spark,
+            str(d),
+            str(tmp_path / "facts"),
+            rollup.root,
+            str(tmp_path / "txn"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            **kw,
+        )
+        q.awaitTermination(120)
+
+    drain(max_files_per_trigger=1)  # forces multi-batch → real cross-batch adds
     got = {
         (str(r.bucket_start), r.vehicle_id): (r.n, r.speed_sum)
-        for r in wh.read("rollup").collect()
+        for r in rollup.read().collect()
     }
     assert got == {
         ("2024-01-01 10:00:00", "v1"): (3, 60.0),
         ("2024-01-01 10:00:00", "v2"): (1, 40.0),
         ("2024-01-01 10:01:00", "v1"): (1, 50.0),
     }
-    # replayed batch id (at-least-once delivery) must not double-add
-    applied = sorted(r.batch_id for r in wh.read("rollup__batchlog").collect())
-    q2 = start_rollup_ingest(
-        spark,
-        str(d),
-        wh,
-        table="rollup",
-        checkpoint_dir=str(tmp_path / "ckpt"),  # same checkpoint → no new batches
-    )
-    q2.awaitTermination(120)
+    # restart (at-least-once delivery) must not double-add
+    applied = rollup.current_version()
+    drain()  # same checkpoint → no new batches
     got2 = {
         (str(r.bucket_start), r.vehicle_id): (r.n, r.speed_sum)
-        for r in wh.read("rollup").collect()
+        for r in rollup.read().collect()
     }
     assert got2 == got, "restart from checkpoint must not re-add batches"
-    assert sorted(r.batch_id for r in wh.read("rollup__batchlog").collect()) == applied
+    assert rollup.current_version() == applied
 
 
 def test_enrich_batch_matches_reference_shape(spark, gps_dir):

@@ -10,16 +10,14 @@ engine's equivalent path end-to-end on local NDJSON:
 
 - generates N files × M GPS-shaped records (the reference producer's
   schema, producer/gps-tracking-simulation.py:37-47);
-- drains them through ``start_ingest`` (parquet warehouse table; the
-  reference's loop shape) or ``start_snapshot_ingest`` (one snapshot
-  commit per micro-batch — the Iceberg-commit-per-poll re-expression)
-  with the reference's ``maxFilesPerTrigger=10`` cap;
+- drains them through ``start_snapshot_ingest`` (one snapshot commit per
+  micro-batch — the Iceberg-commit-per-poll re-expression) with the
+  reference's ``maxFilesPerTrigger=10`` cap;
 - reports wall-clock drain time, rows/s and MB/s as one JSON line.
 
 Usage::
 
-    python tools/ingestbench.py [--files 40] [--rows 25000]
-        [--mode snapshot|warehouse|both] [--out /tmp/ingestbench]
+    python tools/ingestbench.py [--files 40] [--rows 25000] [--out /tmp/ingestbench]
 """
 
 from __future__ import annotations
@@ -67,16 +65,14 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--files", type=int, default=40)
     ap.add_argument("--rows", type=int, default=25000)
-    ap.add_argument("--mode", default="both", choices=["snapshot", "warehouse", "both"])
     ap.add_argument("--out", default="/tmp/ingestbench")
     args = ap.parse_args()
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.session import get_spark
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.tables import (
-        Warehouse,
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
+        SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        start_ingest,
         start_snapshot_ingest,
     )
 
@@ -86,54 +82,21 @@ def main() -> None:
     src = os.path.join(args.out, "in")
     n_bytes = _gen_files(src, args.files, args.rows)
     n_rows = args.files * args.rows
-    results = {}
 
-    if args.mode in ("warehouse", "both"):
-        wh = Warehouse(spark, os.path.join(args.out, "wh"), namespace="ingestdb")
-        t0 = time.perf_counter()
-        q = start_ingest(
-            spark,
-            src,
-            wh,
-            checkpoint_dir=os.path.join(args.out, "ckpt_wh"),
-            available_now=True,
-            max_files_per_trigger=10,
-        )
-        q.awaitTermination()
-        dt = time.perf_counter() - t0
-        got = wh.read("gps_tracking_table").count()
-        assert got == n_rows, (got, n_rows)
-        results["warehouse"] = {
-            "sec": round(dt, 2),
-            "rows_per_s": round(n_rows / dt),
-            "mb_per_s": round(n_bytes / dt / 1e6, 1),
-        }
-
-    if args.mode in ("snapshot", "both"):
-        from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
-            SnapshotTable,
-        )
-
-        root = os.path.join(args.out, "snap")
-        t0 = time.perf_counter()
-        q = start_snapshot_ingest(
-            spark,
-            src,
-            root,
-            checkpoint_dir=os.path.join(args.out, "ckpt_snap"),
-            max_files_per_trigger=10,
-        )
-        q.awaitTermination()
-        dt = time.perf_counter() - t0
-        table = SnapshotTable(spark, root)
-        got = table.read().count()
-        assert got == n_rows, (got, n_rows)
-        results["snapshot"] = {
-            "sec": round(dt, 2),
-            "rows_per_s": round(n_rows / dt),
-            "mb_per_s": round(n_bytes / dt / 1e6, 1),
-            "versions": table.current_version(),
-        }
+    root = os.path.join(args.out, "snap")
+    t0 = time.perf_counter()
+    q = start_snapshot_ingest(
+        spark,
+        src,
+        root,
+        checkpoint_dir=os.path.join(args.out, "ckpt_snap"),
+        max_files_per_trigger=10,
+    )
+    q.awaitTermination()
+    dt = time.perf_counter() - t0
+    table = SnapshotTable(spark, root)
+    got = table.read().count()
+    assert got == n_rows, (got, n_rows)
 
     print(
         json.dumps(
@@ -143,7 +106,12 @@ def main() -> None:
                 "input_mb": round(n_bytes / 1e6, 1),
                 "max_files_per_trigger": 10,
                 "reference_envelope_mb_per_s": 5.0,
-                **results,
+                "snapshot": {
+                    "sec": round(dt, 2),
+                    "rows_per_s": round(n_rows / dt),
+                    "mb_per_s": round(n_bytes / dt / 1e6, 1),
+                    "versions": table.current_version(),
+                },
             }
         ),
         flush=True,
