@@ -2082,7 +2082,8 @@ def rfm_user_partials(events: DataFrame) -> DataFrame:
     share. Every column merges with min/max/sum, so partials from any
     batch split (including late and out-of-order data) combine exactly:
     the easiest incremental-view-maintenance class, no ordering
-    contract."""
+    contract. ``start_cells_ingest`` streams it into the user-state table
+    the lifecycle dashboard then reads in |users|-bounded time."""
     return (
         events.filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
@@ -2097,7 +2098,8 @@ def rfm_user_partials(events: DataFrame) -> DataFrame:
 
 def merge_user_state(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch partials to one row per user — the
-    serve-side merge (and the whole job of ``compact_user_state``)."""
+    serve-side merge (and the ``merge`` ``streaming.ingest.compact`` folds
+    the maintained table with)."""
     return state.groupBy("user_id").agg(
         F.min("d_first").alias("d_first"),
         F.max("d_last").alias("d_last"),
@@ -2419,7 +2421,8 @@ def hourly_counts(events: DataFrame) -> DataFrame:
     incremental hourly ingest share (the activity_pairs discipline:
     batch and maintained-table paths cannot disagree about a bucket).
     Counts are ADDITIVE, so per-batch partials merge by summing — the
-    mergeable-sums IVM class, no ordering contract."""
+    mergeable-sums IVM class, no ordering contract. ``start_cells_ingest``
+    streams it, so the seasonality/anomaly panel never re-scans the fact."""
     return (
         events.filter(F.col("ts").isNotNull())
         .select(F.to_date(F.col("ts").cast("timestamp")).alias("day"),
@@ -2431,7 +2434,8 @@ def hourly_counts(events: DataFrame) -> DataFrame:
 
 def merge_hourly_counts(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch count partials to one row per bucket —
-    the serve-side merge (and the whole job of ``compact_hourly_counts``)."""
+    the serve-side merge (and the ``merge`` ``streaming.ingest.compact``
+    folds the maintained table with)."""
     return state.groupBy("day", "hour").agg(F.sum("n").alias("n"))
 
 
@@ -3006,7 +3010,9 @@ def value_hist(events: DataFrame) -> DataFrame:
     pass over the raw fact that the batch quantile readout and the
     incremental value-hist ingest share (the hourly_counts discipline).
     bin = floor(value / width) on the raw double — pure, so partials are
-    additive with no ordering contract and late data merges exactly."""
+    additive with no ordering contract and late data merges exactly.
+    ``start_cells_ingest`` streams it: p50/p90/p99 monitoring serves from
+    value-span/width rows per type, never a fact re-scan."""
     return (
         events.filter(F.col("value").isNotNull() & F.col("event_type").isNotNull())
         .select(
@@ -3020,8 +3026,8 @@ def value_hist(events: DataFrame) -> DataFrame:
 
 def merge_value_hist(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch histogram partials to one row per
-    (type, bin) — the serve-side merge (and the whole job of
-    ``compact_value_hist``)."""
+    (type, bin) — the serve-side merge (and the ``merge``
+    ``streaming.ingest.compact`` folds the maintained table with)."""
     return state.groupBy("event_type", "bin").agg(F.sum("c").alias("c"))
 
 
@@ -3055,7 +3061,7 @@ def events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type p50/p90/p99 value quantiles from the PINNED
     fixed-width histogram (NEW round 11) — the latency/price monitoring
     readout whose state the eleventh incremental path
-    (``streaming.ingest.start_incremental_value_hist_ingest``) maintains
+    (``streaming.ingest.start_cells_ingest`` with ``value_hist``) maintains
     at ingest. The op IS the composition ``quantiles_from_value_hist ∘
     value_hist`` — batch and maintained-table serving faces share both
     definitions and cannot diverge.
@@ -3221,7 +3227,7 @@ def daily_type_grid(ev: DataFrame) -> DataFrame:
     faces (CUSUM changepoint, seasonal-naive backtest) share. Since
     round 12 the op IS the composition ``grid_from_daily_cells ∘
     daily_type_cells`` — the leaf-cell pass the FIFTEENTH incremental
-    path (``streaming.ingest.start_incremental_daily_type_ingest``)
+    path (``streaming.ingest.start_cells_ingest`` with this partial)
     maintains, so the monitoring dashboard re-reads a
     |types|×|days|-bounded state table per refresh instead of
     re-scanning the fact, and batch/maintained faces cannot diverge."""
@@ -3234,7 +3240,9 @@ def daily_type_cells(ev: DataFrame) -> DataFrame:
     ingest share (the hourly_counts discipline). The count is an
     ADDITIVE integer sum, so per-batch partials merge by addition
     forever: the mergeable-sums IVM class, no ordering contract, late
-    events exact, state bounded by |types| × calendar days."""
+    events exact, state bounded by |types| × calendar days.
+    ``start_cells_ingest`` streams it, so the CUSUM and forecast monitors
+    refresh from state."""
     return (
         ev.filter(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
         .select(
@@ -3247,8 +3255,8 @@ def daily_type_cells(ev: DataFrame) -> DataFrame:
 
 def merge_daily_type_cells(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch cell partials to one row per
-    (type, day) — the serve-side merge (and the whole job of
-    ``compact_daily_type_cells``)."""
+    (type, day) — the serve-side merge (and the ``merge``
+    ``streaming.ingest.compact`` folds the maintained table with)."""
     return state.groupBy("event_type", "day").agg(F.sum("n").alias("n"))
 
 
@@ -3636,7 +3644,9 @@ def benford_digit_cells(orders: DataFrame) -> DataFrame:
     the leaf pass the batch audit and the TWENTY-FOURTH incremental path
     share. Counts are additive integer sums: partials from any batch
     split merge by addition forever (mergeable-sums IVM class; the
-    fraud monitor's entire state is ≤ 9 rows of counters)."""
+    fraud monitor's entire state is ≤ 9 rows of counters). Streamed by
+    ``start_cells_ingest`` over ``ORDERS_ENVELOPE_SCHEMA`` rows, a
+    fabricated-amounts batch shows up as a χ² jump on the next drain."""
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     first = F.substring(cents.cast("string"), 1, 1).cast("int")
     return (
@@ -3651,7 +3661,8 @@ def benford_digit_cells(orders: DataFrame) -> DataFrame:
 
 def merge_benford_cells(state: DataFrame) -> DataFrame:
     """Collapse appended digit partials — the serve-side merge (and the
-    whole job of ``compact_benford_cells``)."""
+    ``merge`` ``streaming.ingest.compact`` folds the maintained table
+    with)."""
     return state.groupBy("digit").agg(F.sum("n_obs").alias("n_obs"))
 
 

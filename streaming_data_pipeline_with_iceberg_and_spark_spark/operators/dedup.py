@@ -256,7 +256,8 @@ def doc_shingle_rows(docs: DataFrame) -> DataFrame:
     frame — THE shingle definition (identical to `_doc_shingles`), shared
     by the decontamination faces and the incremental shingle-index ingest
     so batch and maintained-index paths cannot disagree about a posting.
-    NULL-text docs contribute no rows (explode of NULL drops)."""
+    NULL-text docs contribute no rows (explode of NULL drops). Streamed by
+    ``start_cells_ingest``: each doc arrives once, so postings union."""
     return docs.select(
         "doc_id",
         F.explode(F.array_distinct(shingles(tokens("text"), 3))).alias(

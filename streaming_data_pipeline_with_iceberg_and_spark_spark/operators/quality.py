@@ -841,6 +841,32 @@ def recon_order_partials(orders: DataFrame) -> DataFrame:
     )
 
 
+def recon_partials(envelope: DataFrame) -> DataFrame:
+    """Both partial families of a ``kind``-tagged lineitem/order envelope
+    in one (k, hdr_cents, hdr_n, line_cents, n_lines) frame — the per-batch
+    ``start_cells_ingest`` partial of the 22nd path: the view joins header
+    and lines on the aggregation key itself, so the join degenerates into
+    one order-keyed table of additive sums (no ordering contract)."""
+    zero = F.lit(0).cast("long")
+    lines = recon_line_partials(
+        envelope.filter(F.col("kind") == "lineitem")
+    ).select(
+        "k",
+        zero.alias("hdr_cents"),
+        zero.alias("hdr_n"),
+        "line_cents",
+        "n_lines",
+    )
+    hdrs = recon_order_partials(envelope.filter(F.col("kind") == "order")).select(
+        "k",
+        "hdr_cents",
+        "hdr_n",
+        zero.alias("line_cents"),
+        zero.alias("n_lines"),
+    )
+    return lines.unionByName(hdrs)
+
+
 def merge_recon_partials(state: DataFrame) -> DataFrame:
     """Collapse appended partials to one row per order — every column is
     an additive integer sum, so ANY batch split / arrival order / replay

@@ -65,7 +65,7 @@ def lineitem_pricing_cells(li: DataFrame) -> DataFrame:
     overflow-safe past 10¹¹ rows — and therefore per-batch partials
     merge by addition EXACTLY (the mergeable-sums class; no float
     accumulation order to diverge on).  The serve face divides once per
-    group at read time."""
+    group at read time. ``start_cells_ingest`` streams it."""
     cents = F.round(F.col("l_extendedprice") * 100).cast("long")
     qty = F.round(F.col("l_quantity")).cast("long")
     disc_bp = F.round(F.col("l_discount") * 10000).cast("long")
@@ -97,8 +97,8 @@ def lineitem_pricing_cells(li: DataFrame) -> DataFrame:
 
 def merge_pricing_cells(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch pricing partials to one row per
-    (flag, status) — the serve-side merge (and the whole job of
-    ``compact_pricing_cells``)."""
+    (flag, status) — the serve-side merge (and the ``merge``
+    ``streaming.ingest.compact`` folds the maintained table with)."""
     return state.groupBy("l_returnflag", "l_linestatus").agg(
         F.sum("sum_qty_i").alias("sum_qty_i"),
         F.sum("sum_base_cents").alias("sum_base_cents"),
@@ -294,8 +294,9 @@ def lineitem_order_partials(li: DataFrame) -> DataFrame:
 
 def merge_order_partials(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch lineitem partials to one row per
-    order (the whole job of ``compact_revenue_state``'s lineitem leg —
-    additive integer sums, so merging is exact under any batch split)."""
+    order (the ``merge`` ``streaming.ingest.compact`` folds the lineitem
+    state with — additive integer sums, so merging is exact under any
+    batch split)."""
     return state.groupBy("o_orderkey").agg(
         F.sum("rev_num").alias("rev_num"), F.sum("n").alias("n")
     )

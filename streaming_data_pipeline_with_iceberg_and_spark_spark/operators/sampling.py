@@ -725,7 +725,7 @@ def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Since round 12 the op IS the composition ``mixture_from_token_cells ∘
     source_token_cells`` — the leaf-cell pass the FOURTEENTH incremental
-    path (``streaming.ingest.start_incremental_mixture_ingest``)
+    path (``streaming.ingest.start_cells_ingest`` with this partial)
     maintains, so a continuously-ingesting pipeline re-plans its mixture
     from a |sources|-bounded state table instead of a corpus re-scan, and
     the batch/maintained faces cannot diverge.
@@ -746,7 +746,9 @@ def source_token_cells(docs: DataFrame) -> DataFrame:
     mixture-weights ingest share (the corpus_cells discipline). Both
     measures are ADDITIVE integer sums, so per-batch partials merge by
     addition forever: the mergeable-sums IVM class, no ordering contract,
-    late data exact, state bounded by |sources| rows."""
+    late data exact, state bounded by |sources| rows.
+    ``start_cells_ingest`` streams it, so a continuously ingesting pipeline
+    re-plans its mixture per drain without re-tokenizing the corpus."""
     from ..functions.text import tokens
 
     return (
@@ -761,8 +763,8 @@ def source_token_cells(docs: DataFrame) -> DataFrame:
 
 def merge_source_token_cells(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch cell partials to one row per source —
-    the serve-side merge (and the whole job of
-    ``compact_source_token_cells``)."""
+    the serve-side merge (and the ``merge`` that ``streaming.ingest.compact``
+    folds the maintained table with)."""
     return state.groupBy("source").agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("total_tokens").alias("total_tokens"),

@@ -2386,6 +2386,14 @@ def hamming_rank(codes: DataFrame, queries: DataFrame) -> DataFrame:
     )
 
 
+def code_index_rows(emb: DataFrame) -> DataFrame:
+    """Sign codes of the non-NULL embeddings — the per-batch
+    ``start_cells_ingest`` partial of the 23rd path: a pure per-row
+    projection, so per-batch appends union to the full code table with no
+    merge step."""
+    return _sign_coded(emb.filter(F.col("embedding").isNotNull()))
+
+
 def hamming_from_code_index(codes: DataFrame) -> DataFrame:
     """`knn_hamming` served from the 23rd path's MAINTAINED code table:
     the benchmark query set is the same ``_query_pred`` carve of the
@@ -2622,7 +2630,7 @@ def pca_moment_partials(emb: DataFrame) -> DataFrame:
     """The mergeable heart of PCA: per-batch/per-partition (pos, v) moment
     partial sums. Sums are associative, so partials from ANY split of the
     corpus — partitions of one scan, or successive ingest micro-batches
-    (streaming/ingest.py start_incremental_pca_ingest) — fold into the same
+    (``streaming.ingest.start_incremental_pca_ingest``) — fold into the same
     moment vector a single batch pass produces."""
     return (
         emb.select("embedding")

@@ -134,7 +134,9 @@ def bpe_word_table(docs: DataFrame) -> DataFrame:
     """(word, freq) over the BPE pre-tokens — the training input. Shared
     by training and the apply face so the two cannot disagree about what
     a word is. Words containing the reserved delimiter are excluded on
-    both engines (the oracle's strpos guard)."""
+    both engines (the oracle's strpos guard). Streamed by
+    ``start_cells_ingest``, both tokenizer trainers re-run from
+    word-type-bounded state (freqs are additive; no document re-read)."""
     toks = F.regexp_extract_all(F.lower("text"), F.lit(_BPE_REGEX), 0)
     return (
         docs.filter(F.col("text").isNotNull())
@@ -247,7 +249,7 @@ def bpe_train_from_words(words: DataFrame):
 def merge_word_cells(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch (word, freq) partials to one row per
     word type — the serve-side merge of the NINETEENTH incremental path
-    (and the whole job of ``compact_word_cells``).  Integer sums merge
+    (and the ``merge`` ``streaming.ingest.compact`` folds its table with).  Integer sums merge
     exactly, so training from the merged cells is bit-identical to
     training off the corpus scan."""
     return state.groupBy("word").agg(F.sum("freq").alias("freq"))
@@ -1707,7 +1709,7 @@ def text_rollup_by_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus rollup: doc counts + char stats by (lang, source). Since
     round 11 the op IS the composition ``rollup_from_cells ∘
     corpus_cells`` — the leaf-cell pass the TWELFTH incremental path
-    (``streaming.ingest.start_incremental_corpus_rollup_ingest``)
+    (``streaming.ingest.start_cells_ingest`` with ``corpus_cells``)
     maintains, so the corpus dashboard serves from a
     |langs|×|sources|-bounded state table and batch/maintained faces
     cannot diverge."""
@@ -1720,7 +1722,8 @@ def corpus_cells(docs: DataFrame) -> DataFrame:
     incremental corpus-rollup ingest share (the hourly_counts
     discipline). All three measures are ADDITIVE integer sums, so
     per-batch partials merge by addition forever: the mergeable-sums IVM
-    class, no ordering contract, late data exact."""
+    class, no ordering contract, late data exact. Streamed by
+    ``start_cells_ingest``, the corpus volume dashboard never re-scans."""
     return docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n"),
         F.count("n_chars").alias("nn"),
@@ -1730,8 +1733,8 @@ def corpus_cells(docs: DataFrame) -> DataFrame:
 
 def merge_corpus_cells(state: DataFrame) -> DataFrame:
     """Collapse appended per-batch cell partials to one row per cell —
-    the serve-side merge (and the whole job of
-    ``compact_corpus_cells``)."""
+    the serve-side merge (and the ``merge`` that ``streaming.ingest.compact``
+    folds the maintained table with)."""
     return state.groupBy("lang", "source").agg(
         F.sum("n").alias("n"),
         F.sum("nn").alias("nn"),
@@ -3384,7 +3387,7 @@ def materialized_bm25_index(
     ``doc_id IN (...)`` filter both push down to the scan and skip files —
     query cost scales with matching postings, not corpus size.  This is the
     scratch-session realization of the layout the incremental ingest
-    (streaming/ingest.py start_incremental_bm25_ingest) maintains durably;
+    (``streaming.ingest.start_incremental_bm25_ingest``) maintains durably;
     bm25_rank_from_index over either returns exactly what bm25_rank
     computes on the fly (parity tests in tests/test_streaming.py and
     tests/test_textops.py)."""

@@ -1,2 +1,3 @@
-"""Sources and sinks: NDJSON readers (batch + stream) and the managed-table
-warehouse (Iceberg when the runtime jar is present, parquet otherwise)."""
+"""Sources and sinks: NDJSON readers (batch + stream), the snapshot table
+layer (versioned parquet tables with Iceberg-style commits) and bucketed
+session-catalog writes."""

@@ -8,10 +8,13 @@ The reference's whole pipeline (spark_job.py:78-123 + the ``while True`` loop
     spark.read.json(files)    → readStream file source
     SQL enrichment :156-164   → enrich() below (same three derived columns)
     saveAsTable append :59-64 → foreachBatch → SnapshotTable.append_batch
-    poller.commit() :185      → checkpointLocation + the batch id on the
+    poller.commit() :185      → checkpointLocation + the batch key on the
                                 snapshot commit (exactly-once upgrade: the
                                 reference can duplicate a batch if it
                                 crashes between write :61 and commit :185)
+
+Every path below supplies only its batch body; :func:`_start` owns that loop
+(the writer, the batch key and the replay guard) once for all of them.
 
 ``enrich`` is also usable on bounded DataFrames — batch and streaming share
 the same transformation, which is the point of the DataFrame API.
@@ -19,11 +22,21 @@ the same transformation, which is the point of the DataFrame API.
 
 from __future__ import annotations
 
+import json
+import math
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sources.ndjson import read_stream
+from ..sources.ndjson import read_batch, read_stream
+from ..sources.snapshots import (
+    MultiTableTransaction,
+    SnapshotTable,
+    recover_transactions,
+    transaction_batch_seen,
+)
 
 
 def enrich(df: DataFrame) -> DataFrame:
@@ -51,13 +64,119 @@ def with_event_time(df: DataFrame, col: str = "timestamp") -> DataFrame:
     return df.withColumn("event_ts", F.to_timestamp(col, "yyyy-MM-dd HH:mm:ss"))
 
 
+def _max_seen_batch(tables, prefix: str) -> int:
+    """Highest batch number stamped ``<prefix><n>`` on any of ``tables``
+    (-1 if none)."""
+    mx = -1
+    for t in tables:
+        for s in t._log():
+            b = s.get("batch_id")
+            if isinstance(b, str) and b.startswith(prefix):
+                try:
+                    mx = max(mx, int(b[len(prefix) :]))
+                except ValueError:
+                    pass
+    return mx
+
+
+def _start(stream, checkpoint_dir, commit, tables=(), txn_dir=None) -> StreamingQuery:
+    """The one stream protocol every ingest path runs: drain ``stream`` in
+    ``availableNow`` micro-batches under ``checkpoint_dir`` and hand each
+    batch to ``commit(batch_df, key)``.
+
+    ``key`` is ``"<query id>#<n>"``: the query id is the one Spark stores in
+    ``<checkpoint_dir>/metadata`` and keeps across restarts, so a restart
+    re-derives the keys of the batches it replays, while a stream with a
+    different checkpoint writing the same table never collides with them
+    (a bare batch number would make its first batches look like replays).
+
+    Replay guard: the first batch completes any crashed transaction under
+    ``txn_dir`` and reads the highest key of this query stamped on
+    ``tables``; after that a batch at or below that watermark is skipped
+    whole and each commit advances it, so the per-batch check is a
+    driver-memory compare, not a commit-log parse. Paths with no
+    ``tables`` rely on their sink's own idempotence (``append_batch`` skips
+    a logged key; the upsert's merge re-applies the same rows)."""
+    spark = stream.sparkSession
+    guard = {}
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not guard:
+            with open(os.path.join(checkpoint_dir, "metadata")) as f:
+                prefix = json.load(f)["id"] + "#"
+            if txn_dir is not None:
+                recover_transactions(spark, txn_dir)
+            guard.update(prefix=prefix, max_seen=_max_seen_batch(tables, prefix))
+        if batch_id <= guard["max_seen"]:
+            return
+        commit(batch_df, f"{guard['prefix']}{batch_id}")
+        guard["max_seen"] = batch_id
+
+    return (
+        stream.writeStream.foreachBatch(run)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def start_cells_ingest(
+    spark: SparkSession,
+    source_dir: str,
+    root: str,
+    checkpoint_dir: str,
+    partial,
+    schema,
+    max_files_per_trigger: int = 10,
+) -> StreamingQuery:
+    """Maintain a partials table at ingest: each micro-batch appends
+    ``partial(batch_df)`` under its batch key, and a replayed batch is
+    skipped by ``append_batch``. ``partial`` is the operator's own leaf
+    pass (``hourly_counts``, ``corpus_cells``, ``lineitem_pricing_cells``,
+    …), so the served face over the table equals the batch operator over
+    everything ingested; :func:`compact` folds the per-batch partials
+    with the operator's merge twin between drains."""
+    t = SnapshotTable(spark, root)
+    stream = read_stream(
+        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
+    )
+
+    def cells_batch(batch_df: DataFrame, key: str) -> None:
+        t.append_batch(partial(batch_df), key)
+
+    return _start(stream, checkpoint_dir, cells_batch)
+
+
+# Source schemas of the cells streams over TPC-H-shaped rows: the
+# interleaved lineitem/order envelope (``recon_partials``), orders
+# (``benford_digit_cells``) and embeddings (``code_index_rows``).
+RECON_ENVELOPE_SCHEMA = (
+    "kind string, l_orderkey long, l_extendedprice double,"
+    " l_discount double, l_tax double, o_orderkey long, o_totalprice double"
+)
+ORDERS_ENVELOPE_SCHEMA = (
+    "o_orderkey long, o_custkey long, o_orderstatus string,"
+    " o_totalprice double, o_orderdate timestamp, o_orderpriority string"
+)
+EMBEDDING_ENVELOPE_SCHEMA = "vec_id long, embedding array<float>"
+
+
+def compact(spark: SparkSession, root: str, merge=None) -> None:
+    """Rewrite a maintained table as ``merge(rows)`` (or as its rows, which
+    only collapses the per-batch files) — a semantic no-op for readers.
+    The overwrite appends a commit and keeps the log, so the stream's
+    batch keys survive and replay protection is unaffected."""
+    t = SnapshotTable(spark, root)
+    rows = t.read()
+    t.overwrite(merge(rows) if merge is not None else rows)
+
+
 def start_upsert_ingest(
     spark: SparkSession,
     source_dir: str,
     table_root: str,
+    checkpoint_dir: str,
     key: str = "vehicle_id",
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int = 10,
 ) -> StreamingQuery:
     """Streaming upsert: each micro-batch MERGEs into a snapshot table
@@ -71,15 +190,13 @@ def start_upsert_ingest(
     the batch, and a replayed batch re-merges the same rows, so the query is
     exactly-once end-to-end even under restart. A batch with no rows commits
     nothing."""
-    from ..sources.snapshots import SnapshotTable
-
     snap = SnapshotTable(spark, table_root)
     stream = read_stream(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
     )
     parsed = with_event_time(stream)
 
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def upsert_batch(batch_df: DataFrame, batch_key: str) -> None:
         if batch_df.isEmpty():
             return
         latest = (
@@ -99,22 +216,14 @@ def start_upsert_ingest(
         else:
             snap.merge(latest, key)
 
-    writer = (
-        parsed.writeStream.foreachBatch(upsert_batch).outputMode("update")
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(parsed, checkpoint_dir, upsert_batch)
 
 
 def start_snapshot_ingest(
     spark: SparkSession,
     source_dir: str,
     table_root: str,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
     compact_every: int | None = None,
 ) -> StreamingQuery:
@@ -128,8 +237,6 @@ def start_snapshot_ingest(
     ``compact_every`` folds small-file compaction into the stream — one
     compaction commit every N batches, the maintenance Iceberg runs as
     ``rewrite_data_files``."""
-    from ..sources.snapshots import SnapshotTable
-
     snap = SnapshotTable(spark, table_root)
     stream = read_stream(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
@@ -141,41 +248,15 @@ def start_snapshot_ingest(
     # which would drift "every N batches" into "every N-1" after the first
     n_committed = {"n": 0}
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        v = snap.append_batch(batch_df.drop("_metadata"), batch_id)
+    def commit_batch(batch_df: DataFrame, key: str) -> None:
+        v = snap.append_batch(batch_df.drop("_metadata"), key)
         if v is None:
             return  # replay
         n_committed["n"] += 1
         if compact_every and n_committed["n"] % compact_every == 0:
             snap.compact()
 
-    writer = enriched.writeStream.foreachBatch(commit_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _max_seen_batch(tables, stream_id: str) -> int:
-    """Highest batch number this STREAM has stamped on any of ``tables``
-    (-1 if none). Batch keys are namespaced ``<stream_id>#<n>`` so two
-    different pipelines writing the same table can never mistake each
-    other's batch numbers for their own (un-namespaced ids silently DROP
-    batches in that case). Scanned once per stream start — replays only
-    happen right after a restart, so the per-batch guard is an in-memory
-    watermark compare, not an O(log) re-parse."""
-    mx = -1
-    prefix = stream_id + "#"
-    for t in tables:
-        for s in t._log():
-            b = s.get("batch_id")
-            if isinstance(b, str) and b.startswith(prefix):
-                try:
-                    mx = max(mx, int(b[len(prefix) :]))
-                except ValueError:
-                    pass
-    return mx
+    return _start(enriched, checkpoint_dir, commit_batch)
 
 
 def start_transactional_fanout_ingest(
@@ -184,10 +265,8 @@ def start_transactional_fanout_ingest(
     facts_root: str,
     rollup_root: str,
     txn_dir: str,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "fanout",
 ) -> StreamingQuery:
     """Streaming fan-out with MULTI-TABLE atomicity: each micro-batch
     appends the raw facts AND refreshes the per-minute per-vehicle rollup
@@ -197,33 +276,19 @@ def start_transactional_fanout_ingest(
     cursor (spark_job.py:61 vs :185); a second derived table would widen
     that window, and only a catalog-level transaction closes it.
 
-    Exactly-once under foreachBatch replay: the stream's first batch
-    completes any crashed transaction (``recover_transactions``) and reads
-    the highest ``<stream_id>#<n>`` batch key stamped on either table; the
-    per-batch replay guard is then a driver-memory watermark compare, so
-    steady-state overhead does not grow with history. Per-batch work
+    Exactly-once under foreachBatch replay: both tables commit under the
+    batch key, guarded by :func:`_start`'s watermark, so steady-state
+    overhead does not grow with history. Per-batch work
     scales with the BATCH: the rollup fold re-aggregates rollup+partial,
     bounded by group cardinality, never by total facts."""
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
-
     facts = SnapshotTable(spark, facts_root)
     rollup = SnapshotTable(spark, rollup_root)
     stream = read_stream(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
     )
     parsed = with_event_time(stream)
-    state = {"max_seen": None}
 
-    def fanout_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([facts, rollup], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def fanout_batch(batch_df: DataFrame, key: str) -> None:
         partial = (
             batch_df.withColumn("bucket_start", F.date_trunc("minute", "event_ts"))
             .groupBy("bucket_start", "vehicle_id")
@@ -239,18 +304,11 @@ def start_transactional_fanout_ingest(
         else:
             folded = partial
         txn = MultiTableTransaction([facts, rollup], txn_dir)
-        key = f"{stream_id}#{batch_id}"
         txn.stage_append(facts, batch_df, batch_id=key)
         txn.stage_overwrite(rollup, folded, batch_id=key)
         txn.commit()
-        state["max_seen"] = batch_id
 
-    writer = parsed.writeStream.foreachBatch(fanout_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(parsed, checkpoint_dir, fanout_batch, [facts, rollup], txn_dir)
 
 
 def start_incremental_dedup_ingest(
@@ -260,10 +318,8 @@ def start_incremental_dedup_ingest(
     seen_root: str,
     txn_dir: str,
     fingerprint_cols: list[str],
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "dedup_ingest",
 ) -> StreamingQuery:
     """Incremental dedup at ingest: each micro-batch keeps only rows whose
     content fingerprint has never been seen — within the batch OR in any
@@ -287,28 +343,15 @@ def start_incremental_dedup_ingest(
     re-shuffling the seen side. Atomicity matters here: committing the
     corpus but not the fingerprints would let a replay re-admit
     duplicates; the multi-table transaction makes corpus+fingerprints one
-    commit, and the namespaced ``<stream_id>#<n>`` batch key (checked
-    against an in-memory watermark seeded once at stream start) makes
+    commit, and the batch key (:func:`_start`'s replay guard) makes
     replays skips."""
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
-
     corpus = SnapshotTable(spark, corpus_root)
     seen = SnapshotTable(spark, seen_root)
     stream = read_stream(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([corpus, seen], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def dedup_batch(batch_df: DataFrame, key: str) -> None:
         batch_fp = batch_df.withColumn(
             "fp_hi", F.xxhash64(*fingerprint_cols)
         ).withColumn(
@@ -323,20 +366,13 @@ def start_incremental_dedup_ingest(
         novel = novel.persist()
         try:
             txn = MultiTableTransaction([corpus, seen], txn_dir)
-            key = f"{stream_id}#{batch_id}"
             txn.stage_append(corpus, novel.drop("fp_hi", "fp_lo"), batch_id=key)
             txn.stage_append(seen, novel.select("fp_hi", "fp_lo"), batch_id=key)
             txn.commit()
         finally:
             novel.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(dedup_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, dedup_batch, [corpus, seen], txn_dir)
 
 
 def start_incremental_neardup_ingest(
@@ -346,18 +382,13 @@ def start_incremental_neardup_ingest(
     seen_root: str,
     txn_dir: str,
     schema,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.7,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "neardup_ingest",
 ) -> StreamingQuery:
     """Incremental NEAR-dup (MinHash) dedup at ingest — the fuzzy twin of
     :func:`start_incremental_dedup_ingest`. Each micro-batch admits only
-    documents that are not near-duplicates (estimated Jaccard ≥
-    ``threshold``) of any document in the batch or any previously admitted
+    ``doc_id``/``text`` documents that are not near-duplicates (estimated
+    Jaccard ≥ 0.7) of any document in the batch or any previously admitted
     document, then commits the admitted rows plus their LSH bucket entries
     atomically. On a growing 100 TB corpus this replaces re-running the
     full-batch MinHash job per ingest (which re-shuffles the whole corpus)
@@ -384,22 +415,15 @@ def start_incremental_neardup_ingest(
     Exactly-once: same protocol as the exact path — multi-table transaction
     over (corpus, seen), namespaced batch keys, transaction recovery at
     stream start."""
-    import math
-
     from ..operators.dedup import _MH_BANDS, _MH_PERMS, minhash_sig_bands
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     corpus = SnapshotTable(spark, corpus_root)
     seen = SnapshotTable(spark, seen_root)
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
-    n_agree_min = math.ceil(threshold * _MH_PERMS)
+    id_col, text_col = "doc_id", "text"
+    n_agree_min = math.ceil(0.7 * _MH_PERMS)
     band_arr = F.array(*[F.col(f"band{b}") for b in range(_MH_BANDS)])
 
     def agree(a, b):
@@ -409,12 +433,7 @@ def start_incremental_neardup_ingest(
             lambda acc, x: acc + x,
         )
 
-    def neardup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([corpus, seen], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def neardup_batch(batch_df: DataFrame, key: str) -> None:
         sigs = minhash_sig_bands(batch_df, text_col).persist()
         try:
             # Broadcast hints below mark the frames bounded by the trigger
@@ -502,7 +521,6 @@ def start_incremental_neardup_ingest(
                     F.col("sig").alias("seen_sig"),
                 )
                 txn = MultiTableTransaction([corpus, seen], txn_dir)
-                key = f"{stream_id}#{batch_id}"
                 txn.stage_append(corpus, admitted, batch_id=key)
                 txn.stage_append(seen, seen_rows, batch_id=key)
                 txn.commit()
@@ -510,14 +528,8 @@ def start_incremental_neardup_ingest(
                 survivors.unpersist()
         finally:
             sigs.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(neardup_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, neardup_batch, [corpus, seen], txn_dir)
 
 
 def start_incremental_pca_ingest(
@@ -527,10 +539,8 @@ def start_incremental_pca_ingest(
     moments_root: str,
     txn_dir: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "pca_ingest",
 ) -> StreamingQuery:
     """EXACT streaming PCA: maintain the corpus's (n, Σx, XᵀX) moment vector
     incrementally at ingest. PCA's sufficient statistics are plain sums, so
@@ -552,25 +562,14 @@ def start_incremental_pca_ingest(
     Rows with NULL embedding are admitted to the corpus but contribute no
     moments — identical to batch PCA's NULL filter."""
     from ..operators.similarity import pca_moment_partials
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     corpus = SnapshotTable(spark, corpus_root)
     moments = SnapshotTable(spark, moments_root)
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def pca_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([corpus, moments], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def pca_batch(batch_df: DataFrame, key: str) -> None:
         # both the moment pass and the corpus append consume the batch —
         # persist so the source is materialized once, the same trick
         # dedup_batch uses for its staged writes (on the local NDJSON
@@ -607,21 +606,14 @@ def start_incremental_pca_ingest(
                         "or rebuild the moments table"
                     )
             txn = MultiTableTransaction([corpus, moments], txn_dir)
-            key = f"{stream_id}#{batch_id}"
             txn.stage_append(corpus, batch_df, batch_id=key)
             txn.stage_append(moments, partial, batch_id=key)
             txn.commit()
         finally:
             partial.unpersist()
             batch_df.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(pca_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, pca_batch, [corpus, moments], txn_dir)
 
 
 def start_incremental_bm25_ingest(
@@ -632,12 +624,8 @@ def start_incremental_bm25_ingest(
     stats_root: str,
     txn_dir: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "bm25_ingest",
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> StreamingQuery:
     """EXACT incremental BM25 index maintenance: keep the (term, doc_id, tf,
     dl) postings table and the (n_docs, sum_dl) corpus-stats table current
@@ -663,11 +651,6 @@ def start_incremental_bm25_ingest(
     (append semantics; dedup is the upstream dedup-ingest paths' job).
     """
     from ..operators.textops import bm25_doc_postings, bm25_stats_partial
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     corpus = SnapshotTable(spark, corpus_root)
     postings = SnapshotTable(spark, postings_root)
@@ -675,38 +658,27 @@ def start_incremental_bm25_ingest(
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def bm25_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([corpus, postings, stats], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def bm25_batch(batch_df: DataFrame, key: str) -> None:
         # three consumers of the batch (corpus append, postings agg, stats
         # agg) — persist so the source is materialized once
         batch_df = batch_df.persist()
         try:
             txn = MultiTableTransaction([corpus, postings, stats], txn_dir)
-            key = f"{stream_id}#{batch_id}"
             txn.stage_append(corpus, batch_df, batch_id=key)
             txn.stage_append(
-                postings, bm25_doc_postings(batch_df, text_col, id_col), batch_id=key
+                postings, bm25_doc_postings(batch_df), batch_id=key
             )
             txn.stage_append(
-                stats, bm25_stats_partial(batch_df, text_col), batch_id=key
+                stats, bm25_stats_partial(batch_df), batch_id=key
             )
             txn.commit()
         finally:
             batch_df.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(bm25_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(
+        stream, checkpoint_dir, bm25_batch, [corpus, postings, stats], txn_dir
+    )
 
 
 def start_incremental_ann_ingest(
@@ -714,10 +686,8 @@ def start_incremental_ann_ingest(
     source_dir: str,
     index_root: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "ann_ingest",
     pinned_seeds: bool = False,
 ) -> StreamingQuery:
     """Maintain a SERVING ANN index at ingest — the third incremental-index
@@ -742,14 +712,8 @@ def start_incremental_ann_ingest(
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def ann_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            state["max_seen"] = _max_seen_batch([idx.table], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
-        key = f"{stream_id}#{batch_id}"
+    def ann_batch(batch_df: DataFrame, key: str) -> None:
         has_quantizer = (
             idx.table.current_version() is not None
             and idx.table.snapshot_props().get("ivf_centroids") is not None
@@ -758,14 +722,8 @@ def start_incremental_ann_ingest(
             idx.append_batch(batch_df, key)
         else:
             idx.bootstrap_batch(batch_df, key, pinned_seeds=pinned_seeds)
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(ann_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, ann_batch, [idx.table])
 
 
 def start_incremental_markov_ingest(
@@ -775,10 +733,8 @@ def start_incremental_markov_ingest(
     state_root: str,
     txn_dir: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "markov_ingest",
 ) -> StreamingQuery:
     """EXACT incremental Markov-transition maintenance: keep the
     (prev_type, next_type, n) transition-count table current at ingest —
@@ -808,25 +764,14 @@ def start_incremental_markov_ingest(
     are skipped whole.
     """
     from ..operators.analytics import markov_transition_counts
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     counts = SnapshotTable(spark, counts_root)
     last_state = SnapshotTable(spark, state_root)
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def markov_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([counts, last_state], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def markov_batch(batch_df: DataFrame, key: str) -> None:
         b = batch_df.filter(
             F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
         ).persist()
@@ -898,21 +843,14 @@ def start_incremental_markov_ingest(
             else:
                 new_state = lasts
             txn = MultiTableTransaction([counts, last_state], txn_dir)
-            key = f"{stream_id}#{batch_id}"
             txn.stage_append(counts, partial, batch_id=key)
             txn.stage_overwrite(last_state, new_state, batch_id=key)
             txn.commit()
         finally:
             ranked.unpersist()
             b.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(markov_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, markov_batch, [counts, last_state], txn_dir)
 
 
 def start_incremental_engagement_ingest(
@@ -920,10 +858,8 @@ def start_incremental_engagement_ingest(
     source_dir: str,
     activity_root: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "engagement_ingest",
 ) -> StreamingQuery:
     """EXACT incremental DAU/WAU/MAU maintenance: keep the DISTINCT
     (user_id, day) activity table current at ingest, so the engagement
@@ -946,25 +882,19 @@ def start_incremental_engagement_ingest(
     scale the activity table would be bucketed on user_id so the per-batch
     anti-join co-locates without re-shuffling the maintained side."""
     from ..operators.analytics import activity_pairs
-    from ..sources.snapshots import SnapshotTable
 
     activity = SnapshotTable(spark, activity_root)
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
 
-    def engagement_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def engagement_batch(batch_df: DataFrame, key: str) -> None:
         pairs = activity_pairs(batch_df)
         if activity.current_version() is not None:
             pairs = pairs.join(activity.read(), ["user_id", "day"], "left_anti")
-        activity.append_batch(pairs, f"{stream_id}#{batch_id}")
+        activity.append_batch(pairs, key)
 
-    writer = stream.writeStream.foreachBatch(engagement_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, engagement_batch)
 
 
 def start_incremental_cooccurrence_ingest(
@@ -974,11 +904,9 @@ def start_incremental_cooccurrence_ingest(
     delta_root: str,
     txn_dir: str,
     schema,
+    checkpoint_dir: str,
     cap: int | None = None,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int = 10,
-    stream_id: str = "cooccurrence_ingest",
 ) -> StreamingQuery:
     """EXACT incremental co-occurrence maintenance by DELTA-USER
     RECOMPUTE — the incremental-view-maintenance pattern for aggregates
@@ -1012,11 +940,6 @@ def start_incremental_cooccurrence_ingest(
         baskets_from_items,
         user_item_pairs,
     )
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     if cap is None:
         cap = _CO_USER_CAP
@@ -1025,14 +948,8 @@ def start_incremental_cooccurrence_ingest(
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def co_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([items_t, delta_t], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def co_batch(batch_df: DataFrame, key: str) -> None:
         batch_pairs = user_item_pairs(batch_df)
         have = items_t.read() if items_t.current_version() is not None else None
         novel = (
@@ -1067,20 +984,13 @@ def start_incremental_cooccurrence_ingest(
                 .filter(F.col("d") != 0)
             )
             txn = MultiTableTransaction([items_t, delta_t], txn_dir)
-            key = f"{stream_id}#{batch_id}"
             txn.stage_append(items_t, novel, batch_id=key)
             txn.stage_append(delta_t, delta, batch_id=key)
             txn.commit()
         finally:
             novel.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(co_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, co_batch, [items_t, delta_t], txn_dir)
 
 
 def start_incremental_funnel_ingest(
@@ -1088,10 +998,8 @@ def start_incremental_funnel_ingest(
     source_dir: str,
     state_root: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "funnel_ingest",
 ) -> StreamingQuery:
     """EXACT incremental funnel maintenance — the STATE-MACHINE member of
     the incremental family (sums: engagement/BM25/PCA; delta-recompute:
@@ -1120,19 +1028,13 @@ def start_incremental_funnel_ingest(
     ``overwrite(batch_id=...)`` protocol — replayed batches are skipped
     whole."""
     from ..operators.analytics import _FUNNEL
-    from ..sources.snapshots import SnapshotTable
 
     state_t = SnapshotTable(spark, state_root)
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def funnel_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            state["max_seen"] = _max_seen_batch([state_t], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def funnel_batch(batch_df: DataFrame, key: str) -> None:
         b = batch_df.filter(
             F.col("user_id").isNotNull() & F.col("event_type").isin(_FUNNEL)
         )
@@ -1221,280 +1123,9 @@ def start_incremental_funnel_ingest(
             new_state = carried.unionByName(updated)
         else:
             new_state = updated
-        state_t.overwrite(new_state, batch_id=f"{stream_id}#{batch_id}")
-        state["max_seen"] = batch_id
+        state_t.overwrite(new_state, batch_id=key)
 
-    writer = stream.writeStream.foreachBatch(funnel_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_incremental_rfm_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    state_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "rfm_ingest",
-) -> StreamingQuery:
-    """EXACT incremental RFM / user-lifecycle maintenance — the eighth
-    incremental path, in the MERGEABLE-SUMS class (with PCA moments, BM25
-    stats and engagement pairs): each batch appends its per-user partials
-    (min first-day, max last-day, event count, raw value sum — computed by
-    ``operators.analytics.rfm_user_partials``, the SAME pass the batch
-    operator uses) and serving merges them with one user-keyed agg.
-    ``rfm_from_user_state`` over the maintained table equals the batch
-    ``events_rfm_segments`` over everything ingested, and the same state's
-    d_first column serves first-day cohort slicing; cohort RETENTION needs
-    no extra state at all — it finalizes from the engagement ingest's
-    DISTINCT activity table via ``retention_from_activity`` (parity tests
-    in tests/test_streaming.py). At 100 TB this turns the lifecycle
-    dashboard from a full-fact scan into a |users|-bounded read.
-
-    min/max/sum partials are order-independent and duplicate-free by
-    construction, so — unlike the Markov and funnel state machines —
-    there is NO ordering contract: late and out-of-order events merge
-    exactly. One table, so exactly-once is the snapshot layer's
-    idempotent ``append_batch`` (namespaced batch key, replays skipped
-    whole). The partials log grows one row per (batch, touched user);
-    ``compact_user_state`` collapses it between drains without disturbing
-    replay protection. At real scale the state table would be bucketed on
-    user_id so the serve-side merge co-locates without a shuffle."""
-    from ..operators.analytics import rfm_user_partials
-    from ..sources.snapshots import SnapshotTable
-
-    state_t = SnapshotTable(spark, state_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def rfm_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state_t.append_batch(
-            rfm_user_partials(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(rfm_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_incremental_hourly_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    counts_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "hourly_ingest",
-) -> StreamingQuery:
-    """EXACT incremental (day, hour) traffic-count maintenance — the ninth
-    incremental path, mergeable-sums class: each batch appends its bucket
-    count partials (``operators.analytics.hourly_counts``, the SAME pass
-    the batch ops use) under the idempotent namespaced batch key; counts
-    are additive so late and out-of-order events merge exactly, with no
-    ordering contract. ``seasonality_from_counts`` and
-    ``anomalies_from_counts`` over the maintained table equal the batch
-    ``events_hourly_seasonality`` / ``events_hourly_anomalies`` over
-    everything ingested (parity test in tests/test_streaming.py) — which
-    completes the served-from-state dashboard: engagement, retention,
-    RFM, funnel, AND the seasonality/anomaly panel all finalize from
-    maintained tables bounded by users or calendar buckets, never a
-    full-fact re-scan. ``compact_hourly_counts`` collapses the partials
-    log between drains (overwrite keeps the key log → replay-safe)."""
-    from ..operators.analytics import hourly_counts
-    from ..sources.snapshots import SnapshotTable
-
-    counts_t = SnapshotTable(spark, counts_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def hourly_batch(batch_df: DataFrame, batch_id: int) -> None:
-        counts_t.append_batch(
-            hourly_counts(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(hourly_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_incremental_value_hist_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    hist_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "value_hist_ingest",
-) -> StreamingQuery:
-    """EXACT incremental per-type value-quantile maintenance — the
-    ELEVENTH incremental path, mergeable-sums class: each batch appends
-    its PINNED fixed-width (event_type, bin, c) histogram partials
-    (``operators.analytics.value_hist``, the SAME pass the batch op uses)
-    under the idempotent namespaced batch key. The bin function is pure
-    (floor(value / width), no data-derived edges), so counts are additive
-    forever — late and out-of-order events merge exactly, no ordering
-    contract, state bounded by value-span/width rows per type.
-    ``quantiles_from_value_hist`` over the maintained table equals the
-    batch ``events_value_quantiles`` over everything ingested (parity
-    test in tests/test_streaming.py): per-type p50/p90/p99 monitoring
-    serves from metadata-sized state, never a fact re-scan — this is how
-    a latency/price dashboard stays O(1) per refresh at 100 TB.
-    ``compact_value_hist`` collapses the partials log between drains
-    (overwrite keeps the key log → replay-safe)."""
-    from ..operators.analytics import value_hist
-    from ..sources.snapshots import SnapshotTable
-
-    hist_t = SnapshotTable(spark, hist_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def hist_batch(batch_df: DataFrame, batch_id: int) -> None:
-        hist_t.append_batch(value_hist(batch_df), f"{stream_id}#{batch_id}")
-
-    writer = stream.writeStream.foreachBatch(hist_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_value_hist(
-    spark: SparkSession, hist_root: str, compaction_id=None
-) -> None:
-    """Rewrite the value-histogram partials table as its per-(type, bin)
-    sum — a semantic no-op (readers merge either way); the overwrite
-    keeps the log so the stream's batch keys survive (the
-    compact_hourly_counts protocol)."""
-    from ..operators.analytics import merge_value_hist
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, hist_root)
-    t.overwrite(merge_value_hist(t.read()), batch_id=compaction_id)
-
-
-def start_incremental_corpus_rollup_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    cells_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "corpus_rollup_ingest",
-) -> StreamingQuery:
-    """EXACT incremental corpus-rollup maintenance — the TWELFTH
-    incremental path, mergeable-sums class, and the first DOC-side
-    dashboard path (the events side already serves engagement, retention,
-    RFM, funnel, seasonality, anomalies, sessions and value quantiles
-    from state): each batch appends its leaf (lang, source) cell partials
-    (``operators.textops.corpus_cells``, the SAME pass the batch rollup
-    uses) under the idempotent namespaced batch key. All three measures
-    are additive integer sums — late and out-of-order documents merge
-    exactly, no ordering contract, state bounded by |langs| × |sources|
-    rows. ``rollup_from_cells`` over the maintained table equals the
-    batch ``text_rollup_by_lang_source`` over everything ingested (parity
-    test in tests/test_streaming.py) — the corpus volume dashboard never
-    re-scans the corpus. ``compact_corpus_cells`` collapses the partials
-    log between drains (overwrite keeps the key log → replay-safe)."""
-    from ..operators.textops import corpus_cells
-    from ..sources.snapshots import SnapshotTable
-
-    cells_t = SnapshotTable(spark, cells_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def cells_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells_t.append_batch(corpus_cells(batch_df), f"{stream_id}#{batch_id}")
-
-    writer = stream.writeStream.foreachBatch(cells_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_corpus_cells(
-    spark: SparkSession, cells_root: str, compaction_id=None
-) -> None:
-    """Rewrite the corpus-cell partials table as its per-cell sum — a
-    semantic no-op (readers merge either way); the overwrite keeps the
-    log so the stream's batch keys survive (the compact_value_hist
-    protocol)."""
-    from ..operators.textops import merge_corpus_cells
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, cells_root)
-    t.overwrite(merge_corpus_cells(t.read()), batch_id=compaction_id)
-
-
-def start_incremental_shingle_index_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    index_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "shingle_index_ingest",
-) -> StreamingQuery:
-    """EXACT incremental shingle-index maintenance — the THIRTEENTH
-    incremental path, append-only-postings class (the BM25 postings
-    discipline on the dedup/decontamination shingle grain): each batch
-    appends its documents' DISTINCT (doc_id, shingle) posting rows
-    (``operators.dedup.doc_shingle_rows`` — the SAME shingle definition
-    the Jaccard/LSH/decontamination chain uses) under the idempotent
-    namespaced batch key. Each document arrives once (the corpus-rollup
-    contract), so postings from disjoint batches union to the full
-    corpus index exactly — no ordering contract, late documents merge
-    exactly. ``decontaminate_from_index`` over the maintained table
-    equals batch ``decontaminate_split`` over everything ingested
-    (parity test): the continuous-curation loop — "which of today's
-    train docs leak tomorrow's eval set" — serves from state, with the
-    document-frequency cap recomputed at query time over the maintained
-    postings, so a shingle that ONLY LATER crosses the boilerplate cap
-    is dropped exactly as the batch face would. State is
-    posting-cardinality (Σ per-doc distinct shingles) — the price of any
-    inverted index; ``compact_shingle_index`` collapses the per-batch
-    small files between drains (overwrite keeps the key log →
-    replay-safe)."""
-    from ..operators.dedup import doc_shingle_rows
-    from ..sources.snapshots import SnapshotTable
-
-    index_t = SnapshotTable(spark, index_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def index_batch(batch_df: DataFrame, batch_id: int) -> None:
-        index_t.append_batch(
-            doc_shingle_rows(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(index_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, funnel_batch, [state_t])
 
 
 def decontaminate_from_index(index: DataFrame) -> DataFrame:
@@ -1506,137 +1137,6 @@ def decontaminate_from_index(index: DataFrame) -> DataFrame:
     from ..operators.sampling import decon_from_postings
 
     return decon_from_postings(index)
-
-
-def compact_shingle_index(
-    spark: SparkSession, index_root: str, compaction_id=None
-) -> None:
-    """Rewrite the per-batch posting files as one compacted set — a
-    semantic no-op (the postings are already distinct rows; only the
-    file layout changes). The overwrite keeps the log so the stream's
-    batch keys survive (the compact_corpus_cells protocol)."""
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, index_root)
-    t.overwrite(t.read(), batch_id=compaction_id)
-
-
-def start_incremental_word_cells_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    cells_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "word_cells_ingest",
-) -> StreamingQuery:
-    """EXACT incremental tokenizer-training state — the NINETEENTH
-    incremental path, mergeable-sums class: each batch appends its
-    per-word-TYPE frequency partials (``operators.textops.
-    bpe_word_table`` — the SAME pre-tokenizer pass both trainers run)
-    under the idempotent namespaced batch key.  Frequencies are
-    additive integer sums, so partials from any batch split merge
-    exactly — no ordering contract, late documents exact, state bounded
-    by vocabulary (word types), not corpus bytes.
-
-    ``bpe_merges_from_word_cells(cells) ≡ train_bpe_merges`` and
-    ``unigram_vocab_from_word_cells(cells)`` ≡ the batch unigram
-    trainer over everything ingested (parity test): BOTH tokenizer
-    trainers re-run from a word-type-bounded state table instead of a
-    corpus re-scan — the "retrain the tokenizer nightly" loop at 100 TB
-    touches no document bytes.  ``compact_word_cells`` collapses the
-    per-batch partials between drains (overwrite keeps the key log →
-    replay-safe)."""
-    from ..operators.textops import bpe_word_table
-    from ..sources.snapshots import SnapshotTable
-
-    cells_t = SnapshotTable(spark, cells_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def cells_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells_t.append_batch(
-            bpe_word_table(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(cells_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_word_cells(
-    spark: SparkSession, cells_root: str, compaction_id=None
-) -> None:
-    """Rewrite the word-cells partials as their per-word merge — a
-    semantic no-op (readers merge either way). The overwrite keeps the
-    log so batch keys survive (the compact_source_token_cells
-    protocol)."""
-    from ..operators.textops import merge_word_cells
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, cells_root)
-    t.overwrite(merge_word_cells(t.read()), batch_id=compaction_id)
-
-
-def start_incremental_pricing_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    cells_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "pricing_ingest",
-) -> StreamingQuery:
-    """EXACT incremental TPC-H Q1 pricing state — the TWENTIETH
-    incremental path, mergeable-sums class on the RELATIONAL fact: each
-    lineitem batch appends its integer pricing partials
-    (``operators.relational.lineitem_pricing_cells`` — money as exact
-    cents/basis-point integers, numerators as decimal(38,0) sums) under
-    the idempotent namespaced batch key.  ``q1_from_pricing_cells``
-    over the maintained cells equals batch ``q1_pricing_summary`` over
-    everything ingested (parity test) — the pricing dashboard refreshes
-    from a |flag×status|-bounded state table instead of re-scanning the
-    fact, and the integer cells make the maintained face the MORE exact
-    of the two.  ``compact_pricing_cells`` collapses partials between
-    drains (overwrite keeps the key log → replay-safe)."""
-    from ..operators.relational import lineitem_pricing_cells
-    from ..sources.snapshots import SnapshotTable
-
-    cells_t = SnapshotTable(spark, cells_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def pricing_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells_t.append_batch(
-            lineitem_pricing_cells(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(pricing_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_pricing_cells(
-    spark: SparkSession, cells_root: str, compaction_id=None
-) -> None:
-    """Rewrite the pricing partials as their per-group merge — a
-    semantic no-op (readers merge either way); the overwrite keeps the
-    key log (the compact_word_cells protocol)."""
-    from ..operators.relational import merge_pricing_cells
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, cells_root)
-    t.overwrite(merge_pricing_cells(t.read()), batch_id=compaction_id)
 
 
 # Envelope schema for the TWENTY-FIRST path's interleaved fact stream:
@@ -1658,11 +1158,9 @@ def start_incremental_revenue_ingest(
     cells_root: str,
     txn_dir: str,
     cust_dim: DataFrame,
+    checkpoint_dir: str,
     schema=REVENUE_ENVELOPE_SCHEMA,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
     max_files_per_trigger: int = 10,
-    stream_id: str = "revenue_ingest",
 ) -> StreamingQuery:
     """EXACT incremental Q5 revenue-by-nation — the TWENTY-FIRST
     incremental path and the first JOIN-BEARING one: the maintained view
@@ -1702,11 +1200,6 @@ def start_incremental_revenue_ingest(
         _Q5_DATE_LO,
         lineitem_order_partials,
     )
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     li_t = SnapshotTable(spark, li_root)
     ord_t = SnapshotTable(spark, orders_root)
@@ -1714,16 +1207,8 @@ def start_incremental_revenue_ingest(
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def revenue_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch(
-                [li_t, ord_t, cells_t], stream_id
-            )
-        if batch_id <= state["max_seen"]:
-            return
+    def revenue_batch(batch_df: DataFrame, key: str) -> None:
         dl = lineitem_order_partials(
             batch_df.filter(F.col("kind") == "lineitem")
         ).persist()
@@ -1769,7 +1254,6 @@ def start_incremental_revenue_ingest(
                 )
             )
             txn = MultiTableTransaction([li_t, ord_t, cells_t], txn_dir)
-            key = f"{stream_id}#{batch_id}"
             txn.stage_append(li_t, dl, batch_id=key)
             txn.stage_append(ord_t, do, batch_id=key)
             txn.stage_append(cells_t, delta_cells, batch_id=key)
@@ -1777,136 +1261,9 @@ def start_incremental_revenue_ingest(
         finally:
             dl.unpersist()
             do.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(revenue_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_revenue_state(
-    spark: SparkSession,
-    li_root: str,
-    orders_root: str,
-    cells_root: str,
-    compaction_id=None,
-) -> None:
-    """Collapse the 21st path's three state tables between drains — a
-    semantic no-op for every future batch and for the serve face:
-    lineitem partials merge per order, cells merge per (r_name, n_name)
-    (both additive integer sums), orders rewrite as-is (already one row
-    per order; only file layout changes).  Overwrites keep the key logs
-    so replay protection survives (the compact_pricing_cells protocol)."""
-    from ..operators.relational import (
-        merge_order_partials,
-        merge_revenue_cells,
-    )
-    from ..sources.snapshots import SnapshotTable
-
-    li_t = SnapshotTable(spark, li_root)
-    li_t.overwrite(merge_order_partials(li_t.read()), batch_id=compaction_id)
-    ord_t = SnapshotTable(spark, orders_root)
-    ord_t.overwrite(ord_t.read(), batch_id=compaction_id)
-    cells_t = SnapshotTable(spark, cells_root)
-    cells_t.overwrite(
-        merge_revenue_cells(cells_t.read()), batch_id=compaction_id
-    )
-
-
-RECON_ENVELOPE_SCHEMA = (
-    "kind string, l_orderkey long, l_extendedprice double,"
-    " l_discount double, l_tax double, o_orderkey long, o_totalprice double"
-)
-
-
-def start_incremental_recon_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    state_root: str,
-    schema=RECON_ENVELOPE_SCHEMA,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "recon_ingest",
-) -> StreamingQuery:
-    """EXACT incremental order-reconciliation maintenance — the
-    TWENTY-SECOND incremental path, and the second one whose served view
-    is a JOIN (orders ⋈ lineitem rollup): where the 21st path needed the
-    delta-join identity (its aggregate groups by a DIMENSION attribute),
-    the reconciliation view joins header and lines ON THE AGGREGATION KEY
-    itself (o_orderkey), so the join degenerates into a per-key merge of
-    two additive partial families — no stored-side join at ingest at all:
-
-    - lineitem-kind rows pre-aggregate to per-order (line_cents, n_lines)
-      partials (``recon_line_partials`` — the SAME cents expression and
-      collapse the batch audit uses);
-    - order-kind rows become (hdr_cents, hdr_n=1) partials
-      (``recon_order_partials``);
-    - both append into ONE order-keyed state table with every column an
-      additive integer sum — the mergeable-sums IVM class: no ordering
-      contract, a lineitem landing batches before its header (or after
-      it, or split across batches) merges exactly, replay is a no-op
-      under the idempotent namespaced batch key.
-
-    ``reconciliation_from_state(state) ≡ order_reconciliation_audit``
-    over everything ingested (parity test across uneven interleaved
-    splits, out-of-order arrival both ways, replay, compaction).  At
-    100 TB the finance gate refreshes from |orders|-bounded state —
-    never re-scanning the lineitem fact."""
-    from ..operators.quality import recon_line_partials, recon_order_partials
-    from ..sources.snapshots import SnapshotTable
-
-    state_t = SnapshotTable(spark, state_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def recon_batch(batch_df: DataFrame, batch_id: int) -> None:
-        lines = recon_line_partials(
-            batch_df.filter(F.col("kind") == "lineitem")
-        ).select(
-            "k",
-            F.lit(0).cast("long").alias("hdr_cents"),
-            F.lit(0).cast("long").alias("hdr_n"),
-            "line_cents",
-            "n_lines",
-        )
-        hdrs = recon_order_partials(
-            batch_df.filter(F.col("kind") == "order")
-        ).select(
-            "k",
-            "hdr_cents",
-            "hdr_n",
-            F.lit(0).cast("long").alias("line_cents"),
-            F.lit(0).cast("long").alias("n_lines"),
-        )
-        state_t.append_batch(
-            lines.unionByName(hdrs), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(recon_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_recon_state(
-    spark: SparkSession, state_root: str, compaction_id=None
-) -> None:
-    """Collapse the 22nd path's partials log to one row per order — a
-    semantic no-op (all columns additive integer sums; overwrite keeps
-    the key log so replay protection survives)."""
-    from ..operators.quality import merge_recon_partials
-    from ..sources.snapshots import SnapshotTable
-
-    state_t = SnapshotTable(spark, state_root)
-    state_t.overwrite(
-        merge_recon_partials(state_t.read()), batch_id=compaction_id
+    return _start(
+        stream, checkpoint_dir, revenue_batch, [li_t, ord_t, cells_t], txn_dir
     )
 
 
@@ -1917,10 +1274,8 @@ def start_incremental_kgram_index_ingest(
     index_root: str,
     txn_dir: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "kgram_index_ingest",
 ) -> StreamingQuery:
     """EXACT incremental positional k-gram index maintenance — the
     EIGHTEENTH incremental path, append-only-postings class on the
@@ -1940,295 +1295,28 @@ def start_incremental_kgram_index_ingest(
     with the corpus-wide tokenize+hash pass paid once at ingest;
     serving re-tokenizes only span-bearing documents.  State is
     posting-cardinality (Σ per-doc window count ≈ corpus tokens — the
-    price of any positional index; compacted between drains by
-    ``compact_kgram_index``)."""
+    price of any positional index; :func:`compact` rewrites its per-batch
+    files between drains)."""
     from ..operators.dedup import es_tokenized, kgram_rows
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     corpus = SnapshotTable(spark, corpus_root)
     index_t = SnapshotTable(spark, index_root)
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
 
-    def index_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([corpus, index_t], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def index_batch(batch_df: DataFrame, key: str) -> None:
         txn = MultiTableTransaction([corpus, index_t], txn_dir)
-        key = f"{stream_id}#{batch_id}"
         txn.stage_append(corpus, batch_df, batch_id=key)
         txn.stage_append(index_t, kgram_rows(es_tokenized(batch_df)), batch_id=key)
         txn.commit()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(index_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, checkpoint_dir, index_batch, [corpus, index_t], txn_dir)
 
 
-def compact_kgram_index(
-    spark: SparkSession, index_root: str, compaction_id=None
-) -> None:
-    """Rewrite the per-batch k-gram posting files as one compacted set —
-    a semantic no-op (rows unchanged; only the file layout). The
-    overwrite keeps the log so the stream's batch keys survive (the
-    compact_shingle_index protocol)."""
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, index_root)
-    t.overwrite(t.read(), batch_id=compaction_id)
-
-
-ORDERS_ENVELOPE_SCHEMA = (
-    "o_orderkey long, o_custkey long, o_orderstatus string,"
-    " o_totalprice double, o_orderdate timestamp, o_orderpriority string"
-)
-
-
-def start_incremental_benford_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    cells_root: str,
-    schema=ORDERS_ENVELOPE_SCHEMA,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "benford_ingest",
-) -> StreamingQuery:
-    """EXACT incremental Benford digit counters — the TWENTY-FOURTH
-    incremental path, mergeable-sums class at its most extreme: each
-    order batch appends its (digit, n_obs) first-digit partials
-    (``operators.analytics.benford_digit_cells`` — the SAME leaf pass
-    the batch audit runs) under the idempotent namespaced batch key.
-    Counts are additive, so late/out-of-order orders merge exactly with
-    no ordering contract, and the ENTIRE maintained state is ≤ 9
-    counter rows — the forensic monitor (`benford_from_digit_cells` ≡
-    batch ``benford_digit_audit``) refreshes per drain from metadata,
-    never re-scanning the fact. A fabricated-amounts injection shows up
-    as a χ² jump on the next drain."""
-    from ..operators.analytics import benford_digit_cells
-    from ..sources.snapshots import SnapshotTable
-
-    cells_t = SnapshotTable(spark, cells_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def benford_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells_t.append_batch(
-            benford_digit_cells(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(benford_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_benford_cells(
-    spark: SparkSession, cells_root: str, compaction_id=None
-) -> None:
-    """Collapse the digit partials log to ≤9 rows — a semantic no-op
-    (additive sums; overwrite keeps the key log, replay-safe)."""
-    from ..operators.analytics import merge_benford_cells
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, cells_root)
-    t.overwrite(merge_benford_cells(t.read()), batch_id=compaction_id)
-
-
-EMBEDDING_ENVELOPE_SCHEMA = "vec_id long, embedding array<float>"
-
-
-def start_incremental_code_index_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    codes_root: str,
-    schema=EMBEDDING_ENVELOPE_SCHEMA,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "code_index_ingest",
-) -> StreamingQuery:
-    """EXACT incremental binary sign-code index — the TWENTY-THIRD
-    incremental path, append-only-projection class: each embedding batch
-    appends its 64-bit sign codes (``operators.similarity._sign_coded``
-    — the SAME packing the batch ``knn_hamming`` computes on the fly)
-    under the idempotent namespaced batch key.  The code is a pure
-    per-row function of the vector, and each vector arrives once, so
-    per-batch code appends union to exactly the full-corpus code table
-    — no ordering contract, no merge step, replay a no-op.
-
-    ``hamming_from_code_index(codes) ≡ knn_hamming`` over everything
-    ingested (parity test): the binary search face serves from a table
-    that is 16 bytes/vector — the "store the codes next to the vectors"
-    claim of the compression ladder made into maintained state; the
-    float embeddings are never re-read at query time.
-    ``compact_code_index`` collapses file layout between drains."""
-    from ..operators.similarity import _sign_coded
-    from ..sources.snapshots import SnapshotTable
-
-    codes_t = SnapshotTable(spark, codes_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def code_batch(batch_df: DataFrame, batch_id: int) -> None:
-        codes_t.append_batch(
-            _sign_coded(batch_df.filter(F.col("embedding").isNotNull())),
-            f"{stream_id}#{batch_id}",
-        )
-
-    writer = stream.writeStream.foreachBatch(code_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_code_index(
-    spark: SparkSession, codes_root: str, compaction_id=None
-) -> None:
-    """Rewrite the per-batch code files as one compacted set — a
-    semantic no-op (rows unchanged; the overwrite keeps the key log so
-    replay protection survives)."""
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, codes_root)
-    t.overwrite(t.read(), batch_id=compaction_id)
-
-
-def start_incremental_mixture_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    cells_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "mixture_ingest",
-) -> StreamingQuery:
-    """EXACT incremental mixture-weight maintenance — the FOURTEENTH
-    incremental path, mergeable-sums class: each batch appends its
-    per-source (n_docs, total_tokens) cell partials
-    (``operators.sampling.source_token_cells``, the SAME pass the batch
-    mixture planner uses) under the idempotent namespaced batch key.
-    Both measures are additive integer sums — late and out-of-order
-    documents merge exactly, no ordering contract, state bounded by
-    |sources| rows. ``mixture_from_token_cells`` over the maintained
-    table equals the batch ``domain_mixture_weights`` over everything
-    ingested (parity test in tests/test_streaming.py) — a continuously
-    ingesting training pipeline re-plans its sampling mixture per drain
-    from metadata-sized state instead of re-tokenizing the corpus.
-    ``compact_source_token_cells`` collapses the partials log between
-    drains (overwrite keeps the key log → replay-safe)."""
-    from ..operators.sampling import source_token_cells
-    from ..sources.snapshots import SnapshotTable
-
-    cells_t = SnapshotTable(spark, cells_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def cells_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells_t.append_batch(
-            source_token_cells(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(cells_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_source_token_cells(
-    spark: SparkSession, cells_root: str, compaction_id=None
-) -> None:
-    """Rewrite the source-cell partials table as its per-source sum — a
-    semantic no-op (readers merge either way); the overwrite keeps the
-    log so the stream's batch keys survive (the compact_corpus_cells
-    protocol)."""
-    from ..operators.sampling import merge_source_token_cells
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, cells_root)
-    t.overwrite(merge_source_token_cells(t.read()), batch_id=compaction_id)
-
-
-def start_incremental_daily_type_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    cells_root: str,
-    schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
-    max_files_per_trigger: int = 10,
-    stream_id: str = "daily_type_ingest",
-) -> StreamingQuery:
-    """EXACT incremental monitoring-series maintenance — the FIFTEENTH
-    incremental path, mergeable-sums class: each batch appends its
-    (event_type, day, n) count partials
-    (``operators.analytics.daily_type_cells``, the SAME pass the batch
-    monitoring grid uses) under the idempotent namespaced batch key.
-    The count is an additive integer sum — late and out-of-order events
-    merge exactly, no ordering contract, state bounded by
-    |types| × calendar days. ``grid_from_daily_cells`` over the
-    maintained table equals the batch ``daily_type_grid`` over
-    everything ingested, so BOTH monitoring faces — the CUSUM
-    changepoint and the seasonal-naive forecast backtest — serve from
-    metadata-sized state per refresh instead of a fact re-scan (parity
-    test in tests/test_streaming.py asserts the full backtest readout).
-    ``compact_daily_type_cells`` collapses the partials log between
-    drains (overwrite keeps the key log → replay-safe)."""
-    from ..operators.analytics import daily_type_cells
-    from ..sources.snapshots import SnapshotTable
-
-    cells_t = SnapshotTable(spark, cells_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def cells_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cells_t.append_batch(
-            daily_type_cells(batch_df), f"{stream_id}#{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(cells_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def compact_daily_type_cells(
-    spark: SparkSession, cells_root: str, compaction_id=None
-) -> None:
-    """Rewrite the daily-cell partials table as its per-(type, day) sum —
-    a semantic no-op (readers merge either way); the overwrite keeps the
-    log so the stream's batch keys survive (the compact_corpus_cells
-    protocol)."""
-    from ..operators.analytics import merge_daily_type_cells
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, cells_root)
-    t.overwrite(merge_daily_type_cells(t.read()), batch_id=compaction_id)
+# pending eq-delete files on an open-boundary table before the sessions and
+# SCD2 paths compact them away (each pending file costs readers one anti-join)
+_OPEN_COMPACT_EVERY = 4
 
 
 def apply_sessions_batch(
@@ -2247,10 +1335,6 @@ def apply_sessions_batch(
     drive the identical code path. Semantics, the order contract and the
     state shapes are documented on ``start_incremental_sessions_ingest``."""
     from ..operators.windows import _SESSION_GAP_S, session_rollup
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        transaction_batch_seen,
-    )
 
     if transaction_batch_seen([closed_t, open_t], key):
         return False
@@ -2401,7 +1485,7 @@ def apply_sessions_batch(
             # rewrite of the O(total-users) open set (the r10/r11 cost
             # finding; a CoW merge would rewrite every file whose user
             # range the batch touches, i.e. everything under a uniform
-            # user spread). compact_open_sessions() materializes the
+            # user spread). compact() materializes the
             # pending deletes periodically.
             txn.stage_upsert_keys(open_t, new_open, key="user_id", batch_id=key)
         txn.commit()
@@ -2449,11 +1533,6 @@ def apply_scd2_batch(
     O(batch-users) data dir + one O(batch-users) equality-delete file
     per batch, never a rewrite of the open set (the sessions r12
     machinery, measured flat in tests)."""
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        transaction_batch_seen,
-    )
-
     if transaction_batch_seen([closed_t, open_t], key):
         return False
     b = batch_df.filter(
@@ -2617,6 +1696,45 @@ def apply_scd2_batch(
         b.unpersist()
 
 
+def _start_boundary_ingest(
+    apply_batch,
+    spark: SparkSession,
+    source_dir: str,
+    closed_root: str,
+    open_root: str,
+    txn_dir: str,
+    schema,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+) -> StreamingQuery:
+    """The boundary-state paths' driver (sessions, SCD2): ``apply_batch``
+    commits the batch's closed rows and open-boundary upsert as one
+    transaction, then the open table's pending equality deletes are
+    compacted every few batches."""
+    closed_t = SnapshotTable(spark, closed_root)
+    open_t = SnapshotTable(spark, open_root)
+    stream = read_stream(
+        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
+    )
+
+    def boundary_batch(batch_df: DataFrame, key: str) -> None:
+        apply_batch(spark, closed_t, open_t, txn_dir, batch_df, key)
+        # bound the open table's pending delete-file count: readers pay
+        # one anti-join per pending eq-delete, so compact every few
+        # batches — the O(open-set) rewrite runs OFF the per-batch
+        # critical path (standard Iceberg maintenance cadence), keeping
+        # ingest latency O(batch)
+        deletes = (
+            open_t._snapshot(None).get("deletes", [])
+            if open_t.current_version() is not None
+            else []
+        )
+        if len(deletes) >= _OPEN_COMPACT_EVERY:
+            compact(spark, open_root)
+
+    return _start(stream, checkpoint_dir, boundary_batch, [closed_t, open_t], txn_dir)
+
+
 def start_incremental_scd2_ingest(
     spark: SparkSession,
     source_dir: str,
@@ -2624,10 +1742,8 @@ def start_incremental_scd2_ingest(
     open_root: str,
     txn_dir: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "scd2_ingest",
 ) -> StreamingQuery:
     """EXACT incremental SCD2 dimension maintenance — semantics, the
     order contract and per-batch cost are documented on
@@ -2640,39 +1756,10 @@ def start_incremental_scd2_ingest(
     Exactly-once via namespaced batch keys in one multi-table
     transaction; pending open-table deletes compact on the sessions
     cadence."""
-    from ..sources.snapshots import SnapshotTable, recover_transactions
-
-    closed_t = SnapshotTable(spark, closed_root)
-    open_t = SnapshotTable(spark, open_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
+    return _start_boundary_ingest(
+        apply_scd2_batch, spark, source_dir, closed_root, open_root, txn_dir,
+        schema, checkpoint_dir, max_files_per_trigger,
     )
-    state = {"max_seen": None}
-
-    def scd2_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([closed_t, open_t], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
-        apply_scd2_batch(
-            spark, closed_t, open_t, txn_dir, batch_df, f"{stream_id}#{batch_id}"
-        )
-        state["max_seen"] = batch_id
-        snap_deletes = (
-            open_t._snapshot(None).get("deletes", [])
-            if open_t.current_version() is not None
-            else []
-        )
-        if len(snap_deletes) >= _OPEN_COMPACT_EVERY:
-            compact_open_sessions(spark, open_root)
-
-    writer = stream.writeStream.foreachBatch(scd2_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_sessions_ingest(
@@ -2682,10 +1769,8 @@ def start_incremental_sessions_ingest(
     open_root: str,
     txn_dir: str,
     schema,
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "sessions_ingest",
 ) -> StreamingQuery:
     """EXACT incremental sessionization — the TENTH incremental path, in
     the BOUNDARY-STATE class (with Markov transitions): gap-based sessions
@@ -2723,69 +1808,19 @@ def start_incremental_sessions_ingest(
     id space, so every file's key range intersects every batch — which
     is exactly the case MoR deletes exist for. The read side
     (``sessions_from_state``) anti-joins the pending delete files;
-    ``compact_open_sessions`` materializes them periodically so the
+    ``compact`` on the open table materializes them periodically so the
     per-read delete-file count stays bounded (run it on the same cadence
     as the other paths' compactions).
 
     Exactly-once: the closed-session append and the open-boundary
     upsert commit in ONE multi-table transaction with namespaced
     batch keys; replayed batches are skipped whole."""
-    from ..sources.snapshots import SnapshotTable, recover_transactions
-
-    closed_t = SnapshotTable(spark, closed_root)
-    open_t = SnapshotTable(spark, open_root)
-    stream = read_stream(
-        spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
+    return _start_boundary_ingest(
+        apply_sessions_batch, spark, source_dir, closed_root, open_root, txn_dir,
+        schema, checkpoint_dir, max_files_per_trigger,
     )
-    state = {"max_seen": None}
-
-    def sessions_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([closed_t, open_t], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
-        apply_sessions_batch(
-            spark, closed_t, open_t, txn_dir, batch_df, f"{stream_id}#{batch_id}"
-        )
-        state["max_seen"] = batch_id
-        # bound the open table's pending delete-file count: readers pay
-        # one anti-join per pending eq-delete, so compact every few
-        # batches — the O(open-set) rewrite runs OFF the per-batch
-        # critical path (standard Iceberg maintenance cadence), keeping
-        # ingest latency O(batch)
-        snap_deletes = (
-            open_t._snapshot(None).get("deletes", [])
-            if open_t.current_version() is not None
-            else []
-        )
-        if len(snap_deletes) >= _OPEN_COMPACT_EVERY:
-            compact_open_sessions(spark, open_root)
-
-    writer = stream.writeStream.foreachBatch(sessions_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def compact_hourly_counts(
-    spark: SparkSession, counts_root: str, compaction_id=None
-) -> None:
-    """Rewrite the hourly-count partials table as its per-bucket sum — a
-    semantic no-op (readers merge either way); the overwrite keeps the
-    log so the stream's batch keys survive (the compact_user_state
-    protocol)."""
-    from ..operators.analytics import merge_hourly_counts
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, counts_root)
-    t.overwrite(merge_hourly_counts(t.read()), batch_id=compaction_id)
-
-
-# pending eq-delete files on the sessions open table before the streaming
-# closure compacts them away (each pending file costs readers one anti-join)
 def _resolve_merge_log(
     log: DataFrame, nodes: DataFrame, max_rounds: int = 64
 ) -> DataFrame:
@@ -2822,12 +1857,8 @@ def start_incremental_cluster_ingest(
     merges_root: str,
     txn_dir: str,
     schema,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    checkpoint_dir: str | None = None,
-    available_now: bool = True,
+    checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    stream_id: str = "cluster_ingest",
 ) -> StreamingQuery:
     """Exact incremental near-dup CLUSTER maintenance at ingest — the
     SEVENTEENTH maintenance path.  The batch face
@@ -2867,7 +1898,7 @@ def start_incremental_cluster_ingest(
     duplicate mass (≤ one event per doc ever in a cluster + one per
     cluster merge).
 
-    ``id_col`` contract: ids must be ORDERABLE and consistently typed
+    ``doc_id`` contract: ids must be ORDERABLE and consistently typed
     across batches — cluster labels are component minima and merge
     targets are strictly smaller than their source, so the id column's
     total order is load-bearing; the merge-log schema derives from the
@@ -2881,11 +1912,6 @@ def start_incremental_cluster_ingest(
         minhash_sig_bands,
         sig_agreement,
     )
-    from ..sources.snapshots import (
-        MultiTableTransaction,
-        SnapshotTable,
-        recover_transactions,
-    )
 
     corpus = SnapshotTable(spark, corpus_root)
     bands = SnapshotTable(spark, bands_root)
@@ -2893,15 +1919,10 @@ def start_incremental_cluster_ingest(
     stream = read_stream(
         spark, source_dir, schema=schema, max_files_per_trigger=max_files_per_trigger
     )
-    state = {"max_seen": None}
     band_arr = F.array(*[F.col(f"band{b}") for b in range(_MH_BANDS)])
+    id_col, text_col = "doc_id", "text"
 
-    def cluster_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if state["max_seen"] is None:
-            recover_transactions(spark, txn_dir)
-            state["max_seen"] = _max_seen_batch([corpus, bands, merges], stream_id)
-        if batch_id <= state["max_seen"]:
-            return
+    def cluster_batch(batch_df: DataFrame, key: str) -> None:
         sigs = minhash_sig_bands(batch_df, text_col).persist()
         try:
             # Collapse identical signatures first (the batch face's r15
@@ -3002,7 +2023,6 @@ def start_incremental_cluster_ingest(
                     F.col("sig").alias("seen_sig"),
                 )
                 txn = MultiTableTransaction([corpus, bands, merges], txn_dir)
-                key = f"{stream_id}#{batch_id}"
                 txn.stage_append(corpus, batch_df, batch_id=key)
                 txn.stage_append(bands, band_rows, batch_id=key)
                 txn.stage_append(merges, events, batch_id=key)
@@ -3011,28 +2031,21 @@ def start_incremental_cluster_ingest(
                 edges.unpersist()
         finally:
             sigs.unpersist()
-        state["max_seen"] = batch_id
 
-    writer = stream.writeStream.foreachBatch(cluster_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(
+        stream, checkpoint_dir, cluster_batch, [corpus, bands, merges], txn_dir
+    )
 
 
-def compact_cluster_merges(
-    spark: SparkSession, merges_root: str, compaction_id=None
-) -> None:
+def compact_cluster_merges(spark: SparkSession, merges_root: str) -> None:
     """Rewrite the cluster merge log as its fully-resolved depth-1 forest
     (node → final label) — a semantic no-op for readers (CC resolution
     gives the same roots either way) that bounds both the serve-side CC
     depth and the ingest-side pointer chase.  The overwrite appends a
-    commit and never erases the log, so the stream's namespaced batch
-    keys survive and replay protection is unaffected (the
-    ``compact_user_state`` protocol)."""
+    commit and never erases the log, so the stream's batch keys survive
+    and replay protection is unaffected (the :func:`compact`
+    protocol)."""
     from ..operators.dedup import _connected_components
-    from ..sources.snapshots import SnapshotTable
 
     t = SnapshotTable(spark, merges_root)
     log = t.read()
@@ -3048,66 +2061,23 @@ def compact_cluster_merges(
     flat = labels.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias("node"), F.col("cluster_id").alias("target")
     )
-    t.overwrite(flat, batch_id=compaction_id)
+    t.overwrite(flat)
 
 
-_OPEN_COMPACT_EVERY = 4
 
-
-def compact_open_sessions(
-    spark: SparkSession, open_root: str, compaction_id=None
-) -> None:
-    """Materialize the open-boundary table's pending merge-on-read
-    equality deletes (one per ingested batch) into plain data files — a
-    semantic no-op for readers that bounds ``sessions_from_state``'s
-    per-read delete-file anti-joins. The overwrite appends a commit and
-    never erases the log, so the stream's namespaced batch keys survive
-    and replay protection is unaffected (the ``compact_user_state``
-    protocol)."""
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, open_root)
-    t.overwrite(t.read(), batch_id=compaction_id)
-
-
-def compact_user_state(
-    spark: SparkSession, state_root: str, compaction_id=None
-) -> None:
-    """Rewrite the user-state partials table as its per-user merge — a
-    semantic no-op (readers merge either way) that collapses the
-    per-batch partial history to one row per user. Run between ingest
-    drains: the overwrite appends a commit, it never erases the log, so
-    the stream's namespaced batch keys survive and replay protection is
-    unaffected (the ``compact_cooccurrence_index`` protocol). Pass
-    ``compaction_id`` to make the compaction itself replay-safe if driven
-    from an at-least-once scheduler."""
-    from ..operators.analytics import merge_user_state
-    from ..sources.snapshots import SnapshotTable
-
-    t = SnapshotTable(spark, state_root)
-    t.overwrite(merge_user_state(t.read()), batch_id=compaction_id)
-
-
-def compact_cooccurrence_index(
-    spark: SparkSession, delta_root: str, compaction_id=None
-) -> None:
+def compact_cooccurrence_index(spark: SparkSession, delta_root: str) -> None:
     """Rewrite the co-occurrence delta table as its summed edges — a
     semantic no-op (readers sum either way) that collapses the ±1 batch
     history to one row per surviving pair. Run between ingest drains: the
     overwrite appends a commit, it never erases the log, so the stream's
-    namespaced batch keys survive and replay protection is unaffected
+    batch keys survive and replay protection is unaffected
     (``_max_seen_batch`` scans the full log). Zero-sum pairs are true
-    zeros and are dropped. Pass ``compaction_id`` to make the compaction
-    itself replay-safe if driven from an at-least-once scheduler."""
+    zeros and are dropped."""
     from ..operators.analytics import cooccurrence_edges_from_index
-    from ..sources.snapshots import SnapshotTable
 
     t = SnapshotTable(spark, delta_root)
     edges = cooccurrence_edges_from_index(t.read(), min_count=1)
-    t.overwrite(
-        edges.select("item_a", "item_b", F.col("co_users").alias("d")),
-        batch_id=compaction_id,
-    )
+    t.overwrite(edges.select("item_a", "item_b", F.col("co_users").alias("d")))
 
 
 def run_batch_ingest(
@@ -3116,7 +2086,4 @@ def run_batch_ingest(
     """The reference's original batch path (process_message → load_data_to_
     iceberg, spark_job.py:78-123) for explicit file lists: one append
     commit; returns the new version."""
-    from ..sources.ndjson import read_batch
-    from ..sources.snapshots import SnapshotTable
-
     return SnapshotTable(spark, table_root).append(enrich(read_batch(spark, files)))

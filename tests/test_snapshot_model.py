@@ -554,7 +554,7 @@ def test_markov_pair_stays_derived_from_ingested(spark, ops):
 
 # Round-9 derived-state model: the incremental-RFM user-state table. The
 # standing rule (every table-surface extension gets a fuzz op) applied to
-# start_incremental_rfm_ingest's single partials table: after ANY interleaving
+# start_cells_ingest(rfm_user_partials)'s single partials table: after ANY interleaving
 # of ingested batches, replayed batch keys, compactions (overwrite that must
 # keep the key log), snapshot expiry and maintenance, the per-user MERGE of
 # the state table must equal re-deriving the partials from everything
@@ -594,7 +594,7 @@ def test_rfm_user_state_stays_derived_from_ingested(spark, ops):
         rfm_user_partials,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import maintain_table
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact_user_state
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact
 
     root = tempfile.mkdtemp()
     state_t = SnapshotTable(spark, root + "/user_state")
@@ -638,7 +638,7 @@ def test_rfm_user_state_stays_derived_from_ingested(spark, ops):
         elif kind == "compact":
             if state_t.current_version() is None:
                 continue
-            compact_user_state(spark, root + "/user_state")
+            compact(spark, root + "/user_state", merge_user_state)
         elif kind == "expire":
             if state_t.current_version() is None:
                 continue
@@ -702,7 +702,7 @@ def test_hourly_counts_stay_derived_from_ingested(spark, ops):
         merge_hourly_counts,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import maintain_table
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact_hourly_counts
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact
 
     root = tempfile.mkdtemp()
     counts_t = SnapshotTable(spark, root + "/hourly")
@@ -737,7 +737,7 @@ def test_hourly_counts_stay_derived_from_ingested(spark, ops):
         elif kind == "compact":
             if counts_t.current_version() is None:
                 continue
-            compact_hourly_counts(spark, root + "/hourly")
+            compact(spark, root + "/hourly", merge_hourly_counts)
         elif kind == "expire":
             if counts_t.current_version() is None:
                 continue
@@ -800,7 +800,7 @@ def test_value_hist_stays_derived_from_ingested(spark, ops):
         value_hist,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import maintain_table
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact_value_hist
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact
 
     root = tempfile.mkdtemp()
     hist_t = SnapshotTable(spark, root + "/vhist")
@@ -836,7 +836,7 @@ def test_value_hist_stays_derived_from_ingested(spark, ops):
         elif kind == "compact":
             if hist_t.current_version() is None:
                 continue
-            compact_value_hist(spark, root + "/vhist")
+            compact(spark, root + "/vhist", merge_value_hist)
         elif kind == "expire":
             if hist_t.current_version() is None:
                 continue
@@ -899,7 +899,7 @@ def test_corpus_cells_stay_derived_from_ingested(spark, ops):
         merge_corpus_cells,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import maintain_table
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact_corpus_cells
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import compact
 
     root = tempfile.mkdtemp()
     cells_t = SnapshotTable(spark, root + "/cells")
@@ -933,7 +933,7 @@ def test_corpus_cells_stay_derived_from_ingested(spark, ops):
         elif kind == "compact":
             if cells_t.current_version() is None:
                 continue
-            compact_corpus_cells(spark, root + "/cells")
+            compact(spark, root + "/cells", merge_corpus_cells)
         elif kind == "expire":
             if cells_t.current_version() is None:
                 continue
@@ -1138,7 +1138,7 @@ def test_shingle_index_stays_derived_from_ingested(spark, ops):
         maintain_table,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_shingle_index,
+        compact,
     )
 
     root = tempfile.mkdtemp()
@@ -1177,7 +1177,7 @@ def test_shingle_index_stays_derived_from_ingested(spark, ops):
         elif kind == "compact":
             if index_t.current_version() is None:
                 continue
-            compact_shingle_index(spark, root + "/shidx")
+            compact(spark, root + "/shidx")
         elif kind == "expire":
             if index_t.current_version() is None:
                 continue

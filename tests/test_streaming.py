@@ -128,6 +128,33 @@ def test_streaming_ingest_exactly_once_restart(spark, tmp_path, gps_dir):
     q3 = start_snapshot_ingest(spark, gps_dir, table.root, checkpoint_dir=ckpt)
     q3.awaitTermination(120)
     assert table.read().count() == 16
+    # a second source streamed into the same table through its own
+    # checkpoint: its batch numbers restart at 0 and must not be taken for
+    # replays of the first stream's batches
+    site_b = tmp_path / "site_b"
+    site_b.mkdir()
+    for i in range(3):
+        _write_ndjson(
+            site_b / f"b{i}.json",
+            [_gps_record(vehicle_id=f"veh0001{i}", ts="2024-01-01 11:00:00")],
+        )
+    q4 = start_snapshot_ingest(
+        spark,
+        str(site_b),
+        table.root,
+        checkpoint_dir=str(tmp_path / "ckpt_b"),
+        max_files_per_trigger=1,
+    )
+    q4.awaitTermination(120)
+    out = table.read()
+    assert out.count() == 19
+    assert out.filter(F.col("vehicle_id") == "veh00003").count() == 1
+    site_b_rows = out.filter(F.col("vehicle_id").startswith("veh0001"))
+    assert sorted(r[0] for r in site_b_rows.select("vehicle_id").collect()) == [
+        "veh00010",
+        "veh00011",
+        "veh00012",
+    ]
 
 
 def _drain_to_memory(df, name, timeout=120):
@@ -532,6 +559,24 @@ def test_enrich_batch_matches_reference_shape(spark, gps_dir):
     assert df.columns[-3:] == ["input_file", "processed_time", "processed_date"]
     row = df.limit(1).collect()[0]
     assert row.processed_date == time.strftime("%Y-%m-%d")
+    # the ingest module imports its operators lazily, per path: importing
+    # it (the reference pipeline's entry point) loads no operator module
+    import subprocess
+    import sys
+
+    probe = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import sys, streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest;"
+            " print(sorted(m for m in sys.modules if '.operators' in m))",
+        ],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert probe.stdout.strip() == "[]"
 
 
 def test_stream_static_join(spark, tmp_path, gps_dir):
@@ -1999,14 +2044,15 @@ def test_incremental_rfm_ingest_matches_batch(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.analytics import (
+        merge_user_state,
         retention_from_activity,
         rfm_from_user_state,
         rfm_user_partials,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import SnapshotTable
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_user_state,
-        start_incremental_rfm_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     src = tmp_path / "events"
@@ -2042,12 +2088,13 @@ def test_incremental_rfm_ingest_matches_batch(spark, tmp_path):
     schema = "event_id long, ts long, user_id long, value double"
 
     def drain():
-        q = start_incremental_rfm_ingest(
+        q = start_cells_ingest(
             spark,
             str(src),
             state_root,
+            ckpt,
+            rfm_user_partials,
             schema=schema,
-            checkpoint_dir=ckpt,
             max_files_per_trigger=1,
         )
         q.awaitTermination(120)
@@ -2081,7 +2128,7 @@ def test_incremental_rfm_ingest_matches_batch(spark, tmp_path):
 
     # compaction: semantic no-op, one row per user afterwards
     v_before = state_t.current_version()
-    compact_user_state(spark, state_root)
+    compact(spark, state_root, merge_user_state)
     assert canon(rfm_from_user_state(state_t.read())) == want
     assert state_t.read().count() == 4
     assert state_t.current_version() > v_before
@@ -2119,12 +2166,13 @@ def test_incremental_hourly_ingest_matches_batch(spark, tmp_path):
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.analytics import (
         anomalies_from_counts,
         hourly_counts,
+        merge_hourly_counts,
         seasonality_from_counts,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import SnapshotTable
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_hourly_counts,
-        start_incremental_hourly_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     src = tmp_path / "events"
@@ -2152,12 +2200,13 @@ def test_incremental_hourly_ingest_matches_batch(spark, tmp_path):
     schema = "event_id long, ts long, user_id long"
 
     def drain():
-        q = start_incremental_hourly_ingest(
+        q = start_cells_ingest(
             spark,
             str(src),
             counts_root,
+            ckpt,
+            hourly_counts,
             schema=schema,
-            checkpoint_dir=ckpt,
             max_files_per_trigger=1,
         )
         q.awaitTermination(120)
@@ -2181,7 +2230,7 @@ def test_incremental_hourly_ingest_matches_batch(spark, tmp_path):
     assert want_seas and want_anom
 
     # compaction: semantic no-op, one row per bucket, replay still blocked
-    compact_hourly_counts(spark, counts_root)
+    compact(spark, counts_root, merge_hourly_counts)
     assert canon(seasonality_from_counts(counts_t.read())) == want_seas
     distinct_buckets = hc.count()
     assert counts_t.read().count() == distinct_buckets
@@ -2203,13 +2252,14 @@ def test_incremental_value_hist_ingest_matches_batch(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.analytics import (
+        merge_value_hist,
         quantiles_from_value_hist,
         value_hist,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import SnapshotTable
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_value_hist,
-        start_incremental_value_hist_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     src = tmp_path / "events"
@@ -2234,12 +2284,13 @@ def test_incremental_value_hist_ingest_matches_batch(spark, tmp_path):
     schema = "event_id long, event_type string, value double"
 
     def drain():
-        q = start_incremental_value_hist_ingest(
+        q = start_cells_ingest(
             spark,
             str(src),
             hist_root,
+            ckpt,
+            value_hist,
             schema=schema,
-            checkpoint_dir=ckpt,
             max_files_per_trigger=1,
         )
         q.awaitTermination(120)
@@ -2258,7 +2309,7 @@ def test_incremental_value_hist_ingest_matches_batch(spark, tmp_path):
     assert canon(quantiles_from_value_hist(hist_t.read())) == want and want
 
     # compaction: semantic no-op, one row per (type, bin), replay blocked
-    compact_value_hist(spark, hist_root)
+    compact(spark, hist_root, merge_value_hist)
     assert canon(quantiles_from_value_hist(hist_t.read())) == want
     assert hist_t.read().count() == vh.count()
     v = hist_t.current_version()
@@ -2280,12 +2331,13 @@ def test_incremental_corpus_rollup_ingest_matches_batch(spark, tmp_path):
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.textops import (
         corpus_cells,
+        merge_corpus_cells,
         rollup_from_cells,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import SnapshotTable
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_corpus_cells,
-        start_incremental_corpus_rollup_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     src = tmp_path / "docs"
@@ -2309,12 +2361,13 @@ def test_incremental_corpus_rollup_ingest_matches_batch(spark, tmp_path):
     schema = "doc_id long, lang string, source string, n_chars long"
 
     def drain():
-        q = start_incremental_corpus_rollup_ingest(
+        q = start_cells_ingest(
             spark,
             str(src),
             cells_root,
+            ckpt,
+            corpus_cells,
             schema=schema,
-            checkpoint_dir=ckpt,
             max_files_per_trigger=1,
         )
         q.awaitTermination(120)
@@ -2333,7 +2386,7 @@ def test_incremental_corpus_rollup_ingest_matches_batch(spark, tmp_path):
     want = canon(rollup_from_cells(cells))
     assert canon(rollup_from_cells(cells_t.read())) == want and want
 
-    compact_corpus_cells(spark, cells_root)
+    compact(spark, cells_root, merge_corpus_cells)
     assert canon(rollup_from_cells(cells_t.read())) == want
     assert cells_t.read().count() == cells.count()
     v = cells_t.current_version()
@@ -2470,7 +2523,7 @@ def test_sessions_open_table_batch_cost_is_o_batch(spark, tmp_path):
     merge-on-read upsert): after a batch touching ONE user of many, the
     commit's new data dir holds exactly that user's row — never a rewrite
     of the whole open set — and a pending equality delete supersedes the
-    user's old row; compact_open_sessions materializes the deletes
+    user's old row; compact materializes the deletes
     without changing what readers see."""
     import pyarrow.parquet as pq
 
@@ -2479,7 +2532,7 @@ def test_sessions_open_table_batch_cost_is_o_batch(spark, tmp_path):
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
         apply_sessions_batch,
-        compact_open_sessions,
+        compact,
     )
 
     closed_t = SnapshotTable(spark, str(tmp_path / "closed"))
@@ -2523,7 +2576,7 @@ def test_sessions_open_table_batch_cost_is_o_batch(spark, tmp_path):
     assert closed_t.read().filter("user_id = 7").count() == 1
 
     before = sorted(tuple(r) for r in open_t.read().collect())
-    compact_open_sessions(spark, str(tmp_path / "open"))
+    compact(spark, str(tmp_path / "open"))
     assert not open_t._snapshot(None).get("deletes")
     assert sorted(tuple(r) for r in open_t.read().collect()) == before
 
@@ -2544,10 +2597,13 @@ def test_incremental_shingle_index_matches_batch_decontamination(spark, tmp_path
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
         SnapshotTable,
     )
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.dedup import (
+        doc_shingle_rows,
+    )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_shingle_index,
+        compact,
         decontaminate_from_index,
-        start_incremental_shingle_index_ingest,
+        start_cells_ingest,
     )
 
     def split_of(doc_id):
@@ -2581,9 +2637,14 @@ def test_incremental_shingle_index_matches_batch_decontamination(spark, tmp_path
     schema = "doc_id long, text string, lang string, source string, n_chars long"
 
     def drain():
-        q = start_incremental_shingle_index_ingest(
-            spark, str(src), index_root, schema=schema,
-            checkpoint_dir=ckpt, max_files_per_trigger=1,
+        q = start_cells_ingest(
+            spark,
+            str(src),
+            index_root,
+            ckpt,
+            doc_shingle_rows,
+            schema=schema,
+            max_files_per_trigger=1,
         )
         q.awaitTermination(120)
 
@@ -2611,7 +2672,7 @@ def test_incremental_shingle_index_matches_batch_decontamination(spark, tmp_path
     drain()
     assert index_t.read().count() == n_before
     # compaction: semantic no-op, replay still blocked after it
-    compact_shingle_index(spark, index_root)
+    compact(spark, index_root)
     assert canon(decontaminate_from_index(index_t.read())) == want
     drain()
     assert index_t.read().count() == n_before
@@ -2628,13 +2689,14 @@ def test_incremental_mixture_ingest_matches_batch(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.sampling import (
+        merge_source_token_cells,
         mixture_from_token_cells,
         source_token_cells,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import SnapshotTable
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_source_token_cells,
-        start_incremental_mixture_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     src = tmp_path / "docs"
@@ -2661,12 +2723,13 @@ def test_incremental_mixture_ingest_matches_batch(spark, tmp_path):
     schema = "doc_id long, source string, text string"
 
     def drain():
-        q = start_incremental_mixture_ingest(
+        q = start_cells_ingest(
             spark,
             str(src),
             cells_root,
+            ckpt,
+            source_token_cells,
             schema=schema,
-            checkpoint_dir=ckpt,
             max_files_per_trigger=1,
         )
         q.awaitTermination(120)
@@ -2683,7 +2746,7 @@ def test_incremental_mixture_ingest_matches_batch(spark, tmp_path):
     want = canon(mixture_from_token_cells(source_token_cells(batch_df)))
     assert canon(mixture_from_token_cells(cells_t.read())) == want and want
 
-    compact_source_token_cells(spark, cells_root)
+    compact(spark, cells_root, merge_source_token_cells)
     assert canon(mixture_from_token_cells(cells_t.read())) == want
     # compaction collapsed the two per-batch partial sets to one row per
     # distinct source key (web/books/None revisited across batches)
@@ -2711,11 +2774,12 @@ def test_incremental_daily_type_ingest_matches_batch(spark, tmp_path):
         daily_type_cells,
         daily_type_grid,
         grid_from_daily_cells,
+        merge_daily_type_cells,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import SnapshotTable
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_daily_type_cells,
-        start_incremental_daily_type_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     src = tmp_path / "events"
@@ -2744,12 +2808,13 @@ def test_incremental_daily_type_ingest_matches_batch(spark, tmp_path):
     schema = "event_id long, ts timestamp, event_type string"
 
     def drain():
-        q = start_incremental_daily_type_ingest(
+        q = start_cells_ingest(
             spark,
             str(src),
             cells_root,
+            ckpt,
+            daily_type_cells,
             schema=schema,
-            checkpoint_dir=ckpt,
             max_files_per_trigger=1,
         )
         q.awaitTermination(120)
@@ -2803,7 +2868,7 @@ def test_incremental_daily_type_ingest_matches_batch(spark, tmp_path):
         theil_sen_from_grid(grid_from_daily_cells(cells_t.read()))
     ) == want_ts and want_ts
 
-    compact_daily_type_cells(spark, cells_root)
+    compact(spark, cells_root, merge_daily_type_cells)
     assert canon(grid_from_daily_cells(cells_t.read())) == want_grid
     assert canon(autocorr_from_daily_cells_input(cells_t.read())) == want_perday
     assert cells_t.read().count() == daily_type_cells(batch_df).count()
@@ -2823,6 +2888,8 @@ def test_incremental_pricing_ingest_matches_batch_q1(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.relational import (
+        lineitem_pricing_cells,
+        merge_pricing_cells,
         q1_from_pricing_cells,
         q1_pricing_summary,
     )
@@ -2830,8 +2897,8 @@ def test_incremental_pricing_ingest_matches_batch_q1(spark, tmp_path):
         SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_pricing_cells,
-        start_incremental_pricing_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -2850,8 +2917,13 @@ def test_incremental_pricing_ingest_matches_batch_q1(spark, tmp_path):
     )
 
     def drain():
-        q = start_incremental_pricing_ingest(
-            spark, str(src), cells_root, schema=schema, checkpoint_dir=ckpt
+        q = start_cells_ingest(
+            spark,
+            str(src),
+            cells_root,
+            ckpt,
+            lineitem_pricing_cells,
+            schema=schema,
         )
         q.awaitTermination(120)
 
@@ -2878,7 +2950,7 @@ def test_incremental_pricing_ingest_matches_batch_q1(spark, tmp_path):
     assert cells.read().count() == n
 
     # compaction: one row per group, report unchanged
-    compact_pricing_cells(spark, cells_root)
+    compact(spark, cells_root, merge_pricing_cells)
     merged = cells.read()
     assert merged.count() == merged.select(
         "l_returnflag", "l_linestatus"
@@ -2901,6 +2973,8 @@ def test_incremental_revenue_ingest_matches_batch_q5(spark, tmp_path):
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.relational import (
         customer_nation_dim,
+        merge_order_partials,
+        merge_revenue_cells,
         q5_from_revenue_cells,
         q5_revenue_by_nation,
     )
@@ -2908,7 +2982,7 @@ def test_incremental_revenue_ingest_matches_batch_q5(spark, tmp_path):
         SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_revenue_state,
+        compact,
         start_incremental_revenue_ingest,
     )
 
@@ -2996,9 +3070,9 @@ def test_incremental_revenue_ingest_matches_batch_q5(spark, tmp_path):
     assert [tuple(r) for r in q5_from_revenue_cells(cells.read()).collect()] == want
 
     # compaction: one partial per order, one row per cell, report unchanged
-    compact_revenue_state(
-        spark, roots["li_state"], roots["ord_state"], roots["cells"]
-    )
+    compact(spark, roots["li_state"], merge_order_partials)
+    compact(spark, roots["ord_state"])
+    compact(spark, roots["cells"], merge_revenue_cells)
     assert li_t.read().count() == len(li_keys)
     m = cells.read()
     assert m.count() == m.select("r_name", "n_name").distinct().count()
@@ -3016,14 +3090,17 @@ def test_incremental_benford_cells_match_batch(spark, tmp_path):
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.analytics import (
         benford_digit_audit,
+        benford_digit_cells,
         benford_from_digit_cells,
+        merge_benford_cells,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
         SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_benford_cells,
-        start_incremental_benford_ingest,
+        ORDERS_ENVELOPE_SCHEMA,
+        compact,
+        start_cells_ingest,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -3034,8 +3111,13 @@ def test_incremental_benford_cells_match_batch(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
-        q = start_incremental_benford_ingest(
-            spark, str(src), cells_root, checkpoint_dir=ckpt
+        q = start_cells_ingest(
+            spark,
+            str(src),
+            cells_root,
+            ckpt,
+            benford_digit_cells,
+            schema=ORDERS_ENVELOPE_SCHEMA,
         )
         q.awaitTermination(120)
 
@@ -3067,7 +3149,7 @@ def test_incremental_benford_cells_match_batch(spark, tmp_path):
     n = cells_t.read().count()
     drain()
     assert cells_t.read().count() == n
-    compact_benford_cells(spark, cells_root)
+    compact(spark, cells_root, merge_benford_cells)
     assert cells_t.read().count() <= 9
     assert [
         tuple(r)
@@ -3095,6 +3177,7 @@ def test_incremental_code_index_serves_hamming(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.similarity import (
+        code_index_rows,
         hamming_from_code_index,
         knn_hamming,
     )
@@ -3102,8 +3185,9 @@ def test_incremental_code_index_serves_hamming(spark, tmp_path):
         SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_code_index,
-        start_incremental_code_index_ingest,
+        EMBEDDING_ENVELOPE_SCHEMA,
+        compact,
+        start_cells_ingest,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -3116,8 +3200,13 @@ def test_incremental_code_index_serves_hamming(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
-        q = start_incremental_code_index_ingest(
-            spark, str(src), codes_root, checkpoint_dir=ckpt
+        q = start_cells_ingest(
+            spark,
+            str(src),
+            codes_root,
+            ckpt,
+            code_index_rows,
+            schema=EMBEDDING_ENVELOPE_SCHEMA,
         )
         q.awaitTermination(120)
 
@@ -3145,7 +3234,7 @@ def test_incremental_code_index_serves_hamming(spark, tmp_path):
     assert n == len(rows)
     drain()
     assert codes_t.read().count() == n
-    compact_code_index(spark, codes_root)
+    compact(spark, codes_root)
     assert codes_t.read().count() == n
     assert [
         tuple(r) for r in hamming_from_code_index(codes_t.read()).collect()
@@ -3164,15 +3253,18 @@ def test_incremental_recon_ingest_matches_batch_audit(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.quality import (
+        merge_recon_partials,
         order_reconciliation_audit,
+        recon_partials,
         reconciliation_from_state,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
         SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_recon_state,
-        start_incremental_recon_ingest,
+        RECON_ENVELOPE_SCHEMA,
+        compact,
+        start_cells_ingest,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -3192,8 +3284,13 @@ def test_incremental_recon_ingest_matches_batch_audit(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
-        q = start_incremental_recon_ingest(
-            spark, str(src), state_root, checkpoint_dir=ckpt
+        q = start_cells_ingest(
+            spark,
+            str(src),
+            state_root,
+            ckpt,
+            recon_partials,
+            schema=RECON_ENVELOPE_SCHEMA,
         )
         q.awaitTermination(120)
 
@@ -3256,7 +3353,7 @@ def test_incremental_recon_ingest_matches_batch_audit(spark, tmp_path):
 
     # compaction: one row per order key (incl. the pending orphan),
     # report unchanged
-    compact_recon_state(spark, state_root)
+    compact(spark, state_root, merge_recon_partials)
     m = state_t.read()
     assert m.count() == m.select("k").distinct().count()
     assert 10**12 in {r.k for r in m.select("k").collect()}
@@ -3274,17 +3371,19 @@ def test_incremental_word_cells_ingest_serves_both_trainers(spark, tmp_path):
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.textops import (
+        _uni_state,
         bpe_merges_from_word_cells,
+        bpe_word_table,
+        merge_word_cells,
         train_bpe_merges,
         unigram_vocab_from_word_cells,
-        _uni_state,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources.snapshots import (
         SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_word_cells,
-        start_incremental_word_cells_ingest,
+        compact,
+        start_cells_ingest,
     )
 
     texts = [
@@ -3301,12 +3400,13 @@ def test_incremental_word_cells_ingest_serves_both_trainers(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def drain():
-        q = start_incremental_word_cells_ingest(
+        q = start_cells_ingest(
             spark,
             str(src),
             cells_root,
+            ckpt,
+            bpe_word_table,
             schema="doc_id long, text string",
-            checkpoint_dir=ckpt,
         )
         q.awaitTermination(120)
 
@@ -3340,7 +3440,7 @@ def test_incremental_word_cells_ingest_serves_both_trainers(spark, tmp_path):
     assert cells.read().count() == n
 
     # compaction: one row per word type, training unchanged
-    compact_word_cells(spark, cells_root)
+    compact(spark, cells_root, merge_word_cells)
     merged = cells.read()
     assert merged.count() == merged.select("word").distinct().count()
     assert (
@@ -3372,7 +3472,7 @@ def test_incremental_kgram_index_matches_batch_exact_substr(spark, tmp_path):
         SnapshotTable,
     )
     from streaming_data_pipeline_with_iceberg_and_spark_spark.streaming.ingest import (
-        compact_kgram_index,
+        compact,
         start_incremental_kgram_index_ingest,
     )
 
@@ -3457,7 +3557,7 @@ def test_incremental_kgram_index_matches_batch_exact_substr(spark, tmp_path):
     assert index_t.current_version() == v and serve() == got
 
     # compaction: semantic no-op
-    compact_kgram_index(spark, index_root)
+    compact(spark, index_root)
     assert serve() == got
 
     # r15: the SAME maintained index serves span-level eval
