@@ -15,14 +15,29 @@ Layout (one table)::
     <root>/metadata/manifest-s<id>.json per-file column min/max stats for the
                                         files commit <id> added (the "manifest")
 
-A snapshot is ``{"id", "op", "dirs", "ts"}`` where ``dirs`` is the list of
-data directories (or, after a copy-on-write MERGE/DELETE, individual
-carried-forward data files) visible at that version. Append commits parent
-dirs + one new dir; overwrite and compaction commit exactly one new dir.
-Reads resolve a version to its dirs and hand Spark a multi-path parquet scan
-— partition pruning, pushdown and column pruning all still apply, and
+The log is an add/remove log: each entry records only what its commit
+changed, in one of two shapes.
+
+- A **delta** entry holds ``add`` (paths that become visible), ``remove``
+  (paths that stop being visible) and ``add_deletes`` (new merge-on-read
+  deletes), plus its op fields (``batch_id``, ``props``, ``spec``, ...).
+  Appends, CoW rewrites, MOR deletes and metadata-only ops write deltas.
+  A CoW rewrite removes each visible path it touched and adds back that
+  path's untouched files, so replaying the log never lists a directory.
+- A **full-state** entry holds ``dirs`` (the whole visible set) and
+  optional ``deletes``. Only commits that replace the visible set write
+  one: overwrite, compaction, full clustering, rollback.
+
+One fold (``SnapshotTable._states``) replays the entries in commit order
+and is the only code that turns them into a version's state: its visible
+``dirs`` (data directories or, after a CoW rewrite split a directory,
+individual files) and its pending ``deletes``. A new eq/pred delete is
+scoped to the dirs visible at its parent, so no entry stores that list.
+Reads resolve a version to its dirs and hand Spark a multi-path parquet
+scan — partition pruning, pushdown and column pruning all still apply, and
 executors never touch the metadata log (it is a driver-side pointer swap,
-exactly Iceberg's commit model).
+exactly Iceberg's commit model). This is the action-log shape of Delta
+Lake's transaction log and of Structured Streaming's file-sink log.
 
 Manifests make the two scale features possible without touching data bytes:
 
@@ -37,12 +52,12 @@ Manifests make the two scale features possible without touching data bytes:
 
 Commits use Iceberg's optimistic-concurrency protocol: data files are
 written outside any lock, then the metadata swap happens under a short
-exclusive lock (O_CREAT|O_EXCL lock file) — append-shaped commits union
-their files with whatever parent is current, rewrite-shaped commits
-(merge/delete/compact/cluster) validate they still sit on the version they
-read and raise :class:`SnapshotConflict` to be retried otherwise. The
-streaming path (``append_batch``) remains one-writer-per-checkpoint by
-construction, as a checkpointed stream is.
+exclusive lock (O_CREAT|O_EXCL lock file). Delta entries commute with any
+commit that lands first, so appends need no validation; rewrite-shaped
+commits (merge/delete/compact/cluster) validate they still sit on the
+version they read and raise :class:`SnapshotConflict` to be retried
+otherwise. The streaming path (``append_batch``) remains
+one-writer-per-checkpoint by construction, as a checkpointed stream is.
 
 Feature map (each row test-gated; see COVERAGE.md's Iceberg-parity matrix):
 
@@ -329,15 +344,7 @@ class SnapshotTable:
         for t in new_spec:
             if t[0] not in ("identity", "days", "hours", "months", "truncate", "bucket"):
                 raise SnapshotError(f"unknown partition transform {t!r}")
-        entry = {
-            "op": "partition-spec",
-            "spec": [list(t) for t in new_spec],
-            "dirs": list(snap["dirs"]),
-        }
-        if snap.get("deletes"):
-            # a metadata-only commit must CARRY pending MOR deletes — an
-            # entry without them would silently resurrect deleted rows
-            entry["deletes"] = snap["deletes"]
+        entry = {"op": "partition-spec", "spec": [list(t) for t in new_spec]}
         return self._commit(entry, expected_parent=snap["id"])["id"]
 
     def _apply_layout(self, df: DataFrame, n_files: int | None = None) -> DataFrame:
@@ -432,25 +439,19 @@ class SnapshotTable:
             os.close(fd)
             os.remove(lock)
 
-    def _commit(
-        self,
-        entry: dict,
-        new_dirs: list[str] | None = None,
-        expected_parent: int | None = None,
-    ) -> dict:
+    def _commit(self, entry: dict, expected_parent: int | None = None) -> dict:
         """Optimistic-concurrency commit (Iceberg's protocol): the log is
         re-read UNDER an exclusive lock, validated, and swapped atomically
         (write-new + rename — a torn write can never corrupt published
         versions).
 
-        ``new_dirs`` marks an APPEND-shaped commit: the visible file set is
-        recomputed under the lock as current-parent + new_dirs, so two
-        concurrent appenders serialize and neither loses the other's files.
-        ``expected_parent`` marks a REWRITE-shaped commit (merge/delete/
-        compact/cluster): it must land on exactly the version it read, or
-        it raises :class:`SnapshotConflict` for the caller to retry against
-        fresh state — silently committing would drop rows a concurrent
-        append added to the rewritten files."""
+        A delta entry (see the module docstring) lands on whatever parent is
+        current, so two concurrent appenders serialize and neither loses
+        the other's files. ``expected_parent`` marks a REWRITE-shaped commit
+        (merge/delete/compact/cluster): it must land on exactly the version
+        it read, or it raises :class:`SnapshotConflict` for the caller to
+        retry against fresh state — silently committing would drop rows a
+        concurrent append added to the rewritten files."""
         with self._locked():
             log = self._log()
             if expected_parent is not None:
@@ -460,15 +461,6 @@ class SnapshotTable:
                         f"commit based on version {expected_parent} but table "
                         f"is now at {current}; re-read and retry"
                     )
-            if new_dirs is not None:
-                parent_dirs = log[-1]["dirs"] if log else []
-                entry["dirs"] = parent_dirs + new_dirs
-                pdel = log[-1].get("deletes") if log else None
-                if pdel:
-                    # merge-on-read deletes stay pending until a rewrite
-                    # materializes them; their applies_to scopes exclude
-                    # the newly appended dirs
-                    entry["deletes"] = pdel
             entry["id"] = (log[-1]["id"] + 1) if log else 1
             entry["ts"] = time.time()
             os.makedirs(os.path.dirname(self._meta_path), exist_ok=True)
@@ -478,18 +470,72 @@ class SnapshotTable:
             os.replace(tmp, self._meta_path)
             return entry
 
+    def _states(self, log: list[dict] | None = None):
+        """The fold: yield ``(entry, dirs, deletes)`` for every entry of
+        ``log`` (default: this ref's) in commit order, where ``dirs`` and
+        ``deletes`` are the state at that version. The only code that turns
+        entries into state; the yielded lists are never mutated.
+
+        A full-state entry replaces the state. A delta entry drops the
+        paths in ``remove``, appends ``add``, and appends ``add_deletes``:
+        an eq/pred delete applies to the dirs visible at its parent
+        (Iceberg v2 sequence-number scoping), a pos delete keeps its own
+        matched-file ``applies_to``. A delete whose scope is empty can
+        never match a row and is dropped."""
+        dirs: list[str] = []
+        deletes: list[dict] = []
+        for e in self._log() if log is None else log:
+            if "dirs" in e:
+                dirs, deletes = e["dirs"], e.get("deletes", [])
+            else:
+                scoped = [
+                    {**dl, "applies_to": dl.get("applies_to", dirs)}
+                    for dl in e.get("add_deletes", [])
+                ]
+                deletes = deletes + [dl for dl in scoped if dl["applies_to"]]
+                if e.get("remove"):
+                    gone = set(e["remove"])
+                    dirs = [p for p in dirs if p not in gone]
+                if e.get("add"):
+                    dirs = dirs + e["add"]
+            yield e, dirs, deletes
+
+    @staticmethod
+    def _named(entry: dict) -> list[str]:
+        """Data paths an entry names: a delta's ``add``, a full-state
+        entry's ``dirs``. Every path any version sees is named by some
+        entry."""
+        return entry.get("dirs", entry.get("add", []))
+
+    @staticmethod
+    def _delete_paths(entry: dict) -> list[str]:
+        """Delete-file paths an entry names (pred deletes have none)."""
+        return [
+            dl["path"]
+            for dl in entry.get("deletes", []) + entry.get("add_deletes", [])
+            if "path" in dl
+        ]
+
     def _snapshot(self, version: int | None) -> dict:
+        """Version ``version`` (default: the head) as one dict: the entry's
+        ``id``, ``op`` and op fields plus its folded ``dirs`` and ``deletes``
+        (each delete with its ``applies_to``)."""
         log = self._log()
         if not log:
             raise SnapshotError(f"no snapshots at {self.root}")
-        if version is None:
-            return log[-1]
-        for s in log:
-            if s["id"] == version:
-                if s.get("expired"):
-                    raise SnapshotError(f"snapshot {version} has been expired")
-                return s
-        raise SnapshotError(f"no snapshot {version} at {self.root}")
+        found = None
+        for state in self._states(log):
+            if version is None or state[0]["id"] == version:
+                found = state
+                if version is not None:
+                    break
+        if found is None:
+            raise SnapshotError(f"no snapshot {version} at {self.root}")
+        e, dirs, deletes = found
+        if version is not None and e.get("expired"):
+            raise SnapshotError(f"snapshot {version} has been expired")
+        snap = {k: v for k, v in e.items() if k not in ("add", "remove", "add_deletes")}
+        return {**snap, "dirs": dirs, "deletes": deletes}
 
     def current_version(self) -> int | None:
         log = self._log()
@@ -758,8 +804,9 @@ class SnapshotTable:
     def append(self, df: DataFrame, props: dict | None = None) -> int:
         """Append commit: new version sees parent's dirs + this batch's
         dir. Safe under concurrent appenders: the data dir is written
-        outside the commit lock, and the visible-set union happens under it
-        (see _commit), so no writer can overwrite another's files.
+        outside the commit lock and the entry only ``add``s it, so it lands
+        on whatever parent is current and no writer can drop another's
+        files.
 
         ``props`` (JSON-able dict) is stored on the snapshot entry —
         Iceberg's snapshot summary properties; readers fetch it via
@@ -768,10 +815,10 @@ class SnapshotTable:
         self._check_stale_writer(df)
         self._enforce_constraints(df)
         d = self._write_new_dir(self._apply_layout(df))
-        entry: dict = {"op": "append"}
+        entry: dict = {"op": "append", "add": [d]}
         if props:
             entry["props"] = props
-        return self._commit(entry, new_dirs=[d])["id"]
+        return self._commit(entry)["id"]
 
     def snapshot_props(self, version: int | None = None) -> dict:
         """Summary properties stored with a snapshot commit (empty dict if
@@ -793,26 +840,25 @@ class SnapshotTable:
         snapshot) and rewrites it. Returns the committed version, or None if
         the batch was a replay."""
         log = self._log()
-        if any(s.get("batch_id") == batch_id for s in log):
+        if _batch_logged(log, batch_id):
             return None
         self._check_stale_writer(df)
         self._enforce_constraints(df)
         nxt = (log[-1]["id"] + 1) if log else 1
         d = os.path.join(self.root, "data", f"s{nxt}")
-        referenced = {p for s in log for p in s["dirs"]}
-        if os.path.isdir(d) and d not in referenced:  # orphan of a crashed commit
-            shutil.rmtree(d)
+        if os.path.isdir(d) and not any(d in self._named(s) for s in log):
+            shutil.rmtree(d)  # orphan of a crashed commit
         self._write_data_dir(self._apply_layout(df), nxt)
-        # the visible set unions with the CURRENT parent under the commit
-        # lock (new_dirs path) — a pre-computed parent would silently drop
-        # any ad-hoc append()/compact() that landed since the log read above
-        entry: dict = {"op": "append", "batch_id": batch_id}
+        # a delta entry: it lands on the CURRENT parent under the commit
+        # lock, so an ad-hoc append()/compact() that landed since the log
+        # read above is kept
+        entry: dict = {"op": "append", "batch_id": batch_id, "add": [d]}
         if props:
             # snapshot summary props ride the batch commit (round 8) — the
             # streaming twin of append(props=): an index ingest restamps
             # its quantizer pointer on every micro-batch snapshot
             entry["props"] = props
-        return self._commit(entry, new_dirs=[d])["id"]
+        return self._commit(entry)["id"]
 
     def overwrite(self, df: DataFrame, batch_id=None, props: dict | None = None) -> int | None:
         """Overwrite commit: new version sees only this batch's dir. Old
@@ -824,9 +870,7 @@ class SnapshotTable:
         an exactly-once consumer needs when it crashes between writing a
         derived table and advancing its cursor. ``props`` as in
         :meth:`append`."""
-        if batch_id is not None and any(
-            sn.get("batch_id") == batch_id for sn in self._log()
-        ):
+        if batch_id is not None and _batch_logged(self._log(), batch_id):
             return None
         self._check_stale_writer(df)
         self._enforce_constraints(df)
@@ -975,7 +1019,7 @@ class SnapshotTable:
         reading it."""
         epochs: dict[str, int] = {}
         for s in self._log():
-            for p in s["dirs"]:
+            for p in self._named(s):
                 d = os.path.dirname(p) if p.endswith(".parquet") else p
                 if d not in epochs:
                     epochs[d] = s["id"]
@@ -1093,12 +1137,7 @@ class SnapshotTable:
         if new in cols:
             raise SnapshotError(f"column {new!r} already exists")
         v = self._commit(
-            {
-                "op": "rename-column",
-                "from": old,
-                "to": new,
-                "dirs": list(snap["dirs"]),
-            },
+            {"op": "rename-column", "from": old, "to": new},
             expected_parent=snap["id"],
         )["id"]
         if old in self.bloom_cols:
@@ -1125,7 +1164,7 @@ class SnapshotTable:
         if name not in self.read().columns:
             raise SnapshotError(f"no column {name!r} to drop")
         v = self._commit(
-            {"op": "drop-column", "name": name, "dirs": list(snap["dirs"])},
+            {"op": "drop-column", "name": name},
             expected_parent=snap["id"],
         )["id"]
         if name in self.bloom_cols:
@@ -1453,7 +1492,7 @@ class SnapshotTable:
         seen: set[str] = set()
         for s in log:
             if s["id"] <= from_version:
-                seen.update(s["dirs"])
+                seen.update(self._named(s))
         added: list[str] = []
         for s in log:
             if from_version < s["id"] <= to_version:
@@ -1471,8 +1510,8 @@ class SnapshotTable:
                         f"incremental read crosses non-append commit "
                         f"{s['id']} ({s['op']})"
                     )
-                added.extend(d for d in s["dirs"] if d not in seen)
-                seen.update(s["dirs"])
+                added.extend(d for d in self._named(s) if d not in seen)
+                seen.update(self._named(s))
         if not added:
             return self.read(to_version).limit(0)
         # schema-aware read of just the added files, in TO-version names
@@ -1566,14 +1605,40 @@ class SnapshotTable:
         """The commit log as a DataFrame (Iceberg's ``<table>.history``
         metadata table): one row per snapshot with op, file count, liveness."""
         rows = [
-            (s["id"], s["op"], len(s["dirs"]), float(s["ts"]), bool(s.get("expired")))
-            for s in self._log()
+            (s["id"], s["op"], len(dirs), float(s["ts"]), bool(s.get("expired")))
+            for s, dirs, _ in self._states()
         ]
         return self.spark.createDataFrame(
             rows, "version long, op string, n_dirs int, committed_at double, expired boolean"
         )
 
     # -- copy-on-write mutations (file-granularity, manifest-pruned) -------
+    def _split_files(self, snap: dict, col: str, lo, hi) -> tuple[list, list, list]:
+        """The version's files split by manifest range on ``col``, for a
+        CoW rewrite: ``(candidates, remove, carry)``. Candidates are the
+        files whose [min,max] may meet [lo,hi] (a file without stats is
+        one; a file whose epoch predates the column's lineage holds only
+        NULLs there, which no range matches, so it is not). ``remove``
+        names each visible path holding a candidate and ``carry`` that
+        path's other files, which the rewrite's entry adds back by
+        reference — so the entry alone says which files stay visible."""
+        stats = self._load_stats(snap)
+        clo, chi = _json_stat(lo), _json_stat(hi)
+        local = self._local_resolver(snap)
+        candidates, untouched = [], []
+        for p in snap["dirs"]:
+            for f in self._expand_files([p]):
+                lname = local(f, col)
+                b = stats.get(f, {}).get("stats", {}).get(lname)
+                hit = lname is not None and (b is None or _overlaps(b[0], b[1], clo, chi))
+                (candidates if hit else untouched).append((p, f))
+        split = {p for p, _ in candidates}
+        return (
+            [f for _, f in candidates],
+            [p for p in snap["dirs"] if p in split],
+            [f for p, f in untouched if p in split],
+        )
+
     def merge(self, source: DataFrame, key: str) -> int:
         """MERGE (upsert) with copy-on-write at FILE granularity — the table
         semantics the reference configures Iceberg for
@@ -1593,21 +1658,7 @@ class SnapshotTable:
         lo, hi = source.agg(F.min(key), F.max(key)).first()
         if lo is None:
             raise SnapshotError("merge source is empty")
-        stats = self._load_stats(snap)
-        clo, chi = _json_stat(lo), _json_stat(hi)
-        local = self._local_resolver(snap)
-        candidates, untouched = [], []
-        for f in self._expand_files(snap["dirs"]):
-            lname = local(f, key)
-            if lname is None:
-                # key lineage absent → all keys NULL there → no match
-                untouched.append(f)
-                continue
-            b = stats.get(f, {}).get("stats", {}).get(lname)
-            if b is None or _overlaps(b[0], b[1], clo, chi):
-                candidates.append(f)
-            else:
-                untouched.append(f)
+        candidates, remove, carry = self._split_files(snap, key, lo, hi)
         if candidates:
             current = self._strip_hidden(self._read_paths(snap, candidates))
             kept = current.join(source.select(key).distinct(), key, "left_anti")
@@ -1615,9 +1666,7 @@ class SnapshotTable:
         else:
             new_data = source
         d = self._write_new_dir(self._apply_layout(new_data))
-        entry = {"op": "merge", "dirs": untouched + [d]}
-        if snap.get("deletes"):
-            entry["deletes"] = snap["deletes"]
+        entry = {"op": "merge", "remove": remove, "add": carry + [d]}
         return self._commit(entry, expected_parent=snap["id"])["id"]
 
     def delete_where(self, col: str, lo=None, hi=None, mode: str = "cow") -> int:
@@ -1636,37 +1685,15 @@ class SnapshotTable:
         """
         snap = self._snapshot(None)
         if mode == "mor":
-            deletes = snap.get("deletes", []) + [
-                {
-                    "type": "pred",
-                    "col": col,
-                    "lo": _json_stat(lo),
-                    "hi": _json_stat(hi),
-                    "applies_to": list(snap["dirs"]),
-                }
-            ]
+            pred = {"type": "pred", "col": col, "lo": _json_stat(lo), "hi": _json_stat(hi)}
             return self._commit(
-                {"op": "delete-mor", "dirs": list(snap["dirs"]), "deletes": deletes},
+                {"op": "delete-mor", "add_deletes": [pred]},
                 expected_parent=snap["id"],
             )["id"]
         if mode != "cow":
             raise SnapshotError(f"unknown delete mode {mode!r}")
-        stats = self._load_stats(snap)
-        clo, chi = _json_stat(lo), _json_stat(hi)
-        local = self._local_resolver(snap)
-        candidates, untouched = [], []
-        for f in self._expand_files(snap["dirs"]):
-            lname = local(f, col)
-            if lname is None:
-                # the delete predicate is never true on all-NULL values
-                untouched.append(f)
-                continue
-            b = stats.get(f, {}).get("stats", {}).get(lname)
-            if b is None or _overlaps(b[0], b[1], clo, chi):
-                candidates.append(f)
-            else:
-                untouched.append(f)
-        dirs = list(untouched)
+        candidates, remove, carry = self._split_files(snap, col, lo, hi)
+        entry = {"op": "delete", "remove": remove, "add": carry}
         if candidates:
             cond = F.lit(True)
             if lo is not None:
@@ -1678,12 +1705,7 @@ class SnapshotTable:
                     ~cond | F.col(col).isNull()
                 )
             )
-            dirs.append(self._write_new_dir(self._apply_layout(survivors)))
-        entry = {"op": "delete", "dirs": dirs}
-        if snap.get("deletes"):
-            # pending MOR deletes still cover the carried-forward files;
-            # the rewritten dir is outside every applies_to scope
-            entry["deletes"] = snap["deletes"]
+            entry["add"].append(self._write_new_dir(self._apply_layout(survivors)))
         return self._commit(entry, expected_parent=snap["id"])["id"]
 
     def update_where(
@@ -1697,21 +1719,8 @@ class SnapshotTable:
         a narrow update on a 100 TB table rewrites only the files that can
         contain a match."""
         snap = self._snapshot(None)
-        stats = self._load_stats(snap)
-        clo, chi = _json_stat(lo), _json_stat(hi)
-        local = self._local_resolver(snap)
-        candidates, untouched = [], []
-        for f in self._expand_files(snap["dirs"]):
-            lname = local(f, col)
-            if lname is None:
-                untouched.append(f)
-                continue
-            b = stats.get(f, {}).get("stats", {}).get(lname)
-            if b is None or _overlaps(b[0], b[1], clo, chi):
-                candidates.append(f)
-            else:
-                untouched.append(f)
-        dirs = list(untouched)
+        candidates, remove, carry = self._split_files(snap, col, lo, hi)
+        entry = {"op": "update", "remove": remove, "add": carry}
         if candidates:
             cond = F.lit(True)
             if lo is not None:
@@ -1730,10 +1739,7 @@ class SnapshotTable:
             # SET expressions can violate constraints a plain append would
             # reject; enforce on the rewrite before it becomes visible
             self._enforce_constraints(updated)
-            dirs.append(self._write_new_dir(self._apply_layout(updated)))
-        entry = {"op": "update", "dirs": dirs}
-        if snap.get("deletes"):
-            entry["deletes"] = snap["deletes"]
+            entry["add"].append(self._write_new_dir(self._apply_layout(updated)))
         return self._commit(entry, expected_parent=snap["id"])["id"]
 
     def delete_keys(self, keys: DataFrame, col: str | list[str]) -> int:
@@ -1755,17 +1761,9 @@ class SnapshotTable:
         cols = col if isinstance(col, list) else [col]
         d = os.path.join(self.root, "data", f"del{snap['id']}-{uuid.uuid4().hex[:8]}")
         keys.select(*cols).distinct().write.parquet(d)
-        deletes = snap.get("deletes", []) + [
-            {
-                "type": "eq",
-                "col": cols if len(cols) > 1 else cols[0],
-                "path": d,
-                "applies_to": list(snap["dirs"]),
-            }
-        ]
+        eq = {"type": "eq", "col": cols if len(cols) > 1 else cols[0], "path": d}
         return self._commit(
-            {"op": "delete-keys", "dirs": list(snap["dirs"]), "deletes": deletes},
-            expected_parent=snap["id"],
+            {"op": "delete-keys", "add_deletes": [eq]}, expected_parent=snap["id"]
         )["id"]
 
     def delete_where_positional(self, predicate: str) -> int:
@@ -1809,11 +1807,9 @@ class SnapshotTable:
         # scope to the FILES that contain matches (the matched-file list is
         # already driver-side): readers of every other file never bind
         # metadata columns or pay the anti-join — the documented cost model
-        deletes = snap.get("deletes", []) + [
-            {"type": "pos", "path": d, "applies_to": matched}
-        ]
+        pos_delete = {"type": "pos", "path": d, "applies_to": matched}
         return self._commit(
-            {"op": "delete-pos", "dirs": list(snap["dirs"]), "deletes": deletes},
+            {"op": "delete-pos", "add_deletes": [pos_delete]},
             expected_parent=snap["id"],
         )["id"]
 
@@ -1844,26 +1840,21 @@ class SnapshotTable:
                 raise SnapshotError(
                     f"existing data violates {name!r} ({expr}): {bad} rows"
                 )
-        entry = {"op": "add-constraint", "name": name, "expr": expr,
-                 "dirs": list(snap["dirs"]) if snap else []}
-        if snap and snap.get("deletes"):
-            entry["deletes"] = snap["deletes"]
         # CAS on the validated snapshot: the validation scan is a long job,
-        # and committing a stale dir list over a concurrent append would
-        # silently erase its files (SnapshotConflict → re-validate instead)
+        # and a concurrent append could land rows that violate the new
+        # constraint (SnapshotConflict → re-validate instead)
         return self._commit(
-            entry, expected_parent=snap["id"] if snap else 0
+            {"op": "add-constraint", "name": name, "expr": expr},
+            expected_parent=snap["id"] if snap else 0,
         )["id"]
 
     def drop_constraint(self, name: str) -> int:
         snap = self._snapshot(None)
         if name not in self._constraints():
             raise SnapshotError(f"no constraint {name!r}")
-        entry = {"op": "drop-constraint", "name": name,
-                 "dirs": list(snap["dirs"])}
-        if snap.get("deletes"):
-            entry["deletes"] = snap["deletes"]
-        return self._commit(entry, expected_parent=snap["id"])["id"]
+        return self._commit(
+            {"op": "drop-constraint", "name": name}, expected_parent=snap["id"]
+        )["id"]
 
     def _enforce_constraints(self, df: DataFrame) -> None:
         """One pass over the BATCH (never the table) counting violations of
@@ -1939,10 +1930,9 @@ class SnapshotTable:
         metadata, not snapshot state, and are deliberately NOT rolled back —
         Iceberg's ``rollback_to_snapshot`` semantics."""
         snap = self._snapshot(version)
-        entry = {"op": f"rollback({version})", "dirs": list(snap["dirs"])}
-        if snap.get("deletes"):
-            entry["deletes"] = list(snap["deletes"])
-        return self._commit(entry)["id"]
+        return self._commit(
+            {"op": f"rollback({version})", "dirs": snap["dirs"], "deletes": snap["deletes"]}
+        )["id"]
 
     def compact(self, target_file_bytes: int = 128 * 1024 * 1024) -> int:
         """Small-file compaction (Iceberg's ``rewrite_data_files``): rewrite
@@ -2010,7 +2000,6 @@ class SnapshotTable:
                 for e in self._log()
                 if e.get("cluster_cols") == list(cols) and e.get("new_dir")
             }
-            keep = [d for d in snap["dirs"] if d in done]
             todo = [d for d in snap["dirs"] if d not in done]
             if not todo:
                 return snap["id"]
@@ -2022,7 +2011,6 @@ class SnapshotTable:
             )
             total = sum(os.path.getsize(f) for f in self._expand_files(todo))
         else:
-            keep = []
             df = self.read()
             total = sum(os.path.getsize(f) for f in self._expand_files(snap["dirs"]))
         n_files = max(1, -(-total // target_file_bytes))  # ceil
@@ -2049,16 +2037,11 @@ class SnapshotTable:
             .drop("__z")
         )
         d = self._write_new_dir(clustered)
-        entry = {
-            "op": f"cluster({','.join(cols)})",
-            "dirs": keep + [d],
-            "cluster_cols": list(cols),
-            "new_dir": d,
-        }
-        if incremental and snap.get("deletes"):
-            # pending MOR deletes were materialized for the rewritten files
-            # but still cover the carried-forward clustered generations
-            entry["deletes"] = snap["deletes"]
+        entry = {"op": f"cluster({','.join(cols)})", "cluster_cols": list(cols), "new_dir": d}
+        # incremental: a delta, so pending MOR deletes (materialized for the
+        # rewritten files) still cover the carried-forward generations; a
+        # full rewrite replaces the visible set and clears them
+        entry.update({"remove": todo, "add": [d]} if incremental else {"dirs": [d]})
         return self._commit(entry, expected_parent=snap["id"])["id"]
 
     def register_view(self, name: str, version: int | None = None) -> None:
@@ -2138,15 +2121,17 @@ class SnapshotTable:
         with self._locked():
             log = self._log()
             # ids alone cannot detect divergence (divergent histories share
-            # id numbers) — the branch must carry the SAME commits we have
-            ids = [(s["id"], s["dirs"]) for s in log]
-            branch_ids = [(s["id"], s["dirs"]) for s in branch_log]
-            if branch_ids[: len(ids)] != ids:
+            # id numbers) — the branch must carry the SAME commits we have;
+            # expiry marks entries in place on either side, so it is ignored
+            def commits(entries):
+                return [{k: v for k, v in s.items() if k != "expired"} for s in entries]
+
+            if commits(branch_log[: len(log)]) != commits(log):
                 raise SnapshotConflict(
                     f"{self.ref} diverged from branch {name!r}; "
                     f"re-stage the branch from the current head and retry"
                 )
-            if len(branch_ids) == len(ids):
+            if len(branch_log) == len(log):
                 return log[-1]["id"] if log else 0  # nothing to publish
             tmp = self._meta_path + ".tmp"
             with open(tmp, "w") as f:
@@ -2357,18 +2342,16 @@ class SnapshotTable:
             for v in self._load_refs().values()
             if self._tag_entry(v)["ref"] == self.ref
         }
-        recent_ids = {s["id"] for s in log[-keep_last:]}
-        live = [s for s in log if s["id"] in recent_ids or s["id"] in tagged]
-        dead = [s for s in log if s["id"] not in recent_ids and s["id"] not in tagged]
-        keep_paths = {d for s in live for d in s["dirs"]}
-        keep_paths |= {
-            dl["path"] for s in live for dl in s.get("deletes", []) if "path" in dl
-        }
+        live_ids = {s["id"] for s in log[-keep_last:]} | tagged
+        dead = [s for s in log if s["id"] not in live_ids]
+        keep_paths: set[str] = set()
+        for s, dirs, deletes in self._states(log):
+            if s["id"] in live_ids:
+                keep_paths.update(dirs)
+                keep_paths.update(dl["path"] for dl in deletes if "path" in dl)
         for blog in self._branch_logs():
-            keep_paths |= {d for s in blog for d in s["dirs"]}
-            keep_paths |= {
-                dl["path"] for s in blog for dl in s.get("deletes", []) if "path" in dl
-            }
+            for s in blog:
+                keep_paths.update(self._named(s), self._delete_paths(s))
 
         def referenced(p: str) -> bool:
             # CoW commits carry individual FILES forward: a dead dir stays if
@@ -2386,12 +2369,10 @@ class SnapshotTable:
             if not s.get("expired"):
                 s["expired"] = True
                 expired_ids.append(s["id"])
-            dead_paths = list(s["dirs"]) + [
-                dl["path"] for dl in s.get("deletes", []) if "path" in dl
-            ]
+            dead_paths = self._named(s) + self._delete_paths(s)
             doomed.extend(d for d in dead_paths if not referenced(d))
-        # live/dead alias entries of ``log``; the expired flags were set
-        # in place, so dumping ``log`` preserves commit order
+        # ``dead`` holds the entries of ``log`` themselves; the expired
+        # flags were set in place, so dumping ``log`` preserves commit order
         tmp = self._meta_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(log, f, indent=1)
@@ -2558,13 +2539,18 @@ class MultiTableTransaction:
 
     Protocol:
 
-    1. ``stage_append``/``stage_overwrite`` write each table's data dirs
-       immediately, OUTSIDE any lock (the expensive distributed work; dir
-       names are collision-free and invisible until committed).
+    1. ``stage_append``/``stage_overwrite``/``stage_upsert_keys`` write
+       each table's data dirs immediately, OUTSIDE any lock (the expensive
+       distributed work; dir names are collision-free and invisible until
+       committed).
     2. ``commit`` atomically renames an INTENT file listing every staged
        (table, op, dirs) into the transaction dir — **this rename is the
        commit point** — then applies each table's metadata commit through
-       the table's own lock-validate-swap, then deletes the intent.
+       the table's own lock-validate-swap, then deletes the intent. A
+       staged overwrite commits a full-state entry (``dirs``); a staged
+       append or upsert commits a delta (``add``, plus the upsert's
+       ``add_deletes``), which the table's fold applies on top of whatever
+       parent is current.
     3. A crash after the intent rename leaves a recoverable transaction:
        :func:`recover_transactions` re-applies any table whose staged dirs
        no snapshot references yet (dir uuids make the check exact), so the
@@ -2578,9 +2564,10 @@ class MultiTableTransaction:
     only a filesystem underneath, the intent log bounds it to
     "every committed transaction completes".
 
-    Staged ops are append/overwrite (fan-out writes); rewrite-shaped ops
-    (merge/delete) keep their single-table CAS semantics on purpose — a
-    rewrite's conflict window must stay tied to the version it read."""
+    Staged ops are append/overwrite/keyed upsert (fan-out writes);
+    rewrite-shaped ops (merge/delete) keep their single-table CAS semantics
+    on purpose — a rewrite's conflict window must stay tied to the version
+    it read."""
 
     def __init__(self, tables: list[SnapshotTable], txn_dir: str):
         roots = [(t.root, t.ref) for t in tables]
@@ -2641,40 +2628,31 @@ class MultiTableTransaction:
         whose key range intersects the batch's, which for a uniformly
         spread key set is the WHOLE table every batch; the delete file
         costs O(batch keys) and periodic compaction materializes the
-        pending deletes. Rewrite-shaped w.r.t. racing commits (the staged
-        dir list replaces the table's), so recovery enforces the same
-        parent pin as a staged overwrite. On an empty table it degrades
-        to a plain staged append (no delete file)."""
+        pending deletes. The commit is a delta (``add`` the dir plus
+        ``add_deletes`` the eq-delete), and the fold scopes the eq-delete to
+        the dirs visible at the commit's parent, so an append that lands
+        between staging and commit is kept and superseded on matching keys.
+        Crash recovery still enforces the same parent pin as a staged
+        overwrite. On an empty table the eq-delete's scope is empty and it
+        is dropped: a plain staged append."""
         tkey = (table.root, table.ref)
         self._table(tkey)
         table._check_stale_writer(df)
         table._enforce_constraints(df)
-        snap = (
-            table._snapshot(None)
-            if table.current_version() is not None
-            else None
-        )
         d = table._write_new_dir(table._apply_layout(df))
-        base_dirs = list(snap["dirs"]) if snap else []
-        deletes = list(snap.get("deletes", [])) if snap else []
-        if base_dirs:
-            # the delete-key set IS the staged dir's key column, so the
-            # eq-delete entry points at the data dir itself (the reader
-            # selects only `col` and distincts): zero extra write jobs,
-            # and the upsert's two halves can never disagree about which
-            # keys it covers. applies_to excludes the new dir — its own
-            # rows are never anti-joined away.
-            deletes = deletes + [
-                {"type": "eq", "col": key, "path": d, "applies_to": base_dirs}
-            ]
         self.staged.append(
             {
                 "root": table.root,
                 "ref": table.ref,
                 "op": "upsert-keys",
                 "new_dirs": [d],
-                "base_dirs": base_dirs,
-                "deletes": deletes,
+                # the delete-key set IS the staged dir's key column, so the
+                # eq-delete points at the data dir itself (the reader
+                # selects only `col` and distincts): zero extra write jobs,
+                # and the upsert's two halves can never disagree about
+                # which keys it covers. Its scope excludes the new dir, so
+                # its own rows are never anti-joined away.
+                "deletes": [{"type": "eq", "col": key, "path": d}],
                 "batch_id": batch_id,
                 "parent": table.current_version(),
             }
@@ -2718,7 +2696,7 @@ def _apply_staged(
     this). Every pin is validated BEFORE anything applies — a mid-list
     conflict must abort the whole intent, not leave it half-applied (the
     torn state transactions exist to prevent). Appends apply regardless:
-    the visible-set union commutes with any interleaved commit."""
+    their delta entry commutes with any interleaved commit."""
 
     # one log read per TABLE, one applied-flag per entry — recovery must
     # not re-parse every table's full log once per validation AND once per
@@ -2726,7 +2704,7 @@ def _apply_staged(
     # earlier entries commit)
     refd: dict[tuple[str, str], set[str]] = {}
     for key, t in tables.items():
-        refd[key] = {d for snap in t._log() for d in snap["dirs"]}
+        refd[key] = {d for snap in t._log() for d in t._named(snap)}
     applied = [
         any(d in refd[(s["root"], s["ref"])] for d in s["new_dirs"]) for s in staged
     ]
@@ -2755,18 +2733,18 @@ def _apply_staged(
             # stamp the idempotence key into the commit so a replayed
             # micro-batch can detect the whole transaction as applied
             base["batch_id"] = s["batch_id"]
-        if s["op"] == "append":
-            entry = t._commit(base, new_dirs=list(s["new_dirs"]))
-        elif s["op"] == "upsert-keys":
-            e = {
-                **base,
-                "dirs": list(s.get("base_dirs", [])) + list(s["new_dirs"]),
-            }
-            if s.get("deletes"):
-                e["deletes"] = s["deletes"]
-            entry = t._commit(e)
+        if s["op"] == "overwrite":
+            base["dirs"] = s["new_dirs"]
         else:
-            entry = t._commit({**base, "dirs": list(s["new_dirs"])})
+            base["add"] = s["new_dirs"]
+        if s["op"] == "upsert-keys":
+            # an intent staged before the add/remove log listed the table's
+            # whole pending-delete set; the staged eq-delete is the one
+            # whose path is the staged dir
+            base["add_deletes"] = [
+                dl for dl in s.get("deletes", []) if dl.get("path") in s["new_dirs"]
+            ]
+        entry = t._commit(base)
         versions[(t.root, t.ref)] = entry["id"]
     return versions
 
@@ -2776,9 +2754,25 @@ def transaction_batch_seen(tables: list[SnapshotTable], batch_id) -> bool:
     to ANY of these tables? (After :func:`recover_transactions` has run,
     any-committed implies all-committed — the replay-skip test a streaming
     fan-out sink needs.)"""
-    return any(
-        s.get("batch_id") == batch_id for t in tables for s in t._log()
-    )
+    return any(_batch_logged(t._log(), batch_id) for t in tables)
+
+
+def _batch_logged(log: list[dict], batch_id) -> bool:
+    """Does any entry of ``log`` carry ``batch_id``?"""
+    return any(s.get("batch_id") == batch_id for s in log)
+
+
+def max_batch_seen(tables: list[SnapshotTable], prefix: str) -> int:
+    """Highest ``n`` of any batch id ``"<prefix><n>"`` committed to any of
+    ``tables`` (-1 if none)."""
+    mx = -1
+    for t in tables:
+        for s in t._log():
+            b = s.get("batch_id")
+            if isinstance(b, str) and b.startswith(prefix):
+                with contextlib.suppress(ValueError):
+                    mx = max(mx, int(b[len(prefix) :]))
+    return mx
 
 
 def recover_transactions(spark: SparkSession, txn_dir: str) -> list[str]:
@@ -2839,14 +2833,12 @@ def remove_orphans(table: SnapshotTable, grace_seconds: float = 3600.0) -> list[
     referenced: set[str] = set()
     for log in [table._log()] + table._branch_logs():
         for s in log:
-            for p in s["dirs"]:
+            for p in table._named(s):
                 referenced.add(p)
                 # a carried-forward FILE keeps its containing commit dir alive
                 if p.endswith(".parquet"):
                     referenced.add(os.path.dirname(p))
-            for dl in s.get("deletes", []):
-                if "path" in dl:
-                    referenced.add(dl["path"])
+            referenced.update(table._delete_paths(s))
     removed = []
     now = time.time()
     for name in sorted(os.listdir(data_root)):
@@ -2936,17 +2928,9 @@ def maintain_additive_rollup(
     would re-fold — so each cycle first fast-forwards the cursor to the
     highest ``src-v*`` the TARGET has committed (the rollup log is the
     durable record of what was folded)."""
-    if target.current_version() is not None:
-        folded_to = -1
-        for s in target._log():
-            b = s.get("batch_id")
-            if isinstance(b, str) and b.startswith("src-v"):
-                try:
-                    folded_to = max(folded_to, int(b[len("src-v") :]))
-                except ValueError:
-                    pass
-        if folded_to > feed.cursor:
-            feed.commit(folded_to)
+    folded_to = max_batch_seen([target], "src-v")
+    if folded_to > feed.cursor:
+        feed.commit(folded_to)
     polled = feed.poll()
     if polled is None:
         return None

@@ -34,6 +34,7 @@ from ..sources.ndjson import read_batch, read_stream
 from ..sources.snapshots import (
     MultiTableTransaction,
     SnapshotTable,
+    max_batch_seen,
     recover_transactions,
     transaction_batch_seen,
 )
@@ -64,21 +65,6 @@ def with_event_time(df: DataFrame, col: str = "timestamp") -> DataFrame:
     return df.withColumn("event_ts", F.to_timestamp(col, "yyyy-MM-dd HH:mm:ss"))
 
 
-def _max_seen_batch(tables, prefix: str) -> int:
-    """Highest batch number stamped ``<prefix><n>`` on any of ``tables``
-    (-1 if none)."""
-    mx = -1
-    for t in tables:
-        for s in t._log():
-            b = s.get("batch_id")
-            if isinstance(b, str) and b.startswith(prefix):
-                try:
-                    mx = max(mx, int(b[len(prefix) :]))
-                except ValueError:
-                    pass
-    return mx
-
-
 def _start(stream, checkpoint_dir, commit, tables=(), txn_dir=None) -> StreamingQuery:
     """The one stream protocol every ingest path runs: drain ``stream`` in
     ``availableNow`` micro-batches under ``checkpoint_dir`` and hand each
@@ -106,7 +92,7 @@ def _start(stream, checkpoint_dir, commit, tables=(), txn_dir=None) -> Streaming
                 prefix = json.load(f)["id"] + "#"
             if txn_dir is not None:
                 recover_transactions(spark, txn_dir)
-            guard.update(prefix=prefix, max_seen=_max_seen_batch(tables, prefix))
+            guard.update(prefix=prefix, max_seen=max_batch_seen(tables, prefix))
         if batch_id <= guard["max_seen"]:
             return
         commit(batch_df, f"{guard['prefix']}{batch_id}")
@@ -2071,7 +2057,7 @@ def compact_cooccurrence_index(spark: SparkSession, delta_root: str) -> None:
     history to one row per surviving pair. Run between ingest drains: the
     overwrite appends a commit, it never erases the log, so the stream's
     batch keys survive and replay protection is unaffected
-    (``_max_seen_batch`` scans the full log). Zero-sum pairs are true
+    (``max_batch_seen`` scans the full log). Zero-sum pairs are true
     zeros and are dropped."""
     from ..operators.analytics import cooccurrence_edges_from_index
 

@@ -93,7 +93,7 @@ def test_expire_keeps_dirs_shared_with_live_appends(spark, table):
     table.append(spark.range(0, 3))
     table.append(spark.range(3, 6))
     table.append(spark.range(6, 9))
-    v1_dir = table._log()[0]["dirs"][0]
+    v1_dir = table._snapshot(1)["dirs"][0]
     expired = table.expire_snapshots(keep_last=2)
     assert expired == [1]
     assert os.path.isdir(v1_dir)
@@ -737,7 +737,7 @@ def test_expire_and_orphans_respect_delete_files(spark, table):
 
     table.append(_one_file_range(spark, 0, 50))
     table.delete_keys(spark.createDataFrame([(3,)], "id long"), "id")
-    del_path = table._log()[-1]["deletes"][0]["path"]
+    del_path = table._snapshot(None)["deletes"][0]["path"]
     # age everything; the delete file is referenced by the live snapshot
     for name in os.listdir(os.path.join(table.root, "data")):
         d = os.path.join(table.root, "data", name)
@@ -2153,6 +2153,23 @@ def test_stage_upsert_keys_merges_on_read(spark, tmp_path):
     assert not snap.get("deletes")
     assert set(rows(t.read())) == want
 
+    # an append that lands between staging and commit survives the
+    # commit, and the staged row still supersedes its key exactly once
+    r = SnapshotTable(spark, str(tmp_path / "race"))
+    r.append(spark.createDataFrame([(u, 0) for u in range(10)], "user_id long, v int"))
+    txn3 = MultiTableTransaction([r], str(tmp_path / "txns"))
+    txn3.stage_upsert_keys(
+        r, spark.createDataFrame([(5, 7)], "user_id long, v int"), key="user_id"
+    )
+    SnapshotTable(spark, str(tmp_path / "race")).append(
+        spark.createDataFrame([(u, 0) for u in range(100, 105)], "user_id long, v int")
+    )
+    assert r.read().count() == 15
+    txn3.commit()
+    got = rows(r.read())
+    assert [u for u, _ in got] == list(range(10)) + list(range(100, 105))
+    assert [v for u, v in got if u == 5] == [7]
+
 
 def test_stage_upsert_keys_recovery_and_stale_pin(spark, tmp_path):
     """A crashed upsert-keys intent must recover exactly once; one staged
@@ -2262,3 +2279,100 @@ def test_write_training_shards_replay_and_txn(spark, tmp_path):
     assert {r["shard"]: r["count"] for r in got} == {
         s: n for (s, n, _t, _h) in man1
     }
+
+
+def test_log_grows_linearly_with_commits(spark, table):
+    """Each log entry records only what its commit changed, so 40 appends
+    write about twice the log bytes of 20. Entries that repeat the whole
+    visible set grow the log quadratically (a ratio near 4)."""
+    sizes = {}
+    for i in range(40):
+        table.append(spark.range(i, i + 1).coalesce(1))
+        sizes[i + 1] = os.path.getsize(table._meta_path)
+    assert sizes[40] < 2.5 * sizes[20]
+    assert _ids(table.read()) == list(range(40))
+
+
+def test_full_state_log_folds_to_the_same_versions(spark, tmp_path):
+    """Logs written before the add/remove format hold the whole visible
+    state in every entry (``dirs`` plus ``deletes`` with their scopes).
+    Such a log, rebuilt from ``_snapshot(v)`` of a table with appends, a
+    CoW merge that splits a dir, an equality and a positional delete and an
+    overwrite, must behave exactly like the delta log the same commits
+    wrote: every version, ``history()``, ``read_incremental`` and
+    ``expire_snapshots``."""
+    import json
+    import shutil
+
+    a = SnapshotTable(spark, str(tmp_path / "a"))
+    two_files = spark.range(0, 100).repartitionByRange(2, "id")
+    a.append(two_files.withColumn("val", F.lit("a")))
+    a.append(_one_file_range(spark, 100, 120, val="a"))
+    a.merge(spark.createDataFrame([(10, "m"), (30, "m")], "id long, val string"), "id")
+    a.delete_keys(spark.createDataFrame([(3,), (110,)], "id long"), "id")
+    a.delete_where_positional("id = 60")
+    a.append(_one_file_range(spark, 200, 210, val="b"))
+    a.overwrite(_one_file_range(spark, 300, 320, val="c"))
+    a.append(_one_file_range(spark, 400, 405, val="d"))
+    a.append(_one_file_range(spark, 500, 503, val="e"))
+    delta = a._log()
+    assert any("remove" in e for e in delta)
+    full = [a._snapshot(e["id"]) for e in delta]
+    assert all("remove" not in e and "add" not in e for e in full)
+
+    def write_log(t, entries):
+        with open(t._meta_path, "w") as f:
+            json.dump(entries, f, indent=1)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def outcome(read):
+        try:
+            return rows(read())
+        except SnapshotError as e:
+            return str(e)
+
+    def observe(t):
+        return (
+            {v: outcome(lambda: t.read(v)) for v in range(1, t.current_version() + 1)},
+            [tuple(r) for r in t.history().collect()],
+            outcome(lambda: t.read_incremental(1)),
+            outcome(lambda: t.read_incremental(1, 2)),
+        )
+
+    before = observe(a)
+    v5_ids = [r[0] for r in before[0][5]]
+    assert len(v5_ids) == 117 and not {3, 60, 110} & set(v5_ids)
+    write_log(a, full)
+    assert observe(a) == before
+    write_log(a, delta)
+
+    # expiry deletes files, so it runs on a copy of the table whose
+    # metadata names the copy's own files and whose log is full-state
+    b_root = str(tmp_path / "b")
+    shutil.copytree(a.root, b_root)
+
+    def moved(obj):
+        return json.loads(json.dumps(obj).replace(a.root, b_root))
+
+    meta = os.path.join(b_root, "metadata")
+    for name in os.listdir(meta):
+        with open(os.path.join(meta, name)) as f:
+            obj = json.load(f)
+        with open(os.path.join(meta, name), "w") as f:
+            json.dump(moved(obj), f)
+    b = SnapshotTable(spark, b_root)
+    write_log(b, moved(full))
+
+    def data_files(t):
+        base = os.path.join(t.root, "data")
+        return sorted(
+            os.path.relpath(os.path.join(d, n), base)
+            for d, _, names in os.walk(base)
+            for n in names
+        )
+
+    assert a.expire_snapshots(keep_last=2) == b.expire_snapshots(keep_last=2) == list(range(1, 8))
+    assert data_files(a) == data_files(b)
+    assert observe(a) == observe(b)
