@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import md5_bucket16, md5_bucket32, normalize, shingles, tokens
+from ..functions.text import md5_bucket16, normalize, shingles, tokens
 from ..functions.vector import dot, norm
 from ..io import (
     checkpoint_release,
@@ -31,6 +31,7 @@ from ..io import (
     load,
     load_spread,
     memo,
+    scratch_memo,
 )
 
 # MinHash parameters: 32 permutations in 8 bands of 4 rows; fixed seeds.
@@ -201,45 +202,6 @@ def minhash_sig_bands(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.mapInArrow(sig_fn, out_schema)
 
 
-def _minhash_sig_bands_expr(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The pre-r16 pure-column-expression signature pipeline, kept as the
-    parity reference for the Arrow kernel above (tests assert both forms
-    agree byte-for-byte over the full sf0.1 corpus)."""
-    sh_df = (
-        df.filter(F.coalesce(F.trim(F.col(text_col)), F.lit("")) != "")
-        .withColumn("__sh", F.array_distinct(shingles(tokens(text_col), 3)))
-        .filter(F.size("__sh") > 0)
-    )
-    hs_df = sh_df.withColumn(
-        "__hs",
-        F.transform("__sh", lambda s: F.pmod(md5_bucket32(s), F.lit(1 << 31))),
-    ).drop("__sh")
-    mins = hs_df.select(
-        "*",
-        *[
-            F.array_min(
-                F.transform(
-                    "__hs", lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MH_P))
-                )
-            ).alias(f"__m{i}")
-            for i, (a, b) in enumerate(_MH_AB)
-        ],
-    ).drop("__hs")
-    out = mins.select(
-        "*",
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",", *[F.col(f"__m{b * _MH_ROWS + r}") for r in range(_MH_ROWS)]
-                )
-            ).alias(f"band{b}")
-            for b in range(_MH_BANDS)
-        ],
-        F.array(*[F.col(f"__m{i}") for i in range(_MH_PERMS)]).alias("sig"),
-    )
-    return out.drop(*[f"__m{i}" for i in range(_MH_PERMS)])
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Hash-spread on doc_id BEFORE the expensive shingle/token work (single
     # input split would serialize it); keyed on doc_id so any downstream
@@ -266,6 +228,27 @@ def doc_shingle_rows(docs: DataFrame) -> DataFrame:
     )
 
 
+def materialized_minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, band0..band{B-1}, sig) MinHash signature table of the
+    documents corpus, written once per corpus version to scratch parquet
+    and memoized (the ``textops.materialized_bm25_index`` pattern): the
+    Arrow signature kernel is the dominant cost of every LSH face, and its
+    output depends only on the corpus.  The memo holds the read-back frame
+    itself, with the written schema, so a warm call lists no files and
+    runs no schema-inference job.  The corpus is hash-spread on
+    doc_id before the per-doc signature work (see ``_doc_shingles``)."""
+    import os
+
+    def build(scratch):
+        path = os.path.join(scratch, "sigs")
+        docs = load_spread(spark, "documents", sf_dir, key="doc_id")
+        sigs = minhash_sig_bands(docs.select("doc_id", "text")).drop("text")
+        sigs.write.mode("overwrite").parquet(path)
+        return spark.read.schema(sigs.schema).parquet(path)
+
+    return scratch_memo(spark, sf_dir, "documents", "minhash_sigs", build)
+
+
 def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full MinHash+LSH candidate-pair set (doc_a, doc_b, n_agree) —
     the shared core of the top-20 face (``dedup_minhash_lsh``) and the
@@ -275,18 +258,17 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     — shingling, 32 permuted mins, band signatures, the 200-member bucket
     cap, pair generation and the top-20 — value-exact.
 
-    Pipeline (all DataFrame ops, ONE pass over the corpus):
-      shingle → xxhash64 → 32 permuted mins per doc (higher-order
-      `array_min(transform(...))` — per-document, map-side only, NO shuffle)
-      → 8 band signatures → explode bands → groupBy (band, signature)
-      collecting bucket members → in-bucket pair generation with higher-order
-      functions → distinct candidate pairs → estimated Jaccard from signature
-      agreement → top-20.
+    Pipeline: the per-document signature table
+    (:func:`materialized_minhash_sigs` — shingle → md5 → 32 permuted mins
+    → 8 band signatures, one Arrow pass per corpus version) → explode
+    bands → groupBy (band, signature) collecting bucket members →
+    in-bucket pair generation with higher-order functions → distinct
+    candidate pairs → estimated Jaccard from signature agreement → top-20.
 
     Scale notes: the signature is a pure per-document computation, so it is
-    expressed as array expressions instead of explode + groupBy(doc_id) —
-    that variant shuffles every shingle hash (corpus-sized IO); this one
-    shuffles only 8 (band, sig) rows per document into the bucket groupBy.
+    computed map-side instead of explode + groupBy(doc_id) — that variant
+    shuffles every shingle hash (corpus-sized IO); this one shuffles only
+    8 (band, sig) rows per document into the bucket groupBy.
     A self-join on (band, signature) would recompute the whole
     shingle/minhash subplan for both sides and shuffle the corpus twice; the
     bucket-groupBy form shuffles once and generates pairs locally. Buckets are
@@ -294,12 +276,10 @@ def minhash_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     means a degenerate band signature, and capping bounds the worst-case pair
     blowup to 200² per bucket regardless of corpus size.
     """
-    # hash-spread before the expensive per-doc signature work (see
-    # _doc_shingles); the signature itself is the shared map-side-only
-    # builder — 31-bit shingle hashes so (a*h + b) stays within long under
-    # ANSI mode, fixed a_i/b_i seeds
-    docs = load_spread(spark, "documents", sf_dir, key="doc_id")
-    bands = minhash_sig_bands(docs.select("doc_id", "text")).drop("text")
+    # the signatures come from the session's memoized table, built by the
+    # shared map-side-only kernel — 31-bit shingle hashes so (a*h + b)
+    # stays within long under ANSI mode, fixed a_i/b_i seeds
+    bands = materialized_minhash_sigs(spark, sf_dir)
     exploded = bands.select(
         "doc_id",
         "sig",
@@ -1741,10 +1721,13 @@ def dedup_exact_substr(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id-keyed join against the tokenized frame.  Nothing is
     all-pairs; at 100 TB the postings pass is the same shape the
     MinHash pipeline already runs, and the maintained face shares the
-    incremental shingle-index state."""
+    incremental shingle-index state.  The postings come from the
+    session's :func:`materialized_kgram_index`, so a warm call never
+    re-hashes the corpus."""
     docs = load_spread(spark, "documents", sf_dir, key="doc_id")
-    toked = es_tokenized(docs)
-    return exact_substr_manifest(kgram_rows(toked), toked)
+    return exact_substr_manifest(
+        materialized_kgram_index(spark, sf_dir), es_tokenized(docs)
+    )
 
 
 def es_tokenized(docs: DataFrame) -> DataFrame:
@@ -1816,20 +1799,24 @@ def kgram_rows(toked: DataFrame) -> DataFrame:
     return toked.mapInArrow(kg_fn, out_schema)
 
 
-def _kgram_rows_expr(toked: DataFrame) -> DataFrame:
-    """The pre-r16 column-expression postings pipeline, kept as the parity
-    reference for the Arrow kernel above."""
-    n = F.size("t")
-    kgram_hashes = F.when(
-        n >= _ES_K,
-        F.transform(
-            F.sequence(F.lit(1), n - (_ES_K - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, _ES_K))),
-        ),
-    ).otherwise(F.expr("CAST(array() AS array<string>)"))
-    return toked.select(
-        "doc_id", F.posexplode(kgram_hashes).alias("p0", "h")
-    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "h")
+def materialized_kgram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, pos, h) k-gram postings of the documents corpus
+    (:func:`kgram_rows` over :func:`es_tokenized`), written once per
+    corpus version to scratch parquet and memoized — the batch faces'
+    twin of the maintained k-gram index, fed to the same
+    ``exact_substr_manifest`` / ``span_decon_manifest`` entry points.
+    Scratch parquet, not an in-memory checkpoint: one row per token
+    position is corpus-sized, like the BM25 postings."""
+    import os
+
+    def build(scratch):
+        path = os.path.join(scratch, "kgrams")
+        docs = load_spread(spark, "documents", sf_dir, key="doc_id")
+        rows = kgram_rows(es_tokenized(docs))
+        rows.write.mode("overwrite").parquet(path)
+        return spark.read.schema(rows.schema).parquet(path)
+
+    return scratch_memo(spark, sf_dir, "documents", "kgram_index", build)
 
 
 def exact_substr_spans(rows: DataFrame) -> DataFrame:
@@ -2021,8 +2008,9 @@ def decontaminate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 18th path's maintained leaf) so ingest-time state serves this
     face too."""
     docs = load_spread(spark, "documents", sf_dir, key="doc_id")
-    toked = es_tokenized(docs)
-    return span_decon_manifest(kgram_rows(toked), toked)
+    return span_decon_manifest(
+        materialized_kgram_index(spark, sf_dir), es_tokenized(docs)
+    )
 
 
 def decontaminate_spans_from_index(
@@ -2075,7 +2063,7 @@ def decontaminate_spans_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_spread(spark, "documents", sf_dir, key="doc_id")
     toked = es_tokenized(docs)
-    spans = span_decon_manifest(kgram_rows(toked), toked)
+    spans = span_decon_manifest(materialized_kgram_index(spark, sf_dir), toked)
     train_toked = toked.filter(_split_of(F.col("doc_id")) == "train")
     return apply_span_trim(train_toked, spans)
 

@@ -1638,7 +1638,11 @@ def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle emits ≤ k·d rows after combine and only the k×d rounded
     centroid matrix ever reaches the driver. The learned GEMM path
     (``_kmeans_centroids``) remains the production fit used by the IVF
-    family."""
+    family.
+
+    The fit (:func:`_kmeans_fit`) is memoized per embeddings version
+    (``io.memo`` face ``kmeans_profile``), so a warm call returns a lazy
+    plan of only the final assignment and the per-cluster aggregate."""
     emb = (
         # r16: the per-row work is now one vectorized Arrow batch per task
         # (fold_assign_cells), so fat batches beat 32 tiny Python
@@ -1647,14 +1651,49 @@ def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_spread(spark, "embeddings", sf_dir, min_rows=512)
         .filter(F.col("embedding").isNotNull())
         .select("vec_id", "embedding")
-        .persist()
     )
-    cents = pinned_forgy_seeds(emb, _KMEANS_K)  # doubles as empty probe
-    if not cents:
-        emb.unpersist()
-        return spark.createDataFrame([], "cluster int, n long, avg_dist double")
-    k_eff = len(cents)
+    # the fit is memoized per embeddings version; only a miss persists the
+    # corpus, which the fit and the final pass below then share
+    cached: list = []
 
+    def fit():
+        cached.append(emb.persist())
+        return _kmeans_fit(emb)
+
+    cents = memo(spark, sf_dir, "embeddings", "kmeans_profile", fit)
+    if not cents:
+        for df in cached:
+            df.unpersist()
+        return spark.createDataFrame([], "cluster int, n long, avg_dist double")
+    profile = (
+        pinned_fold_assign(spark, emb, cents)
+        .select(
+            "cell",
+            F.round(l2_distance("embedding", "c", dim=len(cents[0])), 6).alias(
+                "dist"
+            ),
+        )
+        .groupBy(F.col("cell").alias("cluster"))
+        .agg(
+            F.count("*").alias("n"),
+            F.round(F.avg("dist"), 4).alias("avg_dist"),
+        )
+        .orderBy("cluster")
+    )
+    # a hit launches no job here: only a miss has a persisted corpus to
+    # release, which needs the profile materialized first
+    return checkpoint_release(profile, *cached) if cached else profile
+
+
+def _kmeans_fit(emb: DataFrame) -> list:
+    """The pinned k-means fit behind :func:`kmeans_cluster_profile`: the
+    md5 Forgy seeds, then ``_KMEANS_ITERS`` Lloyd rounds whose new
+    centroids are per-dimension means rounded at 6 decimals.  Returns the
+    centroid list ([] for an empty corpus)."""
+    cents = pinned_forgy_seeds(emb, _KMEANS_K)
+    if not cents:
+        return cents
+    k_eff = len(cents)
     for _ in range(_KMEANS_ITERS):
         mean_rows = (
             # the mean rounds never read the winning centroid vector, so
@@ -1675,22 +1714,7 @@ def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             else cents[j]  # empty cells keep their previous vector
             for j in range(k_eff)
         ]
-    return checkpoint_release(
-        pinned_fold_assign(spark, emb, cents)
-        .select(
-            "cell",
-            F.round(l2_distance("embedding", "c", dim=len(cents[0])), 6).alias(
-                "dist"
-            ),
-        )
-        .groupBy(F.col("cell").alias("cluster"))
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("dist"), 4).alias("avg_dist"),
-        )
-        .orderBy("cluster"),
-        emb,
-    )
+    return cents
 
 
 def fold_assign_cells(

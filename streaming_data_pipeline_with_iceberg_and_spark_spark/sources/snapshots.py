@@ -2632,9 +2632,10 @@ class MultiTableTransaction:
         ``add_deletes`` the eq-delete), and the fold scopes the eq-delete to
         the dirs visible at the commit's parent, so an append that lands
         between staging and commit is kept and superseded on matching keys.
-        Crash recovery still enforces the same parent pin as a staged
-        overwrite. On an empty table the eq-delete's scope is empty and it
-        is dropped: a plain staged append."""
+        Crash recovery does the same: only a racing commit that is not a
+        pure append (a rewrite) aborts the intent. On an empty table the
+        eq-delete's scope is empty and it is dropped: a plain staged
+        append."""
         tkey = (table.root, table.ref)
         self._table(tkey)
         table._check_stale_writer(df)
@@ -2688,12 +2689,16 @@ def _apply_staged(
     recovery safe to run any number of times (dir names are uuid-unique, so
     the reference check is exact).
 
-    ``recovery=True`` additionally enforces the OVERWRITE staleness pin: if
-    the table moved past the version the overwrite was computed against,
+    ``recovery=True`` additionally enforces the staleness pin: if the table
+    moved past the version a staged OVERWRITE was computed against,
     applying it would silently revert the racing writer's commit — raise
     :class:`SnapshotConflict` instead (the live ``commit()`` path applies
     immediately after the intent rename, so only crash recovery can observe
-    this). Every pin is validated BEFORE anything applies — a mid-list
+    this). A staged UPSERT-KEYS is pinned only against commits that are not
+    pure appends: its eq-delete is scoped at fold time, so a racing append
+    is kept and superseded on matching keys exactly as in the live path,
+    while a racing rewrite (overwrite, compact, merge, delete, ...) aborts
+    it. Every pin is validated BEFORE anything applies — a mid-list
     conflict must abort the whole intent, not leave it half-applied (the
     torn state transactions exist to prevent). Appends apply regardless:
     their delta entry commutes with any interleaved commit."""
@@ -2702,25 +2707,28 @@ def _apply_staged(
     # not re-parse every table's full log once per validation AND once per
     # apply (entries' dir uuids are disjoint, so flags stay valid as
     # earlier entries commit)
-    refd: dict[tuple[str, str], set[str]] = {}
-    for key, t in tables.items():
-        refd[key] = {d for snap in t._log() for d in t._named(snap)}
+    logs = {key: t._log() for key, t in tables.items()}
+    refd = {
+        key: {d for snap in log for d in SnapshotTable._named(snap)}
+        for key, log in logs.items()
+    }
     applied = [
         any(d in refd[(s["root"], s["ref"])] for d in s["new_dirs"]) for s in staged
     ]
 
     if recovery:
         for s, done in zip(staged, applied):
-            t = tables[(s["root"], s["ref"])]
-            if (
-                s["op"] in ("overwrite", "upsert-keys")
-                and not done
-                and t.current_version() != s.get("parent")
-            ):
+            if done or s["op"] not in ("overwrite", "upsert-keys"):
+                continue
+            key = (s["root"], s["ref"])
+            since = [e for e in logs[key] if e["id"] > (s.get("parent") or 0)]
+            if s["op"] == "upsert-keys":
+                since = [e for e in since if not _pure_append(e)]
+            if since:
                 raise SnapshotConflict(
-                    f"crashed {s['op']} for {t.root} was staged at version "
-                    f"{s.get('parent')} but the table is now at "
-                    f"{t.current_version()}"
+                    f"crashed {s['op']} for {tables[key].root} was staged at "
+                    f"version {s.get('parent')} but version {since[0]['id']} "
+                    f"({since[0]['op']}) has since landed"
                 )
     versions: dict[tuple[str, str], int] = {}
     for s, done in zip(staged, applied):
@@ -2747,6 +2755,15 @@ def _apply_staged(
         entry = t._commit(base)
         versions[(t.root, t.ref)] = entry["id"]
     return versions
+
+
+def _pure_append(entry: dict) -> bool:
+    """Does log ``entry`` only add data paths (no full-state replace, no
+    removed path, no new delete)? Such a commit commutes with a staged
+    upsert's delta."""
+    return bool(entry.get("add")) and not (
+        "dirs" in entry or entry.get("remove") or entry.get("add_deletes")
+    )
 
 
 def transaction_batch_seen(tables: list[SnapshotTable], batch_id) -> bool:
@@ -2781,8 +2798,9 @@ def recover_transactions(spark: SparkSession, txn_dir: str) -> list[str]:
     Idempotent: already-applied tables are detected by dir reference and
     skipped; intents replay in COMMIT order (file mtime — each intent's
     rename is its commit point). An intent whose overwrite was raced by a
-    non-transactional writer is NOT applied (applying would revert that
-    writer's commit): it is renamed to ``*.aborted.json`` for inspection —
+    non-transactional writer, or whose keyed upsert was raced by a
+    rewrite, is NOT applied (applying would revert that writer's commit):
+    it is renamed to ``*.aborted.json`` for inspection —
     routing all writers to transaction-managed tables through their
     :class:`SnapshotWarehouse` (which recovers on open) prevents the race,
     the same discipline a catalog service enforces. Returns the recovered

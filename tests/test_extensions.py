@@ -1073,9 +1073,13 @@ def test_heavy_hitters_candidate_phase_survives_cap_overflow(spark, tmp_path, mo
 def test_kmeans_cluster_profile_invariants(spark, sf_dir):
     """The k-means profile must be deterministic at its rounded precision,
     cover every corpus vector exactly once, and actually refine: multi-round
-    centroids give a weakly LOWER mean distance than the raw seeds."""
+    centroids give a weakly LOWER mean distance than the raw seeds.  The
+    fit is memoized, so the determinism check clears the memo between the
+    two calls (two fits, not a fit and its memo hit), and a third call
+    must be served from the memo."""
     import numpy as np
 
+    from streaming_data_pipeline_with_iceberg_and_spark_spark import io
     from streaming_data_pipeline_with_iceberg_and_spark_spark.io import load
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.similarity import (
         _KMEANS_K,
@@ -1083,8 +1087,13 @@ def test_kmeans_cluster_profile_invariants(spark, sf_dir):
     )
 
     out1 = similarity.kmeans_cluster_profile(spark, sf_dir).collect()
+    io.clear_all()
     out2 = similarity.kmeans_cluster_profile(spark, sf_dir).collect()
     assert sorted(map(tuple, out1)) == sorted(map(tuple, out2))
+    hits = io.MEMO_STATS["kmeans_profile", "hit"]
+    out3 = similarity.kmeans_cluster_profile(spark, sf_dir).collect()
+    assert io.MEMO_STATS["kmeans_profile", "hit"] == hits + 1
+    assert sorted(map(tuple, out3)) == sorted(map(tuple, out1))
     n_corpus = load(spark, "embeddings", sf_dir).count()
     assert sum(r.n for r in out1) == n_corpus
     assert 1 <= len(out1) <= _KMEANS_K
@@ -3722,9 +3731,10 @@ def test_taste_graph_ops_release_caches(spark, sf_dir):
 def test_cc_memo_rebuilds_after_documents_rewrite(spark, tmp_path):
     """The session memos key on a file fingerprint of documents, so a
     SAME-SESSION rewrite of the corpus under the same path (the snapshot
-    layer can do this) must produce fresh clusters and a fresh BM25 index,
-    not the memoized stale ones (r11 verdict low #2) — and the rewrite
-    must release the old index's scratch dir."""
+    layer can do this) must produce fresh clusters, a fresh BM25 index,
+    fresh MinHash signatures and fresh k-gram postings, not the memoized
+    stale ones (r11 verdict low #2) — and the rewrite must release the old
+    scratch dirs."""
     import os
     from urllib.parse import urlparse
 
@@ -3758,6 +3768,14 @@ def test_cc_memo_rebuilds_after_documents_rewrite(spark, tmp_path):
     assert v1[0] == v1[1]
     terms1, scratch1 = index_terms()
     assert "extra" in terms1 and os.path.isdir(scratch1)
+    # doc 1 (train split) shares its 14-token prefix with doc 0 (test)
+    lsh1 = {(r["doc_a"], r["doc_b"]) for r in dedup.dedup_minhash_lsh(spark, sf).collect()}
+    assert (0, 1) in lsh1
+    spans1 = dedup.decontaminate_spans(spark, sf).collect()
+    assert [(r["doc_id"], r["eval_doc_id"], r["n_tokens"]) for r in spans1] == [(1, 0, 14)]
+    sigs1 = _scratch_of(dedup.materialized_minhash_sigs(spark, sf))
+    kgrams1 = _scratch_of(dedup.materialized_kgram_index(spark, sf))
+    assert os.path.isdir(sigs1) and os.path.isdir(kgrams1)
     # v2 rewrite: all three docs pairwise-distinct -> all singletons
     write_docs([base, "an entirely new second document with no shared shingles whatsoever here",
                 "completely different text about spark engines and parquet files"])
@@ -3771,6 +3789,53 @@ def test_cc_memo_rebuilds_after_documents_rewrite(spark, tmp_path):
     assert "whatsoever" in terms2 and "extra" not in terms2, "stale postings"
     assert scratch2 != scratch1
     assert not os.path.exists(scratch1), "v1 index scratch dir leaked"
+    lsh2 = {(r["doc_a"], r["doc_b"]) for r in dedup.dedup_minhash_lsh(spark, sf).collect()}
+    assert (0, 1) not in lsh2, "stale MinHash signatures"
+    assert dedup.decontaminate_spans(spark, sf).collect() == [], "stale k-grams"
+    assert _scratch_of(dedup.materialized_minhash_sigs(spark, sf)) != sigs1
+    assert _scratch_of(dedup.materialized_kgram_index(spark, sf)) != kgrams1
+    assert not os.path.exists(sigs1), "v1 signature scratch dir leaked"
+    assert not os.path.exists(kgrams1), "v1 k-gram scratch dir leaked"
+
+
+def _scratch_of(df):
+    """The memo scratch dir a frame read from a scratch_memo entry lives in."""
+    import os
+    from urllib.parse import urlparse
+
+    return os.path.dirname(os.path.dirname(urlparse(df.inputFiles()[0]).path))
+
+
+def test_kmeans_memo_rebuilds_after_embeddings_rewrite(spark, tmp_path):
+    """The k-means fit is memoized per embeddings version: a same-session
+    rewrite must refit (one more ``kmeans_profile`` build) and profile the
+    new corpus, not serve the old centroids."""
+    from streaming_data_pipeline_with_iceberg_and_spark_spark import io
+
+    sf = str(tmp_path)
+
+    def write_emb(vecs):
+        spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<float>",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/embeddings.parquet")
+
+    write_emb([(i % 5, 1.0) for i in range(40)])
+    builds = io.MEMO_STATS["kmeans_profile", "build"]
+    p1 = similarity.kmeans_cluster_profile(spark, sf).collect()
+    similarity.kmeans_cluster_profile(spark, sf).collect()
+    assert io.MEMO_STATS["kmeans_profile", "build"] == builds + 1
+    assert sum(r["n"] for r in p1) == 40
+
+    # v2: a different corpus; a stale fit would still count every new
+    # vector, so the profile is also compared with a fresh fit
+    write_emb([(100.0 * (i % 3), 0.0) for i in range(30)])
+    p2 = similarity.kmeans_cluster_profile(spark, sf).collect()
+    assert io.MEMO_STATS["kmeans_profile", "build"] == builds + 2
+    assert sum(r["n"] for r in p2) == 30
+    io.clear_all()
+    fresh = similarity.kmeans_cluster_profile(spark, sf).collect()
+    assert sorted(map(tuple, fresh)) == sorted(map(tuple, p2))
 
 
 def test_bpe_merge_fold_is_exact_greedy(spark):
@@ -4931,6 +4996,67 @@ def test_dim_folds_bit_exact_vs_hof(spark, sf_dir):
         assert repr(r["h"]) == repr(r["u"])
 
 
+def _minhash_sig_bands_expr(df, text_col="text"):
+    """The column-expression signature pipeline the Arrow kernel
+    ``dedup.minhash_sig_bands`` replaced, kept here as its parity
+    reference."""
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.functions.text import (
+        md5_bucket32,
+        shingles,
+        tokens,
+    )
+
+    p, rows, bands, perms = dedup._MH_P, dedup._MH_ROWS, dedup._MH_BANDS, dedup._MH_PERMS
+    sh_df = (
+        df.filter(F.coalesce(F.trim(F.col(text_col)), F.lit("")) != "")
+        .withColumn("__sh", F.array_distinct(shingles(tokens(text_col), 3)))
+        .filter(F.size("__sh") > 0)
+    )
+    hs_df = sh_df.withColumn(
+        "__hs",
+        F.transform("__sh", lambda s: F.pmod(md5_bucket32(s), F.lit(1 << 31))),
+    ).drop("__sh")
+    mins = hs_df.select(
+        "*",
+        *[
+            F.array_min(
+                F.transform(
+                    "__hs", lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(p))
+                )
+            ).alias(f"__m{i}")
+            for i, (a, b) in enumerate(dedup._MH_AB)
+        ],
+    ).drop("__hs")
+    out = mins.select(
+        "*",
+        *[
+            F.md5(
+                F.concat_ws(",", *[F.col(f"__m{b * rows + r}") for r in range(rows)])
+            ).alias(f"band{b}")
+            for b in range(bands)
+        ],
+        F.array(*[F.col(f"__m{i}") for i in range(perms)]).alias("sig"),
+    )
+    return out.drop(*[f"__m{i}" for i in range(perms)])
+
+
+def _kgram_rows_expr(toked):
+    """The column-expression postings pipeline the Arrow kernel
+    ``dedup.kgram_rows`` replaced, kept here as its parity reference."""
+    k = dedup._ES_K
+    n = F.size("t")
+    kgram_hashes = F.when(
+        n >= k,
+        F.transform(
+            F.sequence(F.lit(1), n - (k - 1)),
+            lambda i: F.md5(F.concat_ws(" ", F.slice("t", i, k))),
+        ),
+    ).otherwise(F.expr("CAST(array() AS array<string>)"))
+    return toked.select(
+        "doc_id", F.posexplode(kgram_hashes).alias("p0", "h")
+    ).select("doc_id", (F.col("p0") + 1).alias("pos"), "h")
+
+
 def test_minhash_arrow_kernel_parity_with_expr_form(spark, sf_dir):
     """r16: the Arrow MinHash signature kernel must agree BYTE-for-byte
     with the pure-column-expression pipeline it replaced — same kept
@@ -4952,7 +5078,7 @@ def test_minhash_arrow_kernel_parity_with_expr_form(spark, sf_dir):
     new = {r["doc_id"]: key(r) for r in dedup.minhash_sig_bands(both).collect()}
     old = {
         r["doc_id"]: key(r)
-        for r in dedup._minhash_sig_bands_expr(both).collect()
+        for r in _minhash_sig_bands_expr(both).collect()
     }
     assert new == old
     assert 9001 not in new and 9002 not in new  # null/space-only drop
@@ -4973,7 +5099,7 @@ def test_kgram_arrow_kernel_parity_with_expr_form(spark, sf_dir):
     )
     toked = dedup.es_tokenized(docs.unionByName(degenerate))
     new = sorted(map(tuple, dedup.kgram_rows(toked).collect()))
-    old = sorted(map(tuple, dedup._kgram_rows_expr(toked).collect()))
+    old = sorted(map(tuple, _kgram_rows_expr(toked).collect()))
     assert new == old
     new_ids = {r[0] for r in new}
     assert 9101 not in new_ids and 9102 not in new_ids

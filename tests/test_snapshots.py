@@ -2172,9 +2172,11 @@ def test_stage_upsert_keys_merges_on_read(spark, tmp_path):
 
 
 def test_stage_upsert_keys_recovery_and_stale_pin(spark, tmp_path):
-    """A crashed upsert-keys intent must recover exactly once; one staged
-    against a version the table has moved past must NOT apply (it would
-    revert the racing writer's commit) — the overwrite pin, extended."""
+    """A crashed upsert-keys intent must recover exactly once. One staged
+    before a racing APPEND still applies (its eq-delete is scoped at fold
+    time, so the append survives and is superseded on matching keys); one
+    staged before a racing REWRITE must NOT apply (it would revert the
+    racing writer's commit) — the overwrite pin, narrowed to rewrites."""
     import json as _json
 
     from streaming_data_pipeline_with_iceberg_and_spark_spark.sources import (
@@ -2204,22 +2206,38 @@ def test_stage_upsert_keys_recovery_and_stale_pin(spark, tmp_path):
     got = sorted((r["user_id"], r["v"]) for r in t.read().collect())
     assert got == [(1, 0), (2, 9), (3, 9)]
 
-    # stale pin: stage against current version, then race an append
+    # racing append: stage against current version, then append a row
+    # with the upserted key; recovery applies the upsert on top of it
     txn2 = MultiTableTransaction([t], str(tmp_path / "txns"))
     txn2.stage_upsert_keys(
         t,
         spark.createDataFrame([(1, 5)], "user_id long, v int"),
         key="user_id",
     )
-    t.append(spark.createDataFrame([(7, 0)], "user_id long, v int"))
+    t.append(spark.createDataFrame([(7, 0), (1, 0)], "user_id long, v int"))
     intent2 = str(tmp_path / "txns" / "txn-deadd00d.json")
     with open(intent2, "w") as f:
         _json.dump(txn2.staged, f)
-    recover_transactions(spark, str(tmp_path / "txns"))
-    # aborted, not applied: the racing append survives, no v=5 row
+    assert recover_transactions(spark, str(tmp_path / "txns")) == [intent2]
     got = sorted((r["user_id"], r["v"]) for r in t.read().collect())
-    assert (1, 5) not in got and (7, 0) in got
-    assert any(n.endswith(".aborted.json") for n in os.listdir(str(tmp_path / "txns")))
+    assert got == [(1, 5), (2, 9), (3, 9), (7, 0)]
+
+    # stale pin: a racing compact (a rewrite) aborts the intent
+    txn3 = MultiTableTransaction([t], str(tmp_path / "txns"))
+    txn3.stage_upsert_keys(
+        t,
+        spark.createDataFrame([(2, 6)], "user_id long, v int"),
+        key="user_id",
+    )
+    t.compact()
+    intent3 = str(tmp_path / "txns" / "txn-feedf00d.json")
+    with open(intent3, "w") as f:
+        _json.dump(txn3.staged, f)
+    assert recover_transactions(spark, str(tmp_path / "txns")) == []
+    # aborted, not applied: the compacted rows stand, no v=6 row
+    got = sorted((r["user_id"], r["v"]) for r in t.read().collect())
+    assert got == [(1, 5), (2, 9), (3, 9), (7, 0)]
+    assert os.listdir(str(tmp_path / "txns")) == ["txn-feedf00d.aborted.json"]
 
 
 def test_write_training_shards_replay_and_txn(spark, tmp_path):
