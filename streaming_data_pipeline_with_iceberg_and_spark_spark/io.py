@@ -186,7 +186,8 @@ def data_fingerprint(sf_dir: str, name: str) -> str:
 
 
 # The engine's one session memo: (applicationId, sf_dir, table, table
-# fingerprint, face) -> (session, value, release).  See :func:`memo`.
+# fingerprint, face) -> (session, value, release).  See :func:`memo`;
+# :func:`session_scratch_dir` keeps its dirs here too.
 _MEMO: dict = {}
 # (face, "hit" | "build") -> count, for tests and tracing
 MEMO_STATS: Counter = Counter()
@@ -206,6 +207,19 @@ def _drop(key: tuple) -> None:
         release(value)
 
 
+def _evict(app, key: tuple | None = None) -> None:
+    """Drop every entry whose session has stopped, and every entry on
+    another version of ``key``'s table."""
+    for k, (owner, _v, _r) in list(_MEMO.items()):
+        displaced = key is not None and k[:3] == key[:3] and k[3] != key[3]
+        if displaced or (owner is not None and k[0] != app and _stopped(owner)):
+            _drop(k)
+
+
+def _rmtree(path: str) -> None:
+    shutil.rmtree(path, ignore_errors=True)
+
+
 def memo(spark, sf_dir: str, table: str, face: str, build, release=None):
     """Session memo of state derived from one input table: return the
     value ``build()`` made for this (session, sf_dir, table version, face),
@@ -223,10 +237,7 @@ def memo(spark, sf_dir: str, table: str, face: str, build, release=None):
     if key in _MEMO:
         MEMO_STATS[face, "hit"] += 1
         return _MEMO[key][1]
-    for k, (owner, _v, _r) in list(_MEMO.items()):
-        displaced = k[:3] == key[:3] and k[3] != key[3]
-        if displaced or (owner is not None and k[0] != app and _stopped(owner)):
-            _drop(k)
+    _evict(app, key)
     value = build()
     _MEMO[key] = (spark, value, release)
     MEMO_STATS[face, "build"] += 1
@@ -243,13 +254,25 @@ def scratch_memo(spark, sf_dir: str, table: str, face: str, build):
         try:
             return build(scratch), scratch
         except BaseException:
-            shutil.rmtree(scratch, ignore_errors=True)
+            _rmtree(scratch)
             raise
 
     return memo(
-        spark, sf_dir, table, face, run,
-        release=lambda v: shutil.rmtree(v[1], ignore_errors=True),
+        spark, sf_dir, table, face, run, release=lambda v: _rmtree(v[1])
     )[0]
+
+
+def session_scratch_dir(spark, prefix: str) -> str:
+    """A fresh temp dir owned by ``spark``, for an operator whose lazy
+    result reads from it (the mutation faces' scratch tables).  It is kept
+    as a memo entry whose release removes it: :func:`clear_all` (and so
+    interpreter exit) removes it, and so does the next memo miss or
+    scratch dir after its session has stopped."""
+    app = spark.sparkContext.applicationId
+    _evict(app)
+    path = tempfile.mkdtemp(prefix=prefix)
+    _MEMO[app, None, "scratch", path, prefix] = (spark, path, _rmtree)
+    return path
 
 
 def clear_all() -> None:

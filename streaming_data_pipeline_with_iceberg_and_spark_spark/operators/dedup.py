@@ -1909,12 +1909,11 @@ def span_decon_manifest(rows: DataFrame, toked: DataFrame) -> DataFrame:
     compose.
 
     Scale shape: train and eval postings split off ONE shared k-gram
-    pass; the candidate join is hash-keyed (eval postings distinct per
-    (eval doc, hash) first — benchmark-sized eval sets broadcast under
-    AQE automatically); islands window over (train doc, eval doc)
-    partitions of only the MATCHED positions (contamination mass, not
-    corpus mass); the final slice joins tokens for span-bearing train
-    docs only."""
+    pass; the candidate join is a hash-keyed sort-merge join (eval
+    postings distinct per (eval doc, hash) first); islands window over
+    (train doc, eval doc) partitions of only the MATCHED positions
+    (contamination mass, not corpus mass); the final slice joins tokens
+    for span-bearing train docs only."""
     from .sampling import _split_of
 
     # r15 optimization round (guide §2.4): the old train/eval split-then-
@@ -1960,8 +1959,11 @@ def span_decon_manifest(rows: DataFrame, toked: DataFrame) -> DataFrame:
         .select("h", F.col("doc_id").alias("eval_doc_id"))
         .distinct()
     )
+    # sort-merge pinned: both sides are contamination-mass shuffles, and
+    # AQE's runtime broadcast built whichever side's stage finished first —
+    # two plan shapes that a warm session compiled anew at random
     hits = (
-        tr.join(ev, "h")
+        tr.join(ev.hint("merge"), "h")
         .select("doc_id", "eval_doc_id", "pos")
         .distinct()
     )

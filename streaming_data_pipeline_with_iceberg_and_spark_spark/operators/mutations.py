@@ -16,12 +16,10 @@ divergence between engines) — additive/constant mutations only.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from ..io import load, session_scratch_dir
 from ..sources.snapshots import SnapshotTable
 
 _ORDERS_COLS = [
@@ -39,7 +37,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 1000th orderkey is re-inserted under a shifted key as a new 'N'
     order (not matched → insert). Returns the merged table."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_cow_"))
+    t = SnapshotTable(spark, session_scratch_dir(spark, "spark_graft_cow_"))
     t.append(orders)
     updates = orders.filter(F.col("o_orderpriority") == "1-URGENT").withColumn(
         "o_totalprice", F.col("o_totalprice") + F.lit(10.0)
@@ -78,7 +76,7 @@ def delete_update_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE finished ('F') orders, then UPDATE high-priority survivors with
     a handling fee — two sequential CoW mutations; returns the final table."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_cow_"))
+    t = SnapshotTable(spark, session_scratch_dir(spark, "spark_graft_cow_"))
     t.append(orders)
     t.delete_where("o_orderstatus", "F", "F")
     t.update_where(
@@ -104,7 +102,7 @@ def snapshot_time_travel_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     even though the current version no longer contains the deleted rows
     (sources/snapshots.py; Iceberg's ``VERSION AS OF``)."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_tt_"))
+    t = SnapshotTable(spark, session_scratch_dir(spark, "spark_graft_tt_"))
     v1 = t.append(orders)
     t.delete_where("o_orderkey", 100, 5000, mode="cow")
     return t.read(version=v1).select(*_ORDERS_COLS)
@@ -124,7 +122,7 @@ def snapshot_changelog_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     as inserts and the deleted originals as deletes (the shifted keys sit
     above the delete range, so the two changes never overlap)."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_cl_"))
+    t = SnapshotTable(spark, session_scratch_dir(spark, "spark_graft_cl_"))
     v1 = t.append(orders)
     t.append(
         orders.filter(F.col("o_orderkey") % 97 == 0).withColumn(
@@ -155,7 +153,9 @@ def snapshot_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     absent, exercising the all-pruned path."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
     t = SnapshotTable(
-        spark, tempfile.mkdtemp(prefix="spark_graft_bl_"), bloom_cols=["o_orderkey"]
+        spark,
+        session_scratch_dir(spark, "spark_graft_bl_"),
+        bloom_cols=["o_orderkey"],
     )
     for i in range(4):
         t.append(orders.filter(F.col("o_custkey") % 4 == i))
@@ -179,7 +179,7 @@ def snapshot_schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataFr
     column must be gone, and values must match DuckDB computing the same
     final relation directly."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_se_"))
+    t = SnapshotTable(spark, session_scratch_dir(spark, "spark_graft_se_"))
     t.append(orders)
     t.rename_column("o_totalprice", "price")
     t.drop_column("o_orderpriority")
@@ -213,7 +213,7 @@ def snapshot_update_constrained_orders(spark: SparkSession, sf_dir: str) -> Data
     constraint validates the rewrite before it becomes visible, and the
     result must match DuckDB's CASE projection."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_uc_"))
+    t = SnapshotTable(spark, session_scratch_dir(spark, "spark_graft_uc_"))
     t.append(orders)
     t.add_constraint("price_nonneg", "o_totalprice >= 0")
     t.update_where("o_orderkey", 1000, 3000, {"o_totalprice": "o_totalprice + 25.0"})
@@ -235,7 +235,7 @@ def snapshot_positional_delete_orders(spark: SparkSession, sf_dir: str) -> DataF
     recorded as (file, row-position) pairs — no data rewritten — and the
     read-back must equal DuckDB's negated filter."""
     orders = load(spark, "orders", sf_dir).select(*_ORDERS_COLS)
-    t = SnapshotTable(spark, tempfile.mkdtemp(prefix="spark_graft_pd_"))
+    t = SnapshotTable(spark, session_scratch_dir(spark, "spark_graft_pd_"))
     t.append(orders)
     t.delete_where_positional("o_orderstatus = 'O' AND o_totalprice > 50000")
     return t.read().select(*_ORDERS_COLS)

@@ -30,9 +30,11 @@ from ..io import (
     load,
     load_spread,
     memo,
+    parquet_row_count,
     scratch_memo,
     small_df,
 )
+from ..session import ADAPTIVE_BROADCAST_BYTES
 
 _N_PLANES = 4  # per hash table → 16 buckets
 _N_TABLES = 2  # independent tables; candidates = union over tables
@@ -1271,10 +1273,16 @@ def ann_ivf_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return idx.query(queries, k=5, exact_probes=True)
 
 
-def _pinned_ivf_index(spark: SparkSession, sf_dir: str) -> "IvfIndex":
-    """The pinned-seed scratch index, memoized: the registry faces that
-    need it (ann_ivf_index, ann_recall_eval) share one ~4 s build; an
-    entry is one corpus-sized scratch dir."""
+def _pinned_ivf(
+    spark: SparkSession, sf_dir: str
+) -> tuple["IvfIndex", DataFrame | None]:
+    """The pinned-seed scratch index and its stored members frame
+    (vec_id, cell, embedding, nrm), memoized: the registry faces that
+    need it (ann_ivf_index, ann_recall_eval, the purity audits) share one
+    ~4 s build; an entry is one corpus-sized scratch dir.  The members
+    frame is read back once, at build, so a warm call lists no files and
+    runs no schema-inference job; it is None when the index holds no
+    quantizer (no indexable vectors)."""
 
     def build(scratch):
         idx = IvfIndex(spark, scratch)
@@ -1284,9 +1292,16 @@ def _pinned_ivf_index(spark: SparkSession, sf_dir: str) -> "IvfIndex":
             load_spread(spark, "embeddings", sf_dir, min_rows=512),
             pinned_seeds=True,
         )
-        return idx
+        if "ivf_centroids" not in idx.table.snapshot_props():
+            return idx, None
+        members = idx.table.read().select("vec_id", "cell", "embedding", "nrm")
+        return idx, members
 
     return scratch_memo(spark, sf_dir, "embeddings", "ivfidx", build)
+
+
+def _pinned_ivf_index(spark: SparkSession, sf_dir: str) -> "IvfIndex":
+    return _pinned_ivf(spark, sf_dir)[0]
 
 
 # SQL twin of the ENTIRE pinned-seed index lifecycle. Stage names mirror the
@@ -2814,12 +2829,11 @@ def label_purity_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label int, n_audited bigint, n_suspect bigint, "
         "suspect_rate double, mean_agree double"
     )
-    idx = _pinned_ivf_index(spark, sf_dir)
-    try:
-        cent_mat = idx._load_centroids()
-    except ValueError:
+    idx, members = _pinned_ivf(spark, sf_dir)
+    if members is None:
         # empty/pre-build index ⟺ no indexable vectors — empty report
         return spark.createDataFrame([], out_schema)
+    cent_mat = idx._load_centroids()
     d = int(cent_mat.shape[1])
     # r16: the corpus×centroid crossJoin + nprobe window this replaces paid
     # an interpreted HOF fold per (vector, cell) pair and a full-corpus
@@ -2844,7 +2858,12 @@ def label_purity_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank-1; NULL-vec_id rows can never match `vec_id != q_id` on either
     # form, so the filter keeps the candidate sets equal even if the
     # corpus carried them)
-    members = idx.table.read().select("vec_id", "cell", "embedding", "nrm")
+    # both corpus-sized joins are pinned from the footer row count: left to
+    # AQE, the runtime broadcast conversion of members raced the probe
+    # side's shuffle stage, and a pass where members finished first ran two
+    # fewer stages (the face's ±2 job jitter) and compiled new classes
+    n = parquet_row_count("embeddings", sf_dir)
+    members = _pinned_build(members, n * (4 * d + 48))
     cands = probes.join(members, "cell").filter(
         F.col("vec_id") != F.col("q_id")
     ).select(
@@ -2862,10 +2881,23 @@ def label_purity_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         cands.withColumn("rank", F.row_number().over(wn))
         .filter(F.col("rank") <= _PURITY_K)
         .join(
-            emb.select("vec_id", F.col("label").alias("nb_label")), "vec_id"
+            _pinned_build(
+                emb.select("vec_id", F.col("label").alias("nb_label")), n * 24
+            ),
+            "vec_id",
         )
     )
     return _purity_label_rollup(nbrs)
+
+
+def _pinned_build(df: DataFrame, max_bytes: int) -> DataFrame:
+    """``df`` as a join's build side with the strategy fixed at plan time:
+    broadcast when ``max_bytes`` (an upper bound from parquet footers)
+    fits AQE's own broadcast threshold, sort-merge otherwise.  The plan
+    then no longer depends on which shuffle stage finishes first."""
+    if max_bytes <= ADAPTIVE_BROADCAST_BYTES:
+        return F.broadcast(df)
+    return df.hint("merge")
 
 
 def _purity_label_rollup(nbrs: DataFrame) -> DataFrame:

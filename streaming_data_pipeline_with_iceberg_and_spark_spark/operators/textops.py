@@ -3390,31 +3390,32 @@ def materialized_bm25_index(
     (``streaming.ingest.start_incremental_bm25_ingest``) maintains durably;
     bm25_rank_from_index over either returns exactly what bm25_rank
     computes on the fly (parity tests in tests/test_streaming.py and
-    tests/test_textops.py)."""
+    tests/test_textops.py).  The memo holds the two read-back frames
+    themselves, with their written schemas, so a warm call lists no files
+    and runs no schema-inference job."""
     import os
 
     def build(scratch):
+        def write(df, name):
+            path = os.path.join(scratch, name)
+            df.write.mode("overwrite").parquet(path)
+            return spark.read.schema(df.schema).parquet(path)
+
         docs = load_spread(spark, "documents", sf_dir).persist()
         try:
-            (
+            postings = (
                 bm25_doc_postings(docs)
                 .repartition(F.col("term"))
                 .sortWithinPartitions("term", "doc_id")
-                .write.mode("overwrite")
-                .parquet(os.path.join(scratch, "postings"))
             )
-            bm25_stats_partial(docs).write.mode("overwrite").parquet(
-                os.path.join(scratch, "stats")
+            return (
+                write(postings, "postings"),
+                write(bm25_stats_partial(docs), "stats"),
             )
         finally:
             docs.unpersist()
-        return scratch
 
-    scratch = scratch_memo(spark, sf_dir, "documents", "bm25idx", build)
-    return (
-        spark.read.parquet(os.path.join(scratch, "postings")),
-        spark.read.parquet(os.path.join(scratch, "stats")),
-    )
+    return scratch_memo(spark, sf_dir, "documents", "bm25idx", build)
 
 
 def bm25_rank(
