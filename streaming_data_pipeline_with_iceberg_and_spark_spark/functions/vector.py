@@ -2,37 +2,11 @@
 expressions, no UDFs and no Python round-trip.
 
 Floats are cast to double before arithmetic so results match engines that
-accumulate in double (e.g. DuckDB's list_cosine_similarity oracle).
-
-Two forms per operation (r16 optimization round, guide §4.1):
-
-- The default higher-order-function fold (zip_with + aggregate) handles any
-  array length, but HOF lambdas evaluate INTERPRETED — each (row, element)
-  pays expression-tree walking and boxing outside whole-stage codegen,
-  which made the pair-scoring stages of the similarity family the most
-  expensive rows of the bench.
-- Passing ``dim`` (derived from the data — a centroid matrix width, never a
-  constant) compiles the SAME sequential fold as an unrolled left-deep
-  ``(((0.0 + t0) + t1) + …)`` chain of ``get()``/multiply/add primitives,
-  which whole-stage codegen turns into straight-line JVM code (measured
-  1.5-1.6× on the crossJoin scoring pipeline at sf0.1). The chain is the
-  IDENTICAL IEEE-double op sequence, so results are bit-exact vs the HOF
-  fold (asserted over every sf0.1 pair in tests); a ``size() == dim`` guard
-  falls back to the HOF form for ragged rows, and null elements propagate
-  to a null sum through either form.
-
-The dim form is assembled as ONE generated SQL string handed to a single
-``F.expr`` call: building the same tree Column-by-Column cost hundreds of
-py4j round trips (~0.5-0.8 s of DRIVER time per call site at d = 64 —
-measured, it erased the executor-side win), while the JVM parses the
-string in milliseconds.  It therefore accepts plain column NAMES, not
-Column expressions — every scoring site passes named columns anyway.
-
-``_UNROLL_MAX_DIM`` bounds the generated expression: past it a single
-projection of several folds risks janino method-size failures (measured —
-a 16×64-term argmax expression failed to compile and ran SLOWER than the
-HOF form on the interpreted fallback), and the HOF fold is returned
-instead.
+accumulate in double (e.g. DuckDB's list_cosine_similarity oracle).  Each
+operation is one higher-order-function fold, ``aggregate(zip_with(…))``:
+a sequential left-to-right sum that every oracle mirrors.  ``zip_with``
+pads a ragged pair with NULL, so a ragged pair, a NULL element or a NULL
+array yields NULL.
 """
 
 from __future__ import annotations
@@ -40,109 +14,25 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_UNROLL_MAX_DIM = 128
-
 
 def as_double(vec: Column | str) -> Column:
     vec = F.col(vec) if isinstance(vec, str) else vec
     return F.transform(vec, lambda x: x.cast("double"))
 
 
-def _c(v: Column | str) -> Column:
-    return F.col(v) if isinstance(v, str) else v
+def _fold(a: Column | str, b: Column | str, term) -> Column:
+    terms = F.zip_with(as_double(a), as_double(b), term)
+    return F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _q(name: str) -> str:
-    """Backtick-quote a column name for the generated SQL; a dotted name
-    is treated as an alias-qualified reference (`a`.`embedding`)."""
-    return ".".join(
-        "`" + part.replace("`", "``") + "`" for part in name.split(".")
-    )
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Dot product: aggregate(zip_with(a, b, *), 0.0, +)."""
+    return _fold(a, b, lambda x, y: x * y)
 
 
-def _dot_sql(a: str, b: str) -> str:
-    """HOF fold as SQL — value-identical to the Column form below."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        f"CAST(y AS DOUBLE)), 0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _unrolled_sql(a: str, b: str, dim: int, op: str) -> str:
-    """Left-deep ``(((0.0 + t0) + t1) + …)`` — the exact op order of
-    ``F.aggregate``'s sequential fold.  ``op`` is 'mul' (dot) or 'sqdiff'
-    (squared L2 term)."""
-    terms = []
-    for i in range(dim):
-        x = f"CAST(get({a}, {i}) AS DOUBLE)"
-        y = f"CAST(get({b}, {i}) AS DOUBLE)"
-        if op == "mul":
-            terms.append(f"({x} * {y})")
-        else:
-            terms.append(f"(({x} - {y}) * ({x} - {y}))")
-    acc = "0.0D"
-    for t in terms:
-        acc = f"({acc} + {t})"
-    return acc
-
-
-def _guarded_sql(a: str, b: str, dim: int, op: str, hof: str) -> str:
-    return (
-        f"CASE WHEN size({a}) = {dim} AND size({b}) = {dim} "
-        f"THEN {_unrolled_sql(a, b, dim, op)} ELSE {hof} END"
-    )
-
-
-def _dim_dot_sql(a: str, b: str, dim: int) -> str:
-    return _guarded_sql(a, b, dim, "mul", _dot_sql(a, b))
-
-
-def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    """Dot product: aggregate(zip_with(a, b, *), 0.0, +); ``dim`` swaps in
-    the bit-exact unrolled codegen form (module docstring) — requires
-    plain column names for ``a``/``b``."""
-    if dim is not None and dim <= _UNROLL_MAX_DIM:
-        if isinstance(a, str) and isinstance(b, str):
-            return F.expr(_dim_dot_sql(_q(a), _q(b), dim))
-        raise TypeError("dot(dim=...) requires plain column names")
-    a, b = _c(a), _c(b)
-    prods = F.zip_with(as_double(a), as_double(b), lambda x, y: x * y)
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def norm(a: Column | str, dim: int | None = None) -> Column:
-    if dim is not None and dim <= _UNROLL_MAX_DIM:
-        if isinstance(a, str):
-            return F.expr(f"SQRT({_dim_dot_sql(_q(a), _q(a), dim)})")
-        raise TypeError("norm(dim=...) requires a plain column name")
+def norm(a: Column | str) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    if dim is not None and dim <= _UNROLL_MAX_DIM:
-        if isinstance(a, str) and isinstance(b, str):
-            qa, qb = _q(a), _q(b)
-            return F.expr(
-                f"({_dim_dot_sql(qa, qb, dim)}) / "
-                f"(SQRT({_dim_dot_sql(qa, qa, dim)}) * "
-                f"SQRT({_dim_dot_sql(qb, qb, dim)}))"
-            )
-        raise TypeError("cosine(dim=...) requires plain column names")
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
-    if dim is not None and dim <= _UNROLL_MAX_DIM:
-        if isinstance(a, str) and isinstance(b, str):
-            qa, qb = _q(a), _q(b)
-            hof = (
-                f"aggregate(zip_with({qa}, {qb}, (x, y) -> "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-                f"0.0D, (acc, x) -> acc + x)"
-            )
-            return F.expr(f"SQRT({_guarded_sql(qa, qb, dim, 'sqdiff', hof)})")
-        raise TypeError("l2_distance(dim=...) requires plain column names")
-    a, b = _c(a), _c(b)
-    diffs = F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
+def l2_distance(a: Column | str, b: Column | str) -> Column:
+    return F.sqrt(_fold(a, b, lambda x, y: (x - y) * (x - y)))

@@ -3,6 +3,10 @@
 Scans are declared with explicit schemas (schemas.TESTDATA) so Catalyst gets
 stable column pruning / predicate pushdown targets, and small dimension
 tables are flagged for broadcast by the callers that join them.
+
+It also holds the engine's one session memo (:func:`memo`): state derived
+from an input table, keyed by the owning session, the table's version and
+the face that built it, and dropped when that session stops.
 """
 
 from __future__ import annotations
@@ -129,36 +133,6 @@ def parquet_row_count(name: str, sf_dir: str | None = None) -> int:
         return (1 << 63) - 1
 
 
-def embedding_dim(sf_dir: str | None = None, name: str = "embeddings") -> int | None:
-    """Vector width of a table's ``embedding`` column, from the FIRST row
-    of the parquet file (footer + one data page, no Spark job), memoized
-    per content fingerprint (r16 optimization round).
-
-    Feeds the dim-specialized fold expressions in ``functions.vector`` —
-    the value is a plan-time SPECIALIZATION hint, never an assumption:
-    every dim form carries a ``size() == dim`` guard that falls back to
-    the HOF fold for rows of any other width, so a wrong (or stale) dim
-    costs speed, not correctness.  ``None`` (missing/empty/unreadable
-    table) keeps callers on the plain HOF forms."""
-    sf_dir = sf_dir or os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-    def build():
-        try:
-            import pyarrow.parquet as pq
-
-            pf = pq.ParquetFile(os.path.join(sf_dir, f"{name}.parquet"))
-            for batch in pf.iter_batches(batch_size=64, columns=["embedding"]):
-                for v in batch.column(0):
-                    if v.is_valid:
-                        return len(v)
-        except Exception:
-            pass
-        return None
-
-    # session-free (a footer read), so it lives until the table changes
-    return memo(None, sf_dir, name, "embedding_dim", build)
-
-
 def data_fingerprint(sf_dir: str, name: str) -> str:
     """Cheap content-version fingerprint of a table's parquet path: every
     file's (relative name, size, mtime_ns), sorted. Every :func:`memo`
@@ -212,7 +186,7 @@ def _evict(app, key: tuple | None = None) -> None:
     another version of ``key``'s table."""
     for k, (owner, _v, _r) in list(_MEMO.items()):
         displaced = key is not None and k[:3] == key[:3] and k[3] != key[3]
-        if displaced or (owner is not None and k[0] != app and _stopped(owner)):
+        if displaced or (k[0] != app and _stopped(owner)):
             _drop(k)
 
 
@@ -229,10 +203,10 @@ def memo(spark, sf_dir: str, table: str, face: str, build, release=None):
     (scratch-dir faces pass an rmtree): every entry whose session has
     stopped, and every entry of this session on an older or newer version
     of the same table — so neither dead sessions nor a same-session
-    rewrite of the inputs pin state.  ``spark=None`` memoizes a
-    session-free value.  Checkpointed frames need no ``release``: a
-    dropped entry's RDD blocks are freed by GC + the ContextCleaner."""
-    app = None if spark is None else spark.sparkContext.applicationId
+    rewrite of the inputs pin state.  Checkpointed frames need no
+    ``release``: a dropped entry's RDD blocks are freed by GC + the
+    ContextCleaner."""
+    app = spark.sparkContext.applicationId
     key = (app, sf_dir, table, data_fingerprint(sf_dir, table), face)
     if key in _MEMO:
         MEMO_STATS[face, "hit"] += 1

@@ -27,7 +27,6 @@ from ..functions.text import md5_bucket16, normalize, shingles, tokens
 from ..functions.vector import dot, norm
 from ..io import (
     checkpoint_release,
-    embedding_dim,
     load,
     load_spread,
     memo,
@@ -1344,9 +1343,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-probed candidate generation)."""
     # norm precomputed per row before the pair join (1 array pass per pair
     # instead of 3 — same trick as knn_bruteforce)
-    d = embedding_dim(sf_dir)
+    # Negative result: at sf0.1, 4 cores, the deleted dim-unrolled fold ran
+    # this in 4.5-4.7 s warm, HOF 10.0-12.1 s; no workload runs that size.
     emb = load(spark, "embeddings", sf_dir).withColumn(
-        "nrm", norm("embedding", dim=d)
+        "nrm", norm("embedding")
     )
     a = emb.alias("a")
     b = emb.alias("b")
@@ -1361,7 +1361,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
             F.round(
-                dot("a.embedding", "b.embedding", dim=d)
+                dot("a.embedding", "b.embedding")
                 / (F.col("a.nrm") * F.col("b.nrm")),
                 5,
             ).alias("cos_sim"),
@@ -2353,7 +2353,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="vec_id long, probe_rank int, cell int, embedding array<float>",
         )
         .select("vec_id", "cell", "embedding")
-        .withColumn("nrm", norm("embedding", dim=embedding_dim(sf_dir)))
+        .withColumn("nrm", norm("embedding"))
     )
     a, b = assigned.alias("a"), assigned.alias("b")
     drops = (
@@ -2365,7 +2365,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("a.vec_id").alias("vec_id"),
             F.round(
-                dot("a.embedding", "b.embedding", dim=embedding_dim(sf_dir))
+                dot("a.embedding", "b.embedding")
                 / (F.col("a.nrm") * F.col("b.nrm")),
                 6,
             ).alias("cos_sim"),

@@ -30,8 +30,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import dot, norm
-from ..io import embedding_dim, load, load_spread, small_df
-from .textops import _BM25_B, _BM25_K1, _BM25_QUERIES, bm25_rank
+from ..io import load, load_spread, small_df
+from .textops import (
+    _BM25_B,
+    _BM25_K1,
+    _BM25_QUERIES,
+    bm25_rank_from_index,
+    materialized_bm25_index,
+)
 
 # Per-list retrieval depth (k of each underlying top-k), RRF smoothing
 # constant (60 is the standard from the original RRF paper), and the final
@@ -49,41 +55,31 @@ _HYBRID_QVECS = {1: 3, 2: 97, 3: 151, 4: 263, 5: 419}
 
 
 def hybrid_rank(
-    docs: DataFrame,
+    sparse: DataFrame,
     emb: DataFrame,
-    qterms: DataFrame,
     qvecs: DataFrame,
     k: int = _HYBRID_K,
     topk: int = _HYBRID_TOPK,
     c: int = _RRF_C,
-    postings: DataFrame | None = None,
-    stats_partials: DataFrame | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
-    """RRF-fuse BM25 top-``k`` with cosine top-``k`` — the reusable operator.
+    """RRF-fuse a sparse top-``k`` with cosine top-``k`` — the reusable
+    operator.
 
-    ``qterms`` is a (query_id, term) frame and ``qvecs`` a (query_id,
-    qvec_id) frame over ``emb``'s id space; both are tiny request batches by
-    contract (bm25_rank enforces its `_BM25_MAX_TERMS` bound; the dense side
+    ``sparse`` is a (query_id, doc_id, rank) ranking of at most ``k`` rows
+    per query — the output of ``bm25_rank`` or ``bm25_rank_from_index``
+    with the same ``k``.  ``qvecs`` is a (query_id, qvec_id) frame over
+    ``emb``'s id space, a tiny request batch by contract (the dense side
     broadcasts the query vectors). Returns the fused top-``topk`` per query
     with both constituent ranks exposed (NULL where a doc appeared in only
     one list).
     """
-    if postings is not None:
-        # r13: the sparse arm serves from the materialized inverted index
-        # (exact parity with bm25_rank by the mergeable-postings contract)
-        from .textops import bm25_rank_from_index
-
-        sparse = bm25_rank_from_index(postings, stats_partials, qterms, k=k)
-    else:
-        sparse = bm25_rank(docs, qterms, k=k)
     sparse = sparse.select(
         "query_id", "doc_id", F.col("rank").alias("bm25_rank")
     )
 
     corpus = (
         emb.filter(F.col("embedding").isNotNull())
-        .withColumn("nrm", norm("embedding", dim=dim))
+        .withColumn("nrm", norm("embedding"))
     )
     qside = (
         emb.filter(F.col("embedding").isNotNull())
@@ -92,7 +88,7 @@ def hybrid_rank(
             "query_id",
             "qvec_id",
             F.col("embedding").alias("q_vec"),
-            norm("embedding", dim=dim).alias("q_nrm"),
+            norm("embedding").alias("q_nrm"),
         )
     )
     scored = corpus.join(
@@ -101,7 +97,7 @@ def hybrid_rank(
         "query_id",
         F.col("vec_id").alias("doc_id"),
         F.round(
-            dot("q_vec", "embedding", dim=dim)
+            dot("q_vec", "embedding")
             / (F.col("q_nrm") * F.col("nrm")),
             5,
         ).alias("cos_sim"),
@@ -161,18 +157,18 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvecs = small_df(
         spark, sorted(_HYBRID_QVECS.items()), "query_id int, qvec_id long"
     )
-    from .textops import materialized_bm25_index
-
     postings, stats_partials = materialized_bm25_index(spark, sf_dir)
-    return hybrid_rank(
-        None,
-        load(spark, "embeddings", sf_dir),
+    sparse = bm25_rank_from_index(
+        postings,
+        stats_partials,
         qterms,
-        qvecs,
-        postings=postings,
-        stats_partials=stats_partials,
-        dim=embedding_dim(sf_dir),
+        k=_HYBRID_K,
+        terms=sorted({t for ts in _BM25_QUERIES.values() for t in ts}),
+        # qterms and terms come from the same pinned literal, so the
+        # coverage check would be a job that cannot fail
+        check_terms=False,
     )
+    return hybrid_rank(sparse, load(spark, "embeddings", sf_dir), qvecs)
 
 
 _Q_VALUES = ", ".join(
@@ -266,7 +262,6 @@ def mmr_rerank(
     k: int = _MMR_K,
     steps: int = _MMR_STEPS,
     lam: float = _MMR_LAMBDA,
-    dim: int | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance diversification (Carbonell & Goldstein
     1998) of a dense top-``k``: greedily select ``steps`` results where
@@ -296,7 +291,7 @@ def mmr_rerank(
     on (score, vec_id), so the selection sequence is deterministic — full
     value oracle, no rows-only carve-out."""
     corpus = emb.filter(F.col("embedding").isNotNull()).withColumn(
-        "nrm", norm("embedding", dim=dim)
+        "nrm", norm("embedding")
     )
     qside = (
         emb.filter(F.col("embedding").isNotNull())
@@ -305,7 +300,7 @@ def mmr_rerank(
             "query_id",
             "qvec_id",
             F.col("embedding").alias("q_vec"),
-            norm("embedding", dim=dim).alias("q_nrm"),
+            norm("embedding").alias("q_nrm"),
         )
     )
     scored = corpus.join(
@@ -314,7 +309,7 @@ def mmr_rerank(
         "query_id",
         "vec_id",
         F.round(
-            dot("q_vec", "embedding", dim=dim)
+            dot("q_vec", "embedding")
             / (F.col("q_nrm") * F.col("nrm")),
             5,
         ).alias("rel"),
@@ -358,7 +353,7 @@ def mmr_rerank(
             "a",
             "b",
             F.round(
-                dot("ea", "eb", dim=dim) / (F.col("na") * F.col("nb")), 5
+                dot("ea", "eb") / (F.col("na") * F.col("nb")), 5
             ).alias("sim"),
         )
     )
@@ -426,9 +421,7 @@ def mmr_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvecs = small_df(
         spark, sorted(_HYBRID_QVECS.items()), "query_id int, qvec_id long"
     )
-    return mmr_rerank(
-        load(spark, "embeddings", sf_dir), qvecs, dim=embedding_dim(sf_dir)
-    )
+    return mmr_rerank(load(spark, "embeddings", sf_dir), qvecs)
 
 
 def _mmr_sql() -> str:
@@ -764,8 +757,6 @@ def bm25_prf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PRF-expanded BM25 for the pinned query set (registry face of
     :func:`bm25_prf_rank`) — the recall stage of the retrieval story
     (rank → EXPAND → fuse → diversify → evaluate)."""
-    from .textops import materialized_bm25_index
-
     qterms = spark.createDataFrame(
         [(qid, t) for qid, ts in sorted(_BM25_QUERIES.items()) for t in ts],
         "query_id int, term string",

@@ -26,7 +26,6 @@ from ..functions.vector import as_double, dot, l2_distance, norm
 from ..io import (
     checkpoint_release,
     compact_checkpoint,
-    embedding_dim,
     load,
     load_spread,
     memo,
@@ -60,15 +59,10 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     The query side is broadcast; per-query top-k via window over the scored
     scan — TakeOrdered shape, corpus never shuffles on a pair key.
     """
-    # Norms are precomputed per row BEFORE the pair join — cosine() inline
+    # Norms are precomputed per row BEFORE the pair join — an inline cosine
     # would re-walk both arrays per pair (3 higher-order passes instead of 1).
     # Corpus side is spread across cores (single-split file would serialize
     # the scoring); the tiny query side reads the file directly.
-    # NOTE (r16, measured): dim-specialized folds LOSE on this |Q|-bounded
-    # shape — interleaved A/B showed warm 0.77-0.83 s (HOF) vs 0.91-0.99 s
-    # (dim) and a ~2 s janino-compile cold penalty; the pair count here
-    # (|Q|·n ≈ 40k at sf0.1) is too small to amortize the giant codegen'd
-    # chain.  Keep dim folds for the >=100k-pair faces only.
     emb = load_spread(spark, "embeddings", sf_dir).withColumn("nrm", norm("embedding"))
     queries = load(spark, "embeddings", sf_dir).withColumn(
         "nrm", norm("embedding")
@@ -540,7 +534,7 @@ def _ivf_serve_state(spark: SparkSession, sf_dir: str):
                     ),
                 )
                 .select("vec_id", "cell", "embedding")
-                .withColumn("nrm", norm("embedding", dim=embedding_dim(sf_dir)))
+                .withColumn("nrm", norm("embedding"))
             )
             return (cent_mat, compact_checkpoint(assigned))
         finally:
@@ -1041,7 +1035,7 @@ class IvfIndex:
                     "vec_id",
                     "cell",
                     "embedding",
-                    norm("embedding", dim=int(cent_mat.shape[1])).alias("nrm"),
+                    norm("embedding").alias("nrm"),
                 )
                 return self.table.overwrite(assigned, props=props)
             cent_mat = _kmeans_centroids(
@@ -1214,7 +1208,6 @@ class IvfIndex:
             probe = np.argsort(
                 -(q_mat @ cent_mat.T - cent_half), axis=1, kind="stable"
             )[:, :nprobe]
-        d = int(cent_mat.shape[1])
         probes = small_df(
             self.spark,
             [
@@ -1227,7 +1220,7 @@ class IvfIndex:
                 for j in range(nprobe)
             ],
             "q_id long, q_cell int, q_vec array<float>",
-        ).withColumn("q_nrm", norm("q_vec", dim=d))
+        ).withColumn("q_nrm", norm("q_vec"))
         # ONE manifest-pruned scan over every probed cell: files of unprobed
         # cells are never opened, and the IN filter pushes into the reader
         cells = sorted({int(c) for c in probe.reshape(-1)})
@@ -1240,7 +1233,7 @@ class IvfIndex:
             "q_id",
             "vec_id",
             F.round(
-                dot("q_vec", "embedding", dim=d)
+                dot("q_vec", "embedding")
                 / (F.col("q_nrm") * F.col("nrm")),
                 5,
             ).alias("cos_sim"),
@@ -1441,10 +1434,6 @@ def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded division. Scale shape: two audited corpus scans and a
     |Q|·k-bounded join — zero extra corpus-keyed work; at 100 TB the
     truncated scan reads 4× fewer vector bytes, which is the point."""
-    # NOTE (r16, measured): do NOT dim-specialize folds over tv here —
-    # tv is a COMPUTED alias (slice), and CollapseProject inlines the
-    # slice into every get() term of the unrolled chain (0.97 -> 1.55 s
-    # warm).  dim folds are only safe over direct data columns.
     emb = load_spread(spark, "embeddings", sf_dir).select(
         "vec_id", F.slice("embedding", 1, _MRL_DIM).alias("tv")
     ).withColumn("nrm", norm("tv"))
@@ -1684,9 +1673,7 @@ def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         pinned_fold_assign(spark, emb, cents)
         .select(
             "cell",
-            F.round(l2_distance("embedding", "c", dim=len(cents[0])), 6).alias(
-                "dist"
-            ),
+            F.round(l2_distance("embedding", "c"), 6).alias("dist"),
         )
         .groupBy(F.col("cell").alias("cluster"))
         .agg(
@@ -2216,10 +2203,6 @@ def quantization_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     audited corpus scans + a |Q|·k-bounded comparison join; at 100 TB the
     quantized scan reads 4× fewer vector bytes — the point of shipping
     int8."""
-    # NOTE (r16, measured): dq/q_vec are COMPUTED aliases (transform over
-    # the int8 decode) — dim-specializing these folds made the face 1.5x
-    # SLOWER (1.30 -> 2.03 s warm): CollapseProject inlines the decode
-    # into every get() term.  Keep the HOF folds over computed arrays.
     codes = _int8_scaled(load_spread(spark, "embeddings", sf_dir)).select(
         "vec_id",
         F.transform(_int8_qvec(), lambda q: q.cast("double")).alias("dq"),
@@ -2841,7 +2824,7 @@ def label_purity_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-nprobe rows map-side with bit-equal scores (guide §4.2)
     probes = fold_assign_cells(
         emb.select("vec_id", "label", "embedding").withColumn(
-            "nrm", norm("embedding", dim=d)
+            "nrm", norm("embedding")
         ),
         [[float(x) for x in cent_mat[j]] for j in range(cent_mat.shape[0])],
         nprobe=_IVF_NPROBE,
@@ -2864,6 +2847,8 @@ def label_purity_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fewer stages (the face's ±2 job jitter) and compiled new classes
     n = parquet_row_count("embeddings", sf_dir)
     members = _pinned_build(members, n * (4 * d + 48))
+    # Negative result: at sf0.1, 4 cores, the deleted dim-unrolled cosine
+    # took 5.8-7.0 warm CPU s, HOF 7.1-7.3 s; no workload runs that size.
     cands = probes.join(members, "cell").filter(
         F.col("vec_id") != F.col("q_id")
     ).select(
@@ -2871,7 +2856,7 @@ def label_purity_ivf_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_label",
         "vec_id",
         F.round(
-            dot("q_vec", "embedding", dim=d)
+            dot("q_vec", "embedding")
             / (F.col("q_nrm") * F.col("nrm")),
             5,
         ).alias("cos_sim"),
@@ -3126,13 +3111,12 @@ def label_knn_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     join instead. Neighbor selection reuses the exact-baseline fold:
     round-5 cosine, vec_id tie-break — the oracle replays it verbatim;
     the votes/majority stage runs on the ≤ _Q_CAP·k row frame."""
-    d = embedding_dim(sf_dir)
     emb = load_spread(spark, "embeddings", sf_dir).withColumn(
-        "nrm", norm("embedding", dim=d)
+        "nrm", norm("embedding")
     )
     queries = (
         load(spark, "embeddings", sf_dir)
-        .withColumn("nrm", norm("embedding", dim=d))
+        .withColumn("nrm", norm("embedding"))
         .filter(_query_pred(25))
         .select(
             F.col("vec_id").alias("q_id"),
@@ -3149,7 +3133,7 @@ def label_knn_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("label").alias("nb_label"),
         F.round(
-            dot("q_vec", "embedding", dim=d)
+            dot("q_vec", "embedding")
             / (F.col("q_nrm") * F.col("nrm")),
             5,
         ).alias("cos_sim"),

@@ -9,29 +9,40 @@ import math
 
 from pyspark.sql import functions as F
 
-from streaming_data_pipeline_with_iceberg_and_spark_spark.functions.vector import cosine, dot, l2_distance
+from streaming_data_pipeline_with_iceberg_and_spark_spark.functions.vector import dot, l2_distance, norm
 from streaming_data_pipeline_with_iceberg_and_spark_spark.operators import dedup, multimodal, similarity
 
 
 def test_vector_functions_match_python(spark):
     a = [1.0, 2.0, 3.0]
     b = [4.0, -5.0, 6.0]
-    df = spark.createDataFrame(
-        [(a, b)], "a array<float>, b array<float>"
+    rows = spark.createDataFrame(
+        [
+            (0, a, b),
+            (1, a, [4.0, -5.0]),  # ragged: zip_with pads with NULL
+            (2, [1.0, None, 3.0], b),  # NULL element
+            (3, None, b),  # NULL array
+        ],
+        "id int, a array<float>, b array<float>",
     ).select(
+        "id",
         dot("a", "b").alias("dot"),
-        cosine("a", "b").alias("cos"),
+        norm("a").alias("nrm"),
         l2_distance("a", "b").alias("l2"),
-    )
-    row = df.collect()[0]
+    ).collect()
+    got = {r.id: r for r in rows}
+    row = got[0]
     exp_dot = sum(x * y for x, y in zip(a, b))
-    exp_cos = exp_dot / (
-        math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
-    )
+    exp_nrm = math.sqrt(sum(x * x for x in a))
     exp_l2 = math.sqrt(sum((x - y) ** 2 for x, y in zip(a, b)))
     assert abs(row.dot - exp_dot) < 1e-9
-    assert abs(row.cos - exp_cos) < 1e-9
+    assert abs(row.nrm - exp_nrm) < 1e-9
     assert abs(row.l2 - exp_l2) < 1e-9
+    # one fold per operation: any NULL term makes the whole sum NULL
+    assert got[1].dot is None and got[1].l2 is None
+    assert got[1].nrm is not None  # a is complete on its own
+    assert got[2].dot is None and got[2].nrm is None and got[2].l2 is None
+    assert got[3].dot is None and got[3].nrm is None and got[3].l2 is None
 
 
 def test_minhash_lsh_deterministic_and_plausible(spark, sf_dir):
@@ -1710,7 +1721,9 @@ def test_hybrid_rank_matches_python_oracle_random(spark):
     )
     got = {
         (r.query_id, r.rank): (r.doc_id, r.rrf_score, r.bm25_rank, r.cos_rank)
-        for r in hybrid_rank(docs, emb, qterms, qvecs, k=k, topk=topk, c=c).collect()
+        for r in hybrid_rank(
+            textops.bm25_rank(docs, qterms, k=k), emb, qvecs, k=k, topk=topk, c=c
+        ).collect()
     }
 
     # ---- python oracle ----
@@ -1771,6 +1784,7 @@ def test_hybrid_rank_rrf_semantics(spark):
     1/(C+r_bm25) + 1/(C+r_cos) with a zero term for a missing list, a doc
     on both lists beats one with the same single rank, ranks contiguous."""
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.retrieval import _RRF_C, hybrid_rank
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.textops import bm25_rank
 
     docs = spark.createDataFrame(
         [
@@ -1794,7 +1808,7 @@ def test_hybrid_rank_rrf_semantics(spark):
     )
     qterms = spark.createDataFrame([(1, "apple")], "query_id int, term string")
     qvecs = spark.createDataFrame([(1, 1)], "query_id int, qvec_id long")
-    rows = hybrid_rank(docs, emb, qterms, qvecs, k=3, topk=4).collect()
+    rows = hybrid_rank(bm25_rank(docs, qterms, k=3), emb, qvecs, k=3, topk=4).collect()
     by_doc = {r.doc_id: r for r in rows}
     # bm25 list for "apple": [2, 1]; cosine list (excl. self): [4, 3, 2]
     assert by_doc[2].bm25_rank == 1 and by_doc[2].cos_rank == 3
@@ -4949,51 +4963,6 @@ def test_fold_assign_kernel_degenerate_rows(spark):
         ).collect()
     }
     assert mx == {1: 0, 2: None, 3: None, 4: None}
-
-
-def test_dim_folds_bit_exact_vs_hof(spark, sf_dir):
-    """r16: the dim-specialized unrolled folds (single-F.expr codegen
-    chains) must be BIT-exact vs the HOF forms over every corpus pair —
-    repr-level equality, the selfcheck's own comparison — and fall back
-    to the HOF result for ragged rows via the size() guard."""
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.functions import (
-        vector as V,
-    )
-    from streaming_data_pipeline_with_iceberg_and_spark_spark.io import load
-
-    emb = (
-        load(spark, "embeddings", sf_dir)
-        .filter(F.col("embedding").isNotNull())
-        .select("vec_id", "embedding")
-        .localCheckpoint(eager=True)
-    )
-    d = len(emb.first()["embedding"])
-    q = emb.limit(30).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    pairs = q.crossJoin(emb)
-    both = pairs.select(
-        V.dot("q_vec", "embedding").alias("h_dot"),
-        V.dot("q_vec", "embedding", dim=d).alias("u_dot"),
-        V.norm("embedding").alias("h_nrm"),
-        V.norm("embedding", dim=d).alias("u_nrm"),
-        V.l2_distance("q_vec", "embedding").alias("h_l2"),
-        V.l2_distance("q_vec", "embedding", dim=d).alias("u_l2"),
-        V.cosine("q_vec", "embedding").alias("h_cos"),
-        V.cosine("q_vec", "embedding", dim=d).alias("u_cos"),
-    ).collect()
-    for r in both:
-        assert repr(r["h_dot"]) == repr(r["u_dot"])
-        assert repr(r["h_nrm"]) == repr(r["u_nrm"])
-        assert repr(r["h_l2"]) == repr(r["u_l2"])
-        assert repr(r["h_cos"]) == repr(r["u_cos"])
-    # guard fallback: a wrong-dim specialization returns the HOF value
-    ragged = pairs.limit(5).select(
-        V.dot("q_vec", "embedding").alias("h"),
-        V.dot("q_vec", "embedding", dim=d + 3).alias("u"),
-    )
-    for r in ragged.collect():
-        assert repr(r["h"]) == repr(r["u"])
 
 
 def _minhash_sig_bands_expr(df, text_col="text"):

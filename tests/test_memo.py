@@ -200,6 +200,16 @@ def test_warm_build_runs_no_schema_inference(spark, sf_dir, face):
     assert not [s for s in stages if s.startswith("parquet at")], stages
 
 
+def test_warm_hybrid_build_launches_no_job(spark, sf_dir):
+    """The sparse arm gets the pinned term list, so a warm build collects
+    no query terms (it launched 2 jobs when it derived them)."""
+    import __spark_entry__
+
+    build = __spark_entry__.queries()["hybrid_search_rrf"]
+    build(spark, sf_dir)  # builds the memos
+    assert _stage_names(spark, lambda: build(spark, sf_dir)) == []
+
+
 def test_mutation_scratch_table_removed_by_clear_all(spark, sf_dir):
     import __spark_entry__
 

@@ -4,9 +4,12 @@ min-of-N warm) for a named subset of registry queries.
 Usage:
     python tools/qbench.py [--sf /root/testdata/sf0.1] [--warm 3] q1 q2 ...
 
-Prints one line per query: name, cold seconds, min-warm seconds. Same
-session config as the bench; ambient steal/load stamped at the end so a
-noisy sample is self-declaring. For optimization-loop use only — the
+Prints one line per query: name, cold seconds, min-warm seconds and the
+min-warm CPU seconds of the process tree (driver, JVM and Python workers:
+perfbench's ``tree_cpu_s``, the quantity its pass metrics gate; it spreads
+less than wall time on a shared machine). Same session config as the
+bench; ambient steal/load stamped at the end so a noisy sample is
+self-declaring. For optimization-loop use only — the
 driver contract stays bench.py.
 """
 
@@ -17,7 +20,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+sys.path.insert(1, os.path.join(_ROOT, "perfbench"))
+
+from workloads import tree_cpu_s  # noqa: E402
 
 
 def _cpu_times():
@@ -67,12 +74,16 @@ def main() -> int:
         t = time.perf_counter()
         force(fn(spark, args.sf))
         cold = time.perf_counter() - t
-        best = float("inf")
+        best = best_cpu = float("inf")
         for _ in range(args.warm):
-            t = time.perf_counter()
+            t, c = time.perf_counter(), tree_cpu_s()
             force(fn(spark, args.sf))
             best = min(best, time.perf_counter() - t)
-        print(f"{name}\tcold={cold:.3f}\twarm={best:.3f}", flush=True)
+            best_cpu = min(best_cpu, tree_cpu_s() - c)
+        print(
+            f"{name}\tcold={cold:.3f}\twarm={best:.3f}\twarm_cpu={best_cpu:.3f}",
+            flush=True,
+        )
     s1, t1 = _cpu_times()
     steal = 100.0 * (s1 - s0) / (t1 - t0) if t1 > t0 else 0.0
     print(f"# steal_pct={steal:.2f} load={os.getloadavg()}", flush=True)
