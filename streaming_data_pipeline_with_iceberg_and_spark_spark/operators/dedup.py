@@ -25,13 +25,7 @@ from pyspark.sql.window import Window
 
 from ..functions.text import md5_bucket16, normalize, shingles, tokens
 from ..functions.vector import dot, norm
-from ..io import (
-    checkpoint_release,
-    load,
-    load_spread,
-    memo,
-    scratch_memo,
-)
+from ..io import load, load_spread, memo, scratch_memo
 
 # MinHash parameters: 32 permutations in 8 bands of 4 rows; fixed seeds.
 _MH_PERMS = 32
@@ -2316,45 +2310,27 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     with their cluster.
 
     Scale shape: pair work is blocked by cluster (≈√N members per cell vs
-    corpus-wide all-pairs); the quantizer is the only driver-side state; at
-    100 TB the assigned corpus is written out partitioned by cell once and
-    within-cell pairs stay executor-local.
+    corpus-wide all-pairs); the quantizer is the only driver-side state;
+    the assigned corpus is the session's pinned IVF index, written out
+    partitioned by cell once, and within-cell pairs stay executor-local.
 
-    Oracle-GREEN since round 9 (was rows-only): the blocking quantizer is
-    now the PINNED md5-Forgy one (the ann_ivf_index precedent — raw
-    pinned seeds, √N cells; SemDeDup's blocking is approximate by
-    construction, so the unrefined pinned cells are as valid a partition
-    as the learned ones). Assignment is the GEMM pass with scores ROUNDED
-    at 5 before the argmax — ulp-aligned with the oracle's fold score at
-    BLAS speed (the first cut used the corpus×√N fold-expression
-    assignment: value-exact but N^1.5, 124× at the 100× sweep) — and the
-    drop test compares the ROUNDED cosine (6 decimals, the knn idiom) so
-    a last-ulp difference cannot flip a drop at the τ boundary.
-    Precision — every drop justified by a recomputed ≥τ neighbor — and
-    determinism stay asserted in tests/test_extensions.py."""
-    import numpy as np
+    Oracle-GREEN since round 9 (was rows-only): the blocking cells are the
+    members of the pinned IVF index (``similarity._pinned_ivf``: raw
+    md5-Forgy seeds, √N cells, fold-exact assignment — SemDeDup's
+    blocking is approximate by construction, so the unrefined pinned
+    cells are as valid a partition as learned ones), shared with
+    ann_ivf_index, ann_recall_eval and the purity audits through one
+    session memo; the twin's ``assign`` is ANN_IVF_INDEX_SQL's. The drop
+    test compares the ROUNDED cosine (6 decimals, the knn idiom) so a
+    last-ulp difference cannot flip a drop at the τ boundary. Precision —
+    every drop justified by a recomputed ≥τ neighbor — and determinism
+    stay asserted in tests/test_extensions.py."""
+    from .similarity import _pinned_ivf
 
-    from .similarity import _ivf_assign_fn, _ivf_n_cells, pinned_forgy_seeds
-
-    emb = (
-        load_spread(spark, "embeddings", sf_dir)
-        .filter(F.col("embedding").isNotNull())
-        .persist()
-    )
-    n = emb.count()
-    if n == 0:
-        emb.unpersist()
+    # the index holds no NULL embedding (IvfIndex._encode drops them)
+    assigned = _pinned_ivf(spark, sf_dir)[1]
+    if assigned is None:
         return spark.createDataFrame([], "vec_id long, cell int")
-    cents = pinned_forgy_seeds(emb, min(_ivf_n_cells(n), n))
-    assigned = (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(
-            _ivf_assign_fn(np.array(cents, dtype=np.float64), 1, round_scores=True),
-            schema="vec_id long, probe_rank int, cell int, embedding array<float>",
-        )
-        .select("vec_id", "cell", "embedding")
-        .withColumn("nrm", norm("embedding"))
-    )
     a, b = assigned.alias("a"), assigned.alias("b")
     drops = (
         a.join(
@@ -2374,11 +2350,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id")
         .distinct()
     )
-    return checkpoint_release(
+    return (
         assigned.join(drops, "vec_id", "left_anti")
         .select("vec_id", "cell")
-        .orderBy("vec_id"),
-        emb,
+        .orderBy("vec_id")
     )
 
 
@@ -2387,7 +2362,7 @@ _SEM_TAU = 0.35
 
 def _dedup_semantic_sql() -> str:
     """SQL twin of the pinned SemDeDup path: the ANN_IVF_INDEX seed/assign
-    idiom (md5-Forgy √N cells, fold-score rank-1) feeding the within-cell
+    CTEs (md5-Forgy √N cells, fold-score rank-1) feeding the within-cell
     keep-lowest-id drop rule on the 6-rounded cosine. ``assign`` is
     MATERIALIZED — it is referenced three times and DuckDB would otherwise
     inline (and re-evaluate) the quantizer chain per reference."""
@@ -2415,8 +2390,8 @@ assign AS MATERIALIZED (
   SELECT vec_id, v, cell FROM (
     SELECT ev.vec_id, ev.v, c.cell,
            ROW_NUMBER() OVER (PARTITION BY ev.vec_id
-             ORDER BY ROUND(list_inner_product(ev.v, c.c)
-                            - list_inner_product(c.c, c.c) / 2.0, 5) DESC,
+             ORDER BY (list_inner_product(ev.v, c.c)
+                       - list_inner_product(c.c, c.c) / 2.0) DESC,
                       c.cell ASC) AS rn
     FROM ev, c0 c
   ) WHERE rn = 1
@@ -2476,8 +2451,8 @@ ORACLES = {
     # SEVENTEENTH incremental path's maintained merge log)
     "dedup_clusters_lsh": DEDUP_CLUSTERS_LSH_SQL,
     "dedup_span_exact": DEDUP_SPAN_SQL,
-    # round 9: dedup_semantic upgraded rows-only → value-exact (pinned
-    # md5-Forgy blocking quantizer + 6-rounded cosine drop test);
+    # round 9: dedup_semantic upgraded rows-only → value-exact (blocking
+    # cells = the pinned IVF index's assign + 6-rounded cosine drop test);
     # precision + determinism stay asserted in tests/test_extensions.py
     "dedup_semantic": _dedup_semantic_sql(),
     "dedup_fingerprint": DEDUP_FINGERPRINT_SQL,

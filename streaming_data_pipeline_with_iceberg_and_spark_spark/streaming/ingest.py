@@ -674,16 +674,16 @@ def start_incremental_ann_ingest(
     schema,
     checkpoint_dir: str,
     max_files_per_trigger: int = 10,
-    pinned_seeds: bool = False,
 ) -> StreamingQuery:
     """Maintain a SERVING ANN index at ingest — the third incremental-index
     twin (dedup hashes, PCA moments, BM25 postings, now IVF cells): the
     first non-empty micro-batch bootstraps the quantizer (FAISS's
-    train-on-first-chunk recipe; ``pinned_seeds`` selects the reproducible
-    md5-Forgy init), and every later batch is ENCODED with the stored
-    centroids and appended — cost proportional to the batch, the index
-    layout untouched, queries answerable at any point via
-    ``IvfIndex.query`` with manifest-pruned probed-cell scans. Periodic
+    train-on-first-chunk recipe, the engine's one k-means fit with the
+    √N-cell rule), and every later batch is ENCODED with the stored
+    centroids by the same fold-exact cell rule and appended — cost
+    proportional to the batch, the index layout untouched, queries
+    answerable at any point via ``IvfIndex.query`` with manifest-pruned
+    probed-cell scans. Periodic
     quantizer refresh stays an explicit offline ``IvfIndex.build`` (the
     retrain cadence is an operator decision, not an ingest side effect).
 
@@ -707,7 +707,7 @@ def start_incremental_ann_ingest(
         if has_quantizer:
             idx.append_batch(batch_df, key)
         else:
-            idx.bootstrap_batch(batch_df, key, pinned_seeds=pinned_seeds)
+            idx.bootstrap_batch(batch_df, key)
 
     return _start(stream, checkpoint_dir, ann_batch, [idx.table])
 

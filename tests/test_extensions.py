@@ -1094,7 +1094,7 @@ def test_kmeans_cluster_profile_invariants(spark, sf_dir):
     from streaming_data_pipeline_with_iceberg_and_spark_spark.io import load
     from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.similarity import (
         _KMEANS_K,
-        _kmeans_centroids,
+        _kmeans_fit,
     )
 
     out1 = similarity.kmeans_cluster_profile(spark, sf_dir).collect()
@@ -1111,15 +1111,19 @@ def test_kmeans_cluster_profile_invariants(spark, sf_dir):
     assert all(r.avg_dist >= 0 for r in out1)
 
     # refinement: inertia under the fitted centroids <= under the raw seeds
-    rows = load(spark, "embeddings", sf_dir).select("embedding").collect()
+    corpus = load(spark, "embeddings", sf_dir).filter(
+        F.col("embedding").isNotNull()
+    )
+    rows = corpus.select("embedding").collect()
     mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
 
-    def inertia(cent):
+    def inertia(cents):
+        cent = np.array(cents, dtype=np.float64)
         d2 = ((mat[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
         return np.sqrt(d2.min(axis=1)).mean()
 
-    seeds = _kmeans_centroids(spark, sf_dir, k=_KMEANS_K, iters=0)
-    fitted = _kmeans_centroids(spark, sf_dir, k=_KMEANS_K, iters=3)
+    seeds = _kmeans_fit(corpus, _KMEANS_K, iters=0)
+    fitted = _kmeans_fit(corpus, _KMEANS_K, iters=3)
     assert inertia(fitted) <= inertia(seeds) + 1e-9
 
 
@@ -1171,6 +1175,45 @@ def test_ivf_index_prunes_files_appends_and_recalls(spark, sf_dir, tmp_path):
     assert idx.table.read(version=v1).filter(
         F.col("vec_id") == new_id
     ).count() == 0
+
+
+def test_ivf_index_append_encodes_degenerate_vectors(spark, tmp_path):
+    """An append encodes with the same fold-exact kernel as build: a batch
+    holding a ragged vector, a vector with a NULL element and a copy of an
+    indexed vector commits; the copy lands in its twin's cell, and the two
+    degenerate rows take the kernel's NULL-score rule (cell 0)."""
+    import numpy as np
+
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.operators.similarity import (
+        IvfIndex,
+    )
+
+    rng = np.random.default_rng(5)
+    corpus = spark.createDataFrame(
+        [(i, rng.standard_normal(8).round(6).tolist()) for i in range(30)],
+        "vec_id long, embedding array<float>",
+    )
+    idx = IvfIndex(spark, str(tmp_path / "idx"))
+    idx.build(corpus, iters=0)
+    # a twin outside cell 0, so its copy cannot land there by the NULL rule
+    twin = idx.table.read().filter("cell != 0").orderBy("vec_id").first()
+    batch = spark.createDataFrame(
+        [
+            (100, [1.0, 2.0, 3.0]),  # ragged (d = 8)
+            (101, [None] + [1.0] * 7),  # NULL element
+            (102, twin.embedding),  # copy of an indexed vector
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    v = idx.append(batch)
+    got = {
+        r.vec_id: r.cell
+        for r in idx.table.read(version=v).filter("vec_id >= 100").collect()
+    }
+    assert got == {100: 0, 101: 0, 102: twin.cell}
+    # the same rule the build's encode applies
+    ref = similarity.fold_assign_cells(batch, idx._load_centroids()).collect()
+    assert got == {r.vec_id: r.cell for r in ref}
 
 
 def test_ann_ivf_index_registry_entry(spark, sf_dir):

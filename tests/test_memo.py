@@ -224,3 +224,18 @@ def test_mutation_scratch_table_removed_by_clear_all(spark, sf_dir):
     assert os.path.isdir(root)
     io.clear_all()
     assert not os.path.exists(root)
+
+
+def test_dedup_semantic_serves_from_the_shared_ivf_index(spark, sf_dir):
+    """dedup_semantic blocks by the pinned IVF index's cells, so after
+    ann_ivf_index has built that index it is served from the same memo
+    entry instead of fitting and assigning a quantizer of its own."""
+    import __spark_entry__
+
+    qs = __spark_entry__.queries()
+    qs["ann_ivf_index"](spark, sf_dir).collect()
+    hits = io.MEMO_STATS["ivfidx", "hit"]
+    builds = io.MEMO_STATS["ivfidx", "build"]
+    qs["dedup_semantic"](spark, sf_dir).collect()
+    assert io.MEMO_STATS["ivfidx", "hit"] == hits + 1
+    assert io.MEMO_STATS["ivfidx", "build"] == builds

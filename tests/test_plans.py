@@ -825,7 +825,7 @@ def test_label_purity_monitor_serves_from_index(plan, spark, sf_dir):
         .select("vec_id", "label", "embedding")
     )
     nbrs = S._pinned_ivf_index(spark, sf_dir).query(
-        queries.select("vec_id", "embedding"), k=S._PURITY_K, exact_probes=True
+        queries.select("vec_id", "embedding"), k=S._PURITY_K
     )
     np_ = explain_string(nbrs)
     assert "ivfidx" in np_, np_
@@ -883,6 +883,8 @@ def test_dedup_semantic_blocks_pairs_by_cell(plan):
     assert "CartesianProduct" not in p, p
     # within-cell pair generation is an equi-join on the cell key
     assert "cell" in p and ("SortMergeJoin" in p or "ShuffledHashJoin" in p or "BroadcastHashJoin" in p), p
+    # the blocking cells are served from the shared pinned IVF index
+    assert "ivfidx" in p, p
 
 
 def test_concurrency_sweep_has_no_global_window(plan):

@@ -1301,7 +1301,6 @@ def test_incremental_ann_ingest_builds_servable_index(spark, tmp_path):
             schema="vec_id long, embedding array<float>",
             checkpoint_dir=ckpt,
             max_files_per_trigger=1,
-            pinned_seeds=True,
         )
         q.awaitTermination(120)
 
