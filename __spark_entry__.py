@@ -75,9 +75,9 @@ _MODULES = [
 #     strongest fresher same-surface sibling, justified inline at the
 #     tail block — each new head entry evicts from the in-window bottom.
 # Rows-only entries keep their standing impossibility contracts
-# (agg_hll_mergeable: sketch internals; ann_ivf / ann_ivfpq: no SQL twin of
-# the √N-cell Lloyd round or of the PQ codes, the pinned twins oracle-green;
-# ann_pq: hash-sampled PQ codebooks; pca_embeddings_project: driver-side
+# (agg_hll_mergeable: sketch internals; ann_ivf: no SQL twin of the
+# √N-cell Lloyd round, the pinned twin oracle-green; ann_pq / ann_ivfpq: no
+# SQL twin of the PQ codes; pca_embeddings_project: driver-side
 # eigensolver, its distributed input IS the oracle-checked pca_covariance).
 #
 # ROUND-16 ROTATION PLAN (write the r16 window from this, then recompute

@@ -323,8 +323,13 @@ def knn_bruteforce_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the closure below would axis-error on a 0-d matrix
         return spark.createDataFrame([], out_schema)
     q_ids = np.array([r["vec_id"] for r in q_rows])
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
+    # a NULL embedding scores NULL, as in the SQL form: only the non-NULL
+    # queries and corpus rows enter the GEMM, every other score is NaN,
+    # which ranks last and leaves the Arrow batch as NULL
+    q_ok = np.flatnonzero([r["embedding"] is not None for r in q_rows])
+    q_mat = np.array([q_rows[i]["embedding"] for i in q_ok], dtype=np.float64)
+    if len(q_ok):
+        q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
     k = 5
 
     def score(batches):
@@ -332,19 +337,23 @@ def knn_bruteforce_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
             if pdf.empty:  # empty Arrow batch from an empty partition
                 continue
             ids = pdf["vec_id"].to_numpy()
-            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            sims = q_mat @ mat.T  # |Q| x batch
+            ok = np.flatnonzero(pdf["embedding"].notna().to_numpy())
+            sims = np.full((len(q_ids), len(pdf)), np.nan)  # |Q| x batch
+            if len(q_ok) and len(ok):
+                mat = np.array(list(pdf["embedding"].iloc[ok]), dtype=np.float64)
+                mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+                sims[np.ix_(q_ok, ok)] = q_mat @ mat.T
             out_q, out_v, out_s = [], [], []
             for qi in range(len(q_ids)):
                 row = sims[qi]
                 mask = ids != q_ids[qi]
                 cand = np.where(mask)[0]
-                # select by (rounded score desc, vec_id asc) — identical to
-                # the final window's ordering, keeping the partial top-k
-                # consistent with the oracle under rounding ties
+                # select by (rounded score desc NULLS LAST, vec_id asc) —
+                # identical to the final window's ordering, keeping the
+                # partial top-k consistent with the oracle under rounding ties
                 r5 = np.round(row[cand], 5)
-                order = np.lexsort((ids[cand], -r5))
+                null = np.isnan(r5)
+                order = np.lexsort((ids[cand], -np.where(null, 0.0, r5), null))
                 top = cand[order[:k]]
                 out_q.extend([q_ids[qi]] * len(top))
                 out_v.extend(ids[top])
@@ -399,10 +408,10 @@ def _ivf_n_cells(n: int) -> int:
     return max(4, min(_IVF_MAX_CELLS, int(n**0.5)))
 
 
-# The ad-hoc ANN faces (ann_ivf / ann_pq / ann_ivfpq) memoize their learned
-# index state — quantizer plus the assigned/encoded corpus — per corpus
-# version (io.memo): each call used to re-fit and re-encode, 3-4 corpus
-# passes; an entry is ≤ one compact_checkpoint'ed encoded corpus per face.
+# The ad-hoc ANN faces memoize their learned index state per corpus version
+# (io.memo): ann_ivf's in _ivf_serve_state, ann_pq's and ann_ivfpq's in the
+# one IVFADC state _adc_serve_state; an entry is ≤ one compact_checkpoint'ed
+# encoded corpus per face.
 
 
 def _ivf_serve_state(spark: SparkSession, sf_dir: str):
@@ -485,246 +494,125 @@ _PQ_M = 8  # subvector count (64-dim → 8 subspaces of 8 dims)
 _PQ_K = 16  # centroids per subspace → 4-bit codes, 8 bytes per vector
 
 
-def _pq_codebooks(spark: SparkSession, sf_dir: str, emb: DataFrame):
-    """Per-subspace codebooks from a deterministic hash-ordered sample of
-    _PQ_K corpus vectors (sliced per subspace). At 100 TB the sample is a
-    bounded collect regardless of corpus size; a Lloyd refinement per
-    subspace would reuse the IVF means pattern if tighter codebooks are
-    needed."""
+def _pq_encoded(cent_mat, books):
+    """mapInPandas helper: per (vec_id, embedding) batch yields (pdf,
+    cells, residual slices (n, _PQ_M, sub), codes (n, _PQ_M)).  Every
+    pick — the coarse cell and each subspace's codeword — is the fold
+    rule (:func:`_fold_top_cells`, rank 1): the L2-nearest, ties to the
+    lower id."""
     import numpy as np
 
-    seeds = (
-        emb.select("vec_id", "embedding")
-        .orderBy(F.pmod(F.xxhash64(F.col("vec_id") + 7), F.lit(991)), "vec_id")
-        .limit(_PQ_K)
-        .collect()
-    )
-    if not seeds:
-        # empty corpus (routine at scale after a filter) — no codebooks
-        return None, 0
-    full = np.array(
-        [r["embedding"] for r in sorted(seeds, key=lambda r: r["vec_id"])],
-        dtype=np.float64,
-    )
-    d = full.shape[1]
-    sub = d // _PQ_M
-    # books[s]: (_PQ_K, sub) codebook for subspace s
-    return [full[:, s * sub : (s + 1) * sub] for s in range(_PQ_M)], sub
+    cell_pick = _fold_top_cells(cent_mat, 1)
+    code_picks = [_fold_top_cells(book, 1) for book in books]
+    sub = books.shape[2]
+
+    def gen(batches):
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            mat = np.array(list(pdf["embedding"]), dtype=np.float64)
+            cells = cell_pick(mat).to_numpy()
+            res = (mat - cent_mat[cells])[:, : _PQ_M * sub].reshape(-1, _PQ_M, sub)
+            codes = np.stack(
+                [pick(res[:, s]).to_numpy() for s, pick in enumerate(code_picks)],
+                axis=1,
+            )
+            yield pdf, cells, res, codes
+
+    return gen
 
 
-def _pq_serve_state(spark: SparkSession, sf_dir: str):
-    """ann_pq's session-memoized serving state: (codebooks, subspace
-    width, encoded corpus frame) — the encode pass runs once per
-    (session, corpus version), realizing the docstring's "the encode pass
-    runs once and would be persisted" in-session (r16)."""
+def _adc_serve_state(spark: SparkSession, sf_dir: str, face: str, k: int | None):
+    """The IVFADC state of both PQ faces (Jégou et al., TPAMI 2011 §IV),
+    session-memoized per corpus version as ``face``: (centroid matrix,
+    per-subspace codebooks, encoded corpus of (vec_id, cell, codes)).
+    Coarse cells are :func:`_kmeans_fit` with ``k`` cells and one Lloyd
+    round (ann_pq: one cell, so plain PQ; ann_ivfpq: None, the √N rule).
+    Codebooks are seeded with the residuals of the md5-Forgy seeds
+    (:func:`pinned_forgy_seeds`) against their cell, sliced per subspace,
+    then take one Lloyd round for all subspaces in one corpus pass: each
+    codeword becomes the mean of the residual slices it won, rounded at 6
+    as :func:`_kmeans_fit`'s means are.  NULL embeddings are unindexable
+    and drop before the build, as ``IvfIndex._encode`` drops them."""
     import numpy as np
     import pandas as pd
 
     def build():
-        emb = load_spread(spark, "embeddings", sf_dir).persist()
+        emb = (
+            load_spread(spark, "embeddings", sf_dir)
+            .filter(F.col("embedding").isNotNull())
+            .select("vec_id", "embedding")
+            .persist()
+        )
         try:
-            books, sub = _pq_codebooks(spark, sf_dir, emb)
-            if books is None:
-                return (None, 0, None)
+            cents = _kmeans_fit(emb, k=k, iters=1)
+            if not cents:
+                return (None, None, None)  # no indexable vectors
+            cent_mat = np.array(cents, dtype=np.float64)
+            seeds = np.array(pinned_forgy_seeds(emb, _PQ_K), dtype=np.float64)
+            resid = seeds - cent_mat[_fold_top_cells(cents, 1)(seeds).to_numpy()]
+            sub = cent_mat.shape[1] // _PQ_M
+            # books[s]: the (≤ _PQ_K, sub) codebook of subspace s
+            books = resid[:, : _PQ_M * sub].reshape(-1, _PQ_M, sub).transpose(1, 0, 2)
+            seeded = _pq_encoded(cent_mat, books)
 
-            def encode(batches):
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-                    codes = np.empty((len(pdf), _PQ_M), dtype=np.int32)
-                    for s, book in enumerate(books):
-                        seg = mat[:, s * sub : (s + 1) * sub]
-                        # ||x-c||² = ||x||² - 2x·c + ||c||²; ||x||² const/row
-                        d2 = -2.0 * (seg @ book.T) + (book**2).sum(axis=1)
-                        codes[:, s] = np.argmin(d2, axis=1)
+            def residual_rows(batches):
+                for _, _, res, codes in seeded(batches):
                     yield pd.DataFrame(
-                        {"vec_id": pdf["vec_id"], "codes": list(codes)}
+                        {
+                            "s": np.tile(np.arange(_PQ_M).repeat(sub), len(res)),
+                            "code": codes.repeat(sub, axis=1).ravel(),
+                            "pos": np.tile(np.arange(sub), len(res) * _PQ_M),
+                            "v": res.ravel(),
+                        }
                     )
 
-            encoded = emb.select("vec_id", "embedding").mapInPandas(
-                encode, schema="vec_id long, codes array<int>"
+            for r in (
+                emb.mapInPandas(residual_rows, "s int, code int, pos int, v double")
+                .groupBy("s", "code", "pos")
+                .agg(F.round(F.avg("v"), 6).alias("mv"))
+                .collect()  # ≤ _PQ_M·_PQ_K·sub rows; unwon codewords keep theirs
+            ):
+                books[r["s"], r["code"], r["pos"]] = r["mv"]
+            refined = _pq_encoded(cent_mat, books)
+
+            def code_rows(batches):
+                for pdf, cells, _, codes in refined(batches):
+                    yield pd.DataFrame(
+                        {"vec_id": pdf["vec_id"], "cell": cells, "codes": list(codes)}
+                    )
+
+            encoded = emb.mapInPandas(
+                code_rows, "vec_id long, cell int, codes array<int>"
             )
-            return (books, sub, compact_checkpoint(encoded))
+            return (cent_mat, books, compact_checkpoint(encoded))
         finally:
             emb.unpersist()
 
-    return memo(spark, sf_dir, "embeddings", "ann_pq", build)
+    return memo(spark, sf_dir, "embeddings", face, build)
 
 
-def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via product quantization (Jégou et al., TPAMI 2011 shape): each
-    corpus vector is compressed to _PQ_M 4-bit codebook ids; queries score
-    candidates with asymmetric distance (per-subspace lookup tables built
-    once per query, summed over codes). Top-5 smallest approximate L2 per
-    query. Rows-only check (codebooks are engine-internal); recall vs an
-    exact L2 baseline asserted in tests/test_extensions.py.
-
-    Scale shape: the corpus scan reads 8 BYTES per vector instead of 256
-    (the encode pass runs once per session/corpus version — the session
-    memo, r16); scoring is pure table lookup — no
-    floats from the corpus touch the query path, and the per-partition
-    partial top-k bounds what leaves each executor to k·|Q| rows."""
-    import numpy as np
-    import pandas as pd
-
-    books, sub, encoded = _pq_serve_state(spark, sf_dir)
-    if books is None:
-        return spark.createDataFrame(
-            [], "q_id long, rank int, vec_id long, approx_l2 double"
-        )
-
-    q_rows = (
-        load(spark, "embeddings", sf_dir)
-        .filter(_query_pred(50))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    if not q_rows:
-        return spark.createDataFrame(
-            [], "q_id long, rank int, vec_id long, approx_l2 double"
-        )
-    q_ids = np.array([r["vec_id"] for r in q_rows])
-    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-    # tables[q][s][k] = ||q_s - c_sk||² — |Q|·M·K floats, tiny and closure-
-    # shipped; a corpus smaller than _PQ_K yields a shorter codebook, so
-    # size from the fitted rows
-    tables = np.empty((len(q_ids), _PQ_M, books[0].shape[0]), dtype=np.float64)
-    for s, book in enumerate(books):
-        seg = q_mat[:, s * sub : (s + 1) * sub]
-        tables[:, s, :] = (
-            (seg**2).sum(axis=1, keepdims=True)
-            - 2.0 * (seg @ book.T)
-            + (book**2).sum(axis=1)
-        )
-    k = 5
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, M)
-            # ADC: dist[q, i] = Σ_s tables[q, s, codes[i, s]]
-            dist = tables[:, np.arange(_PQ_M), codes].sum(axis=2)  # (|Q|, n)
-            out_q, out_v, out_d = [], [], []
-            for qi in range(len(q_ids)):
-                mask = ids != q_ids[qi]
-                cand = np.where(mask)[0]
-                top = cand[np.argsort(dist[qi][cand], kind="stable")[:k]]
-                out_q.extend([q_ids[qi]] * len(top))
-                out_v.extend(ids[top])
-                out_d.extend(np.round(dist[qi][top], 5))
-            yield pd.DataFrame(
-                {"q_id": out_q, "vec_id": out_v, "approx_l2": out_d}
-            )
-
-    partial = encoded.mapInPandas(
-        score, schema="q_id long, vec_id long, approx_l2 double"
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("approx_l2"), F.asc("vec_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "vec_id", "approx_l2")
-    )
-
-
-def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via IVF + residual product quantization (the IVFADC layout of
-    Jégou et al., TPAMI 2011 §IV): corpus vectors are assigned to a coarse
-    cell, the RESIDUAL (x − centroid) is PQ-encoded to _PQ_M 4-bit codes,
-    and queries score only the ``nprobe`` probed cells with per-(query,cell)
-    asymmetric-distance lookup tables built from the query's own residual.
-    Top-5 smallest approximate L2 per query. The coarse cells are
-    :func:`_kmeans_fit` (√N cells, one Lloyd round) and every coarse pick
-    (codebook residuals, encode, probes) is the fold-exact rule. Rows-only
-    check (no SQL twin of the Lloyd round or the PQ codes, see ORACLES);
-    recall vs the exact L2 baseline asserted in tests/test_extensions.py.
-
-    Scale shape — this is the billion-vector serving layout: the corpus
-    persists as (cell, 8-byte code) rows partitioned by cell; a query batch
-    touches nprobe/C of the corpus and reads no corpus floats at all.
-    Driver-side state stays constant-bounded: ≤ _IVF_MAX_CELLS centroids +
-    _PQ_M·_PQ_K codebook rows + the ≤ _Q_CAP query batch; ADC tables are
-    |Q|·nprobe·M·K floats, closure-shipped. The quantizer fit and the
-    encode pass run once per (session, corpus version) — the session
-    memo (r16); scoring is one Arrow/numpy pass with
-    per-partition partial top-k."""
+def _adc_topk(
+    spark: SparkSession, sf_dir: str, face: str, k: int | None
+) -> DataFrame:
+    """Top-5 smallest approximate L2 per query over
+    :func:`_adc_serve_state` (``face``, ``k`` cells): each query probes
+    its min(_IVF_NPROBE, cells) fold-rule nearest cells and scores their
+    codes by asymmetric distance, summing per-(query, probe) lookup tables
+    ‖(q − c_cell)_s − codeword‖² (|Q|·nprobe·M·K floats, closure-shipped).
+    One Arrow/numpy pass with a per-partition partial top-k; no floats
+    from the corpus touch the query path.  NULL query embeddings drop."""
     import numpy as np
     import pandas as pd
 
     out_schema = "q_id long, rank int, vec_id long, approx_l2 double"
-
-    def build():
-        emb = load_spread(spark, "embeddings", sf_dir).persist()
-        try:
-            cents = _kmeans_fit(emb, k=None, iters=1)
-            if not cents:
-                # empty corpus (routine at scale after a filter): no quantizer
-                return (None, None, 0, None)
-            cent_mat = np.array(cents, dtype=np.float64)  # (C, d)
-            pick = _fold_top_cells(cents, 1)
-
-            # PQ codebooks trained on RESIDUALS of a bounded hash-ordered
-            # sample (residuals are what gets encoded, so codebooks must
-            # live in that space).
-            seeds = (
-                emb.select("vec_id", "embedding")
-                .orderBy(
-                    F.pmod(F.xxhash64(F.col("vec_id") + 13), F.lit(983)),
-                    "vec_id",
-                )
-                .limit(_PQ_K)
-                .collect()
-            )
-            if not seeds:
-                return (None, None, 0, None)
-            seed_mat = np.array(
-                [r["embedding"] for r in sorted(seeds, key=lambda r: r["vec_id"])],
-                dtype=np.float64,
-            )
-            resid = seed_mat - cent_mat[pick(seed_mat).to_numpy()]
-            d = seed_mat.shape[1]
-            sub = d // _PQ_M
-            books = [resid[:, s * sub : (s + 1) * sub] for s in range(_PQ_M)]
-
-            def encode(batches):
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-                    cells = pick(mat).to_numpy()
-                    res = mat - cent_mat[cells]
-                    codes = np.empty((len(pdf), _PQ_M), dtype=np.int32)
-                    for s, book in enumerate(books):
-                        seg = res[:, s * sub : (s + 1) * sub]
-                        d2 = -2.0 * (seg @ book.T) + (book**2).sum(axis=1)
-                        codes[:, s] = np.argmin(d2, axis=1)
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"],
-                            "cell": cells,
-                            "codes": list(codes),
-                        }
-                    )
-
-            encoded = emb.select("vec_id", "embedding").mapInPandas(
-                encode, schema="vec_id long, cell int, codes array<int>"
-            )
-            return (cent_mat, books, sub, compact_checkpoint(encoded))
-        finally:
-            emb.unpersist()
-
-    cent_mat, books, sub, encoded = memo(
-        spark, sf_dir, "embeddings", "ann_ivfpq", build
-    )
-    if books is None:
+    cent_mat, books, encoded = _adc_serve_state(spark, sf_dir, face, k)
+    if encoded is None:
         return spark.createDataFrame([], out_schema)
 
     q_rows = (
         load(spark, "embeddings", sf_dir)
-        .filter(_query_pred(50))
+        .filter(_query_pred(50) & F.col("embedding").isNotNull())
         .select("vec_id", "embedding")
         .collect()
     )
@@ -735,23 +623,16 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # small corpora: fewer cells than nprobe / fewer codebook rows than
     # _PQ_K — size everything from the actual fitted shapes
     p_eff = min(_IVF_NPROBE, cent_mat.shape[0])
-    n_book = books[0].shape[0]
-    # probed cells per query + per-(query,probe) ADC tables over the query's
-    # residual in that cell: tables[q, j, s, k] = ||(q − c_cell)_s − book_sk||²
+    sub = books.shape[2]
     probe_cells = (
         _fold_top_cells(cent_mat, p_eff)(q_mat).to_numpy().reshape(len(q_ids), p_eff)
     )
-    tables = np.empty((len(q_ids), p_eff, _PQ_M, n_book), dtype=np.float64)
-    for j in range(p_eff):
-        q_res = q_mat - cent_mat[probe_cells[:, j]]
-        for s, book in enumerate(books):
-            seg = q_res[:, s * sub : (s + 1) * sub]
-            tables[:, j, s, :] = (
-                (seg**2).sum(axis=1, keepdims=True)
-                - 2.0 * (seg @ book.T)
-                + (book**2).sum(axis=1)
-            )
-    k = 5
+    # tables[q, j, s, c] = ‖(q − c_cell)_s − books[s, c]‖² for q's probe j
+    q_res = (q_mat[:, None] - cent_mat[probe_cells])[..., : _PQ_M * sub]
+    tables = (
+        (q_res.reshape(len(q_ids), p_eff, _PQ_M, 1, sub) - books) ** 2
+    ).sum(axis=-1)
+    top = 5
 
     def score(batches):
         for pdf in batches:
@@ -762,23 +643,17 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             codes = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, M)
             out_q, out_v, out_d = [], [], []
             for qi in range(len(q_ids)):
-                cand_idx, cand_dist = [], []
-                for j in range(probe_cells.shape[1]):
-                    mask = (cells == probe_cells[qi, j]) & (ids != q_ids[qi])
-                    idx = np.where(mask)[0]
-                    if not len(idx):
-                        continue
-                    dist = tables[qi, j][np.arange(_PQ_M), codes[idx]].sum(axis=1)
-                    cand_idx.append(idx)
-                    cand_dist.append(dist)
-                if not cand_idx:
-                    continue
-                idx = np.concatenate(cand_idx)
-                dist = np.concatenate(cand_dist)
-                top = np.argsort(dist, kind="stable")[:k]
-                out_q.extend([q_ids[qi]] * len(top))
-                out_v.extend(ids[idx[top]])
-                out_d.extend(np.round(dist[top], 5))
+                probed = cells[:, None] == probe_cells[qi]  # (n, p_eff)
+                idx = np.flatnonzero(probed.any(axis=1) & (ids != q_ids[qi]))
+                j = probed[idx].argmax(axis=1)[:, None]
+                d5 = np.round(
+                    tables[qi][j, np.arange(_PQ_M), codes[idx]].sum(axis=1), 5
+                )
+                # (rounded distance, vec_id): the final window's order
+                best = np.lexsort((ids[idx], d5))[:top]
+                out_q.extend([q_ids[qi]] * len(best))
+                out_v.extend(ids[idx[best]])
+                out_d.extend(d5[best])
             yield pd.DataFrame(
                 {"q_id": out_q, "vec_id": out_v, "approx_l2": out_d}
             )
@@ -789,9 +664,31 @@ def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(F.asc("approx_l2"), F.asc("vec_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= top)
         .select("q_id", "rank", "vec_id", "approx_l2")
     )
+
+
+def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN via product quantization (Jégou et al., TPAMI 2011): each
+    corpus vector is compressed to _PQ_M 4-bit codeword ids and every
+    query scans the whole encoded corpus — IVFADC with one coarse cell
+    (:func:`_adc_topk`). Top-5 smallest approximate L2 per query; the
+    corpus scan reads 8 BYTES per vector instead of 256. Rows-only check
+    (no SQL twin of the PQ codes, see ORACLES); recall vs an exact L2
+    baseline asserted in tests/test_extensions.py."""
+    return _adc_topk(spark, sf_dir, "ann_pq", k=1)
+
+
+def ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN via IVF + residual product quantization (IVFADC, Jégou et al.,
+    TPAMI 2011 §IV, :func:`_adc_topk`): √N coarse cells, each vector's
+    RESIDUAL x − centroid PQ-encoded, and each query scores only its
+    ``nprobe`` probed cells — the billion-vector serving layout: a query
+    batch touches nprobe/C of the corpus, and driver state stays bounded
+    (≤ _IVF_MAX_CELLS centroids + _PQ_M·_PQ_K codewords + ≤ _Q_CAP
+    queries). Rows-only and recall-tested as ann_pq is."""
+    return _adc_topk(spark, sf_dir, "ann_ivfpq", k=None)
 
 
 class IvfIndex:
@@ -1479,8 +1376,8 @@ def _fold_top_cells(cents, nprobe: int, maxby_nulls: bool = False):
     sequence of vectors, converted to one) against ``cents`` and returns
     the ``min(nprobe, k)`` best cells of each row, row after row, nearest
     first, as one int32 Arrow array.  The Arrow kernel
-    (:func:`fold_assign_cells`) calls it per batch; the driver-side picks
-    (IvfIndex probes, ann_ivfpq) call it on their collected vectors.
+    (:func:`fold_assign_cells`) calls it per batch; the IvfIndex probes
+    and every IVFADC pick (coarse cell, PQ code, probe) call it directly.
 
     Scores x·c − ½|c|² are accumulated per DIMENSION with one vectorized
     multiply-then-add per step — ``acc += x_p · c_p`` over p = 0..d−1 is
@@ -2500,7 +2397,11 @@ def pca_embeddings_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    emb = load_spread(spark, "embeddings", sf_dir).persist()
+    emb = (
+        load_spread(spark, "embeddings", sf_dir)
+        .filter(F.col("embedding").isNotNull())  # as the fit's moments do
+        .persist()
+    )
     fit = _pca_fit(spark, sf_dir, emb)
     k = _PCA_COMPONENTS
     schema = "vec_id long, " + ", ".join(f"pc{c + 1} double" for c in range(k))
@@ -3040,12 +2941,11 @@ ORACLES = {
     # eigendecomposition is driver-side numpy (no ANSI-SQL eigensolver);
     # its distributed input is exactly the oracle-checked pca_covariance,
     # and numpy-parity/orthonormality tests pin the rest
-    # ann_ivf / ann_ivfpq are rows-only by contract: their quantizer is the
-    # same SQL-reproducible _kmeans_fit rule, but no SQL twin exists for
-    # its √N-cell Lloyd round (KMEANS_PROFILE_SQL unrolls k=16 rounds, not
-    # a data-sized k), nor for ann_ivfpq's PQ codes (xxhash64-sampled
-    # codebooks, GEMM argmin, rounded ADC sums); both are recall-tested vs
-    # the exact baseline in tests/test_extensions.py
+    # ann_ivf / ann_pq / ann_ivfpq are rows-only: every seed and pick is
+    # the SQL-reproducible md5-Forgy / fold rule, but no SQL twin exists
+    # yet for the √N-cell Lloyd round (KMEANS_PROFILE_SQL unrolls k=16) or
+    # the PQ codebook round, codes and ADC sums; all three are
+    # recall-tested vs the exact baseline in tests/test_extensions.py
     # round 8: ann_ivf_index upgraded rows-only → value-exact via the
     # iters=0 (raw md5-Forgy seed) build and fold-exact cell picks
     "ann_ivf_index": ANN_IVF_INDEX_SQL,

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from streaming_data_pipeline_with_iceberg_and_spark_spark.functions.vector import dot, l2_distance, norm
@@ -1257,6 +1258,56 @@ def test_pq_family_survives_tiny_corpus(spark, tmp_path):
             assert all(r.rank <= max(0, n - 1) + 1 for r in out)
             if n == 1:
                 assert out == []  # the only vector is the query itself
+
+
+def _null_embedding_sf_dir(spark, sf_dir, tmp_path, vec_id):
+    """A scratch sf dir holding a copy of ``sf_dir``'s embeddings table with
+    the embedding of ``vec_id`` set to NULL."""
+    from streaming_data_pipeline_with_iceberg_and_spark_spark.io import load
+
+    d = tmp_path / f"null_emb_{vec_id}"
+    d.mkdir()
+    load(spark, "embeddings", sf_dir).withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == vec_id, F.lit(None)).otherwise(F.col("embedding")),
+    ).coalesce(1).write.parquet(str(d / "embeddings.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("null_id", [7, 100], ids=["corpus_row", "query_row"])
+@pytest.mark.parametrize(
+    "face",
+    ["ann_pq", "ann_ivfpq", "knn_bruteforce_vectorized", "pca_embeddings_project"],
+)
+def test_vector_face_survives_null_embedding(spark, sf_dir, tmp_path, face, null_id):
+    """One NULL embedding, in a corpus row (vec_id 7) or a query row
+    (vec_id 100), must not crash the numpy faces.  The PQ faces and the
+    projection drop it; knn_bruteforce_vectorized answers exactly as
+    knn_bruteforce, its shared-oracle twin: a NULL vector scores NULL and
+    ranks last, and a NULL query's rows are NULL scores in vec_id order."""
+    sf = _null_embedding_sf_dir(spark, sf_dir, tmp_path, null_id)
+    out = getattr(similarity, face)(spark, sf).collect()
+    if face == "knn_bruteforce_vectorized":
+        def by_rank(rows):
+            return {(r.q_id, r.rank): (r.vec_id, r.cos_sim) for r in rows}
+
+        assert by_rank(out) == by_rank(similarity.knn_bruteforce(spark, sf).collect())
+        if null_id == 100:
+            assert [by_rank(out)[(null_id, rank)] for rank in range(1, 6)] == [
+                (v, None) for v in range(5)
+            ]
+        return
+    if face == "pca_embeddings_project":
+        ids = [r.vec_id for r in out]
+        n = spark.read.parquet(f"{sf}/embeddings.parquet").count()
+        assert len(ids) == n - 1 and null_id not in ids
+        return
+    assert out
+    assert all(null_id not in (r.q_id, r.vec_id) for r in out)
+    by_q = {}
+    for r in out:
+        by_q.setdefault(r.q_id, []).append(r.rank)
+    assert all(sorted(rs) == list(range(1, 6)) for rs in by_q.values()), by_q
 
 
 def test_ivf_index_centroids_travel_with_versions(spark, sf_dir, tmp_path):
